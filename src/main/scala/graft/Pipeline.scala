@@ -25,28 +25,33 @@ object Pipeline {
     "dma", "metadata_date")
 
   /** raw_viewing_events (etl-ddl-backfill.sql:16-62): ACR ∪ STB with a
-    * source tag; STB lacks `application`. */
+    * source tag; STB lacks `application`. Both sources are filters of
+    * one feed, so the union is ONE scan that tags each row instead of
+    * two scans (and two codegen stages) over the same files. A null
+    * `event_type` belongs to neither source and stays out. */
   def viewingEvents(spark: SparkSession, dir: String): DataFrame = {
-    val a = ViewingData.acr(spark, dir)
-      .withColumn("source_table", lit("ACR"))
+    val isAcr = col("event_type").isin(ViewingData.AcrEventTypes: _*)
+    ViewingData.normalized(spark, dir)
+      .filter(col("event_type").isNotNull)
+      .withColumn("source_table", when(isAcr, lit("ACR")).otherwise(lit("STB")))
+      .withColumn("application", when(isAcr, col("application")))
       .select(ViewingCols.map(col): _*)
-    val s = ViewingData.stb(spark, dir)
-      .withColumn("source_table", lit("STB"))
-      .withColumn("application", lit(null).cast("string"))
-      .select(ViewingCols.map(col): _*)
-    a.unionByName(s)
   }
 
   def panelWindows(spark: SparkSession, dir: String): DataFrame =
     PanelAsOf.windows(ViewingData.panelMondays(spark, dir))
 
-  /** events_with_panel: as-of panel assignment via broadcast date map. */
+  /** events_with_panel: as-of panel assignment, a projection that looks
+    * each event's date up in the driver-built covering-Monday array
+    * ([[PanelAsOf.assign]]). */
   def withPanel(spark: SparkSession, dir: String): DataFrame =
     PanelAsOf.assign(viewingEvents(spark, dir), panelWindows(spark, dir), "metadata_date")
 
-  /** weighted_events (etl-ddl-backfill.sql:91-117): join weekly weights
-    * on (member, panel monday); drop events without panel/household/
-    * weight. Weights ≪ events → broadcast join, no fact shuffle.
+  /** weighted_events (etl-ddl-backfill.sql:91-117): assign the panel
+    * Monday (a projection, [[PanelAsOf.assign]], which collects the
+    * small `windows` frame), join weekly weights on (member, panel
+    * monday); drop events without panel/household/weight. Weights ≪
+    * events → broadcast join, no fact shuffle.
     * Frame-level so incremental/DAG runs can feed MATERIALIZED
     * upstream tables instead of re-deriving them. */
   def weightedFrom(viewing: DataFrame, windows: DataFrame, weights: DataFrame): DataFrame = {

@@ -116,14 +116,14 @@ object IncrementalMerge {
 
   /** Watermark computation (reference: etl-dag.sql:125-140
     * task_update_control_table): per-source MAX(date) coalesced to an
-    * epoch floor, then LEAST across sources. */
+    * epoch floor, then LEAST across sources — the `min` over the union
+    * of the one-row maxes, which plans no nested-loop join and no
+    * broadcast. */
   def watermark(sources: Seq[DataFrame], dateCol: String): DataFrame = {
     val floorDate = to_date(lit("1900-01-01"))
-    val maxes = sources.map(_.agg(coalesce(max(col(dateCol)), floorDate).as("d")))
-    maxes
-      .reduce(_.crossJoin(_))
-      .toDF(sources.indices.map(i => s"d$i"): _*)
-      .select(least(sources.indices.map(i => col(s"d$i")): _*).as("last_successful_run_date"))
+    sources.map(_.agg(coalesce(max(col(dateCol)), floorDate).as("d")))
+      .reduce(_.union(_))
+      .agg(min("d").as("last_successful_run_date"))
   }
 
   /** The FULL control table (reference: etl-dag.sql:126-145): one row

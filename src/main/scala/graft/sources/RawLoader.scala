@@ -116,6 +116,12 @@ object RawLoader {
     org.apache.spark.sql.types.StructField("file_name",
       org.apache.spark.sql.types.StringType, nullable = false)))
 
+  /** One ledger row per loaded file. */
+  private val LedgerSchema = FileNameSchema
+    .add("run_id", org.apache.spark.sql.types.StringType, nullable = false)
+    .add("loaded_at", org.apache.spark.sql.types.TimestampType, nullable = false)
+    .add("run_rows", org.apache.spark.sql.types.LongType, nullable = false)
+
   /** Snowflake `COPY INTO`'s idempotence unit is the FILE: every load
     * is recorded in load-history, and re-running the COPY (ingest
     * re-triggers, the one-shot backfill of ingest-backfill.sql replayed
@@ -182,11 +188,11 @@ object RawLoader {
       .write.mode("overwrite") // heals a crashed run's partial dir
       .parquet(s"$targetPath/run=$runId")
     val rows = obs.get("rows").asInstanceOf[Long]
+    // per-run values are row data, so no per-run literal enters the plan
+    val loadedAt = java.sql.Timestamp.from(java.time.Instant.now())
     spark.createDataFrame(
-        fresh.map(org.apache.spark.sql.Row(_)).asJava, FileNameSchema)
-      .withColumn("run_id", lit(runId))
-      .withColumn("loaded_at", current_timestamp())
-      .withColumn("run_rows", lit(rows)) // rows of the RUN that loaded this file
+        fresh.map(f => org.apache.spark.sql.Row(f, runId, loadedAt, rows)).asJava,
+        LedgerSchema) // run_rows: rows of the RUN that loaded this file
       .coalesce(1)
       .write.mode("append").parquet(ledgerPath) // <- the commit point
     CopyResult(fresh.size, files.size - fresh.size, rows)

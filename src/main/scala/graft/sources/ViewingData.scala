@@ -57,29 +57,51 @@ object ViewingData {
     * first read and pins them with _SWEEP_META). The immutability
     * contract is ENFORCEABLE, not just documented (r12 ADVICE): any
     * future caller that rewrites `$dir/$name.parquet` mid-session must
-    * call [[invalidate]] (per dir) or [[clearCache]]; and entries whose
+    * call [[invalidate]] (per dir) or [[clearCache]]; entries whose
     * session has been STOPPED are purged on every cache miss, so test
     * JVMs that cycle sessions don't retain dead plans for the JVM
     * lifetime (misses are rare after warm-up, and a stopped session
     * can never be a future lookup key, so purge-on-miss bounds growth
-    * without a per-hit scan). */
-  private val relCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+    * without a per-hit scan); and at most [[MaxCachedRelations]]
+    * entries are kept, evicting the oldest, because a long-lived
+    * driver (cron, TaskDag) reading a new landed dir every run would
+    * otherwise keep one plan and file listing per run forever. */
+  val MaxCachedRelations = 64
+
+  private val relCache =
+    new java.util.LinkedHashMap[(SparkSession, String, String), DataFrame]()
 
   /** Drops every cached relation under `dir` — the hook anything that
     * rewrites a source dir mid-session must call. */
-  def invalidate(dir: String): Unit =
-    relCache.keys.filter(_._2 == dir).foreach(relCache.remove)
+  def invalidate(dir: String): Unit = relCache.synchronized {
+    relCache.keySet.removeIf(_._2 == dir)
+  }
 
   /** Drops the whole relation cache (all sessions, all dirs). */
-  def clearCache(): Unit = relCache.clear()
+  def clearCache(): Unit = relCache.synchronized(relCache.clear())
 
-  private def purgeStoppedSessions(): Unit =
-    relCache.keys.filter(_._1.sparkContext.isStopped).foreach(relCache.remove)
+  private[graft] def cachedRelations: Int = relCache.synchronized(relCache.size)
+
+  private[graft] def isCached(spark: SparkSession, dir: String, name: String): Boolean =
+    relCache.synchronized(relCache.containsKey((spark, dir, name)))
+
+  /** Cache lookup; a miss resolves outside the lock (it lists files and
+    * reads footers), then inserts, purging stopped sessions and the
+    * oldest entries past the bound. */
+  private def cached(key: (SparkSession, String, String))(resolve: => DataFrame): DataFrame =
+    Option(relCache.synchronized(relCache.get(key))).getOrElse {
+      val df = resolve
+      relCache.synchronized {
+        relCache.keySet.removeIf(_._1.sparkContext.isStopped)
+        val kept = relCache.putIfAbsent(key, df)
+        val it = relCache.keySet.iterator()
+        while (relCache.size > MaxCachedRelations) { it.next(); it.remove() }
+        Option(kept).getOrElse(df)
+      }
+    }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    relCache.getOrElseUpdate((spark, dir, name), {
-      purgeStoppedSessions()
+    cached((spark, dir, name)) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (!df.columns.contains("ts")) df
@@ -94,7 +116,7 @@ object ViewingData {
             graft.functions.TimeFunctions.ntzWallClockAsUtc(col("ts")))
         case _ => df
       }
-    })
+    }
 
   /** Epoch seconds (UTC, floor) — the reference keeps exposure timestamps
     * as NUMBER(38,0) unix seconds (ingest-ddl.sql:4-5). */
@@ -105,7 +127,7 @@ object ViewingData {
     * feed so the DuckDB oracle can reproduce each value bit-exactly.
     * Catalyst prunes unused ones at the scan, so full width is free
     * for queries that project a subset. */
-  private def normalized(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def normalized(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "events").select(
       col("event_id"),
       col("user_id").cast("string").as("smba_id"),
@@ -142,11 +164,15 @@ object ViewingData {
       regexp_extract(col("props"), "\"k\": (\\d+)", 1).as("application"),
       col("event_type"))
 
+  /** The event types the ACR-analog source carries; every other
+    * non-null type is STB. */
+  val AcrEventTypes: Seq[String] = Seq("view", "click", "purchase")
+
   /** ACR-analog source: the content-exposure event types, full 28-col
     * width incl. `application` and `release_date` (ingest-ddl.sql ACR). */
   def acr(spark: SparkSession, dir: String): DataFrame =
     normalized(spark, dir)
-      .filter(col("event_type").isin("view", "click", "purchase"))
+      .filter(col("event_type").isin(AcrEventTypes: _*))
       .drop("event_type")
 
   /** STB-analog source: remaining event types; the reference STB table
@@ -154,7 +180,7 @@ object ViewingData {
     * etl-ddl-backfill.sql:45 `NULL AS application`). */
   def stb(spark: SparkSession, dir: String): DataFrame =
     normalized(spark, dir)
-      .filter(!col("event_type").isin("view", "click", "purchase"))
+      .filter(!col("event_type").isin(AcrEventTypes: _*))
       .drop("event_type")
       .drop("application")
       .drop("release_date")

@@ -23,18 +23,26 @@ object MergeSink {
     * existing target, appends. Only a genuinely absent target counts
     * as "first batch" — any other read error propagates, because
     * swallowing it would append duplicates and silently break the
-    * per-key contract. */
+    * per-key contract.
+    *
+    * The dedupe keeps one arbitrary row per key with `row_number()`
+    * (a `dropDuplicates` plans a sort aggregate with one `first()` per
+    * column); the anti join probes the target's raw key column(s) —
+    * it only tests existence, so a `distinct()` there would add an
+    * aggregate and exchange over the whole target per batch. The
+    * target read keeps schema inference: a pinned schema would turn a
+    * missing key column into silent nulls. */
   def insertOnlyParquet(targetPath: String, keys: Seq[String])(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val deduped = batch.dropDuplicates(keys)
+    val deduped = IncrementalMerge.latestPerKey(batch, keys, versionCols = keys)
     val path = new org.apache.hadoop.fs.Path(targetPath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh =
       if (!fs.exists(path)) deduped
       else {
         val target = spark.read.parquet(targetPath)
-        deduped.join(target.select(keys.map(target.col): _*).distinct(), keys, "left_anti")
+        deduped.join(target.select(keys.map(target.col): _*), keys, "left_anti")
       }
     fresh.write.mode(SaveMode.Append).parquet(targetPath)
   }

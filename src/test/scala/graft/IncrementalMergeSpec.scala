@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.IncrementalMerge
@@ -102,6 +103,22 @@ class IncrementalMergeSpec extends SparkTestBase {
     val empty = spark.emptyDataset[Date0].toDF()
     val wm2 = IncrementalMerge.watermark(Seq(s1, empty), "d").collect().head.getDate(0)
     assert(wm2 == Date.valueOf("1900-01-01"))
+  }
+
+  test("watermark over three sources: one empty or all empty reads the 1900 floor") {
+    import java.sql.Date
+    val s1 = Seq(Date.valueOf("2024-01-10"), Date.valueOf("2024-01-20")).toDF("d")
+    val s2 = Seq(Date.valueOf("2024-01-15")).toDF("d")
+    val s3 = Seq(Date.valueOf("2024-01-12"), Date.valueOf("2024-01-13")).toDF("d")
+    val empty = spark.emptyDataset[Date0].toDF()
+    def wm(sources: DataFrame*) =
+      IncrementalMerge.watermark(sources, "d").collect().map(_.getDate(0)).toSeq
+    assert(wm(s1, s2, s3) == Seq(Date.valueOf("2024-01-13")))
+    assert(wm(s1, empty, s3) == Seq(Date.valueOf("1900-01-01")))
+    assert(wm(empty, empty, empty) == Seq(Date.valueOf("1900-01-01")))
+    // LEAST is a min over the union of one-row maxes: no nested-loop join
+    val plan = IncrementalMerge.watermark(Seq(s1, s2, s3), "d").queryExecution.executedPlan.toString
+    assert(!plan.contains("NestedLoopJoin"), plan)
   }
 }
 

@@ -221,6 +221,35 @@ class MergeSinkSpec extends SparkTestBase {
     assert(sinkKeys.toSeq == expKeys.toSeq && sinkKeys.toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("insert-only sink: a target with duplicate keys written outside the sink still drops every existing key") {
+    import spark.implicits._
+    val target = Files.createTempDirectory("mergesink-dup").toString + "/t"
+    // a writer other than the sink left key 1 twice
+    Seq((1L, "a"), (1L, "a2"), (2L, "b")).toDF("k", "v").write.parquet(target)
+    val batch = Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("k", "v")
+    MergeSink.insertOnlyParquet(target, Seq("k"))(batch, 0L)
+    val rows = spark.read.parquet(target).as[(Long, String)].collect().sorted.toSeq
+    assert(rows == Seq((1L, "a"), (1L, "a2"), (2L, "b"), (3L, "z")), rows)
+  }
+
+  test("insert-only sink: in-batch duplicate keys collapse to one row per key") {
+    import spark.implicits._
+    val target = Files.createTempDirectory("mergesink-batchdup").toString + "/t"
+    val b1 = Seq((1L, 1, "a"), (1L, 1, "b"), (1L, 2, "c"), (2L, 1, "d"), (2L, 1, "d"))
+      .toDF("k1", "k2", "v")
+    MergeSink.insertOnlyParquet(target, Seq("k1", "k2"))(b1, 0L)
+    val first = spark.read.parquet(target).as[(Long, Int, String)].collect()
+    assert(first.map(r => (r._1, r._2)).sorted.toSeq == Seq((1L, 1), (1L, 2), (2L, 1)),
+      first.toSeq)
+    assert(first.toSeq.contains((2L, 1, "d")) && first.toSeq.contains((1L, 2, "c")))
+    assert(first.exists(r => r._1 == 1L && r._2 == 1 && Set("a", "b").contains(r._3)))
+    // against an existing target: a new key delivered twice lands once
+    val b2 = Seq((3L, 1, "e"), (3L, 1, "e2"), (1L, 1, "z")).toDF("k1", "k2", "v")
+    MergeSink.insertOnlyParquet(target, Seq("k1", "k2"))(b2, 1L)
+    val keys = spark.read.parquet(target).select("k1", "k2").as[(Long, Int)].collect().sorted.toSeq
+    assert(keys == Seq((1L, 1), (1L, 2), (2L, 1), (3L, 1)), keys)
+  }
+
   test("rollup sink: streamed sessions maintain audience metrics = batch recompute") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

@@ -140,10 +140,10 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("q_weighted_events keeps the fact side broadcast-only — no fact shuffle, no merge join") {
     val p = plan("q_weighted_events")
-    // panel as-of and weight joins must both broadcast the small side;
-    // the only hash exchanges permitted are inside the tiny broadcast
-    // subtrees (distinct Mondays, covered-date map), never keyed on a
-    // fact column
+    // the weight join must broadcast the small side and the panel
+    // as-of is a projection; the only hash exchanges permitted are
+    // inside the tiny broadcast subtree (the weights' distinct
+    // Mondays), never keyed on a fact column
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"weight/panel joins must broadcast:\n$p")

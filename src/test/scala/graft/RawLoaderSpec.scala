@@ -140,6 +140,55 @@ class RawLoaderSpec extends SparkTestBase {
       .select("id").as[Long].collect().sorted.toSeq == (1L to 9L))
   }
 
+  test("copyInto: each ledger row carries its file, run id, load time and run rows") {
+    val root = Files.createTempDirectory("copyledger").toString
+    val target = s"$root/out/acr"
+    val ledger = s"$root/out/acr_load_history"
+    def day(dd: String, ids: Seq[Long]) =
+      ids.toDF("id").coalesce(1).write.mode("append")
+        .parquet(s"$root/ACR/yyyy=2024/mm=01/dd=$dd")
+    day("05", Seq(1L, 2L))
+    day("06", Seq(3L))
+    val before = System.currentTimeMillis()
+    val first = RawLoader.copyInto(spark, root, "ACR", target, ledger)
+    day("07", Seq(4L, 5L, 6L, 7L))
+    val second = RawLoader.copyInto(spark, root, "ACR", target, ledger)
+    val after = System.currentTimeMillis()
+    val rows = spark.read.parquet(ledger)
+    assert(rows.columns.toSeq == Seq("file_name", "run_id", "loaded_at", "run_rows"))
+    val got = rows.collect().toSeq.map { r =>
+      (r.getString(0), r.getString(1), r.getTimestamp(2).getTime, r.getLong(3))
+    }.sortBy(_._1)
+    assert(got.size == 3 && got.map(_._1).distinct.size == 3, got)
+    assert(got.forall { case (_, _, t, _) => t >= before - 1000 && t <= after + 1000 }, got)
+    // one run id per COPY; run_rows is that run's row count
+    val byRun = got.groupBy(_._2)
+    assert(byRun.size == 2, got)
+    assert(byRun.values.map(fs => (fs.size, fs.map(_._4).distinct)).toSet ==
+      Set((first.filesLoaded.toInt, Seq(first.rowsLoaded)), (second.filesLoaded.toInt, Seq(second.rowsLoaded))),
+      got)
+    assert(got.filter(_._1.contains("dd=07")).map(_._4) == Seq(4L), got)
+  }
+
+  test("copyInto: a repeated COPY compiles no new code") {
+    // a nightly COPY differs from the last one only in its files, load
+    // time and row counts, none of which may reach generated code: a
+    // repeat must reuse every class the previous run compiled
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = Files.createTempDirectory("copycodegen").toString
+    def copyDay(dd: String, ids: Seq[Long]) = {
+      ids.toDF("id").coalesce(1).write.parquet(s"$root/ACR/yyyy=2024/mm=01/dd=$dd")
+      RawLoader.copyInto(spark, root, "ACR", s"$root/out/acr", s"$root/out/ledger")
+    }
+    copyDay("05", Seq(1L))
+    copyDay("06", Seq(2L))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val third = copyDay("07", Seq(3L, 4L))
+    assert(third.rowsLoaded == 2, third)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "the third COPY compiled new classes")
+  }
+
   test("date predicate prunes to matching files only") {
     val root = Files.createTempDirectory("rawloader2").toString
     Seq(1L).toDF("id").write.parquet(s"$root/ACR/yyyy=2024/mm=01/dd=05")

@@ -143,6 +143,24 @@ class SourceContractSpec extends SparkTestBase {
     ViewingData.invalidate(dir) // cleanup for any later reader
   }
 
+  test("relCache: at most MaxCachedRelations entries; an evicted dir still reads correctly") {
+    val root = java.nio.file.Files.createTempDirectory("relcache-bound")
+    spark.range(4).toDF("x").coalesce(1).write.parquet(s"$root/seed/events.parquet")
+    val seed = root.resolve("seed/events.parquet")
+    // one dir more than the bound, each a copy of the same tiny table
+    val dirs = (0 to ViewingData.MaxCachedRelations).map { i =>
+      val d = root.resolve(s"run$i")
+      org.apache.commons.io.FileUtils.copyDirectory(seed.toFile, d.resolve("events.parquet").toFile)
+      d.toString
+    }
+    dirs.foreach(ViewingData.table(spark, _, "events"))
+    assert(ViewingData.cachedRelations <= ViewingData.MaxCachedRelations)
+    assert(!ViewingData.isCached(spark, dirs.head, "events"), "the oldest entry is evicted first")
+    assert(ViewingData.isCached(spark, dirs.last, "events"))
+    assert(ViewingData.table(spark, dirs.head, "events").count() == 4)
+    dirs.foreach(ViewingData.invalidate)
+  }
+
   test("documents.text is ASCII — the substring-row oracle contract") {
     // The dedup_substring_fast/incremental oracles restate WinnowHash's
     // code-point iteration with DuckDB's string_split(text, '') +
