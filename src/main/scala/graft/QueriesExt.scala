@@ -366,7 +366,10 @@ FROM golden g JOIN gpick p USING (canonical_id)
     * documents (parent = doc_id/7, single root 0, depth ≤ 4):
     * `operators.Hierarchy.connectBy` resolves one LEVEL per
     * driver-coordinated join round — rounds bound by tree depth, not
-    * rows. Oracle is the equivalent ANSI recursive CTE. */
+    * rows. Each round is one `operators.Barrier` whose own job counts
+    * what the level resolved, so this tree costs four barriers and the
+    * loop ends on the round that leaves nothing unresolved. Oracle is
+    * the equivalent ANSI recursive CTE. */
   private val connectBy = Q(
     "q_connect_by",
     (s, dir) => {

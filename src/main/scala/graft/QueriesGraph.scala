@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.Barrier
 import graft.sources.ViewingData
 
 /** Graph analytics beyond PageRank (F17) — same synthetic doc graph
@@ -263,30 +264,35 @@ SELECT x, y, common, jaccard FROM j WHERE jaccard >= 0.2"""))
       val und = undirectedEdges(s, dir).localCheckpoint()
       val adj = adjacency(und).localCheckpoint()
       val nodes = adj.select(col("a").as("node")).distinct()
-      val seeds = nodes.filter(col("node") % 100 === 0)
-        .select(col("node"), lit(0L).as("dist"))
-        .localCheckpoint()
+      // Every round is one Barrier: the checkpoint's own job counts the
+      // new frontier, and that count gates the loop — no separate
+      // emptiness probe per round.
+      def frontierOf(df: DataFrame): (DataFrame, Long) = {
+        val (ck, m) = Barrier.materialize(df, count(lit(1)).as("rows"))
+        (ck, m.getLong(0))
+      }
+      var (frontier, size) = frontierOf(
+        nodes.filter(col("node") % 100 === 0).select(col("node"), lit(0L).as("dist")))
       // `reached` is the LAZY union of the per-round checkpointed
       // frontiers, never re-checkpointed as a whole (r13, guide §5):
       // each round's `next` is already a materialized LogicalRDD, so
       // re-materializing their cumulative union every round paid one
       // extra job plus a Σ|reached_i| rewrite per round for a plan the
       // union of ≤ 11 checkpointed leaves expresses at constant depth.
-      val rounds = scala.collection.mutable.ArrayBuffer(seeds)
+      val rounds = scala.collection.mutable.ArrayBuffer(frontier)
       def reached = rounds.reduce(_ unionByName _)
-      var frontier = seeds
       var depth = 0L
-      while (depth < 10 && !frontier.isEmpty) {
+      while (depth < 10 && size > 0) {
         depth += 1
-        val next = frontier
+        val (next, nextSize) = frontierOf(frontier
           .join(adj, frontier("node") === adj("a"))
           .select(col("b").as("node"))
           .distinct()
           .join(reached, Seq("node"), "left_anti")
-          .select(col("node"), lit(depth).as("dist"))
-          .localCheckpoint()
+          .select(col("node"), lit(depth).as("dist")))
         rounds += next
         frontier = next
+        size = nextSize
       }
       reached
     },

@@ -1,80 +1,62 @@
 package graft.operators
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Snowflake CONNECT BY / ANSI recursive-CTE hierarchy traversal as a
   * driver-coordinated iterative join — the same superstep discipline
   * as [[Components]] (Spark has no recursive operator; the loop IS the
-  * recursion, one shuffle join per LEVEL, and tree depth bounds the
-  * rounds, not row count — an org chart or BOM is a few dozen levels
-  * at any data size).
+  * recursion, one join per LEVEL, and tree depth bounds the rounds, not
+  * row count — an org chart or BOM is a few dozen levels at any data
+  * size).
   *
-  * Per round: unresolved nodes join the resolved frontier on
-  * parent=id, inheriting root, depth+1, and the materialized path
-  * (Snowflake's SYS_CONNECT_BY_PATH). localCheckpoint truncates
-  * lineage per level; the loop ends when a round resolves nothing —
-  * nodes unreachable from any root (orphan cycles) stay unresolved
-  * and are returned with NULL root/depth/path so callers can audit
-  * them (CONNECT BY would infinite-loop; surfacing beats looping).
+  * Level 0 is the roots (NULL parent), read lazily from `nodes`. Each
+  * later level is ONE [[Barrier]]: the still-unresolved nodes LEFT OUTER
+  * JOIN the previous level on parent = id, inheriting root, depth + 1
+  * and the materialized path (Snowflake's SYS_CONNECT_BY_PATH). The
+  * barrier's rows with a root are the next level; its rows without one
+  * are the new unresolved set. Both are filters over the same
+  * checkpoint, and the barrier's own job observes both counts, so a
+  * level costs one action and no anti-join.
+  *
+  * The loop stops when a level resolves nothing or leaves nothing
+  * unresolved. Nodes unreachable from any root (orphan cycles, parents
+  * that do not exist) are returned with NULL root/depth/path so callers
+  * can audit them: CONNECT BY would loop, and surfacing beats looping.
   */
 object Hierarchy {
 
   /** @param nodes     one row per node
     * @param idCol     node id column (any equatable type)
     * @param parentCol parent id column; NULL marks a root
-    * @return (idCol, root_id, depth, path) — path is '/'-joined ids
-    *         from root to node */
-  /** Checkpoint + constraint scrub. A localCheckpoint of a JOIN keeps
-    * the join's constraints, which can reference the build side's
-    * attributes; a later self-union's constraint rewrite then fails
-    * ("key not found") looking them up in the child's output. Round-
-    * tripping the checkpointed rows through createDataFrame drops the
-    * stale constraints; the frame is level-sized (one hierarchy tier),
-    * so the Row conversion is noise. */
-  private def materialized(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
+    * @return (idCol, root_id, depth, path), one row per input row —
+    *         path is '/'-joined ids from root to node; orphans carry
+    *         NULL root_id, depth and path */
   def connectBy(nodes: DataFrame, idCol: String, parentCol: String): DataFrame = {
-    val base = nodes.select(col(idCol), col(parentCol).as("__parent"))
-      .localCheckpoint()
-    val roots = base.filter(col("__parent").isNull)
+    val roots = nodes.filter(col(parentCol).isNull)
       .select(col(idCol), col(idCol).as("root_id"), lit(0).as("depth"),
         col(idCol).cast("string").as("path"))
-      .localCheckpoint()
-    // Per level: ONE join+checkpoint (next) and one anti-join
-    // checkpoint (unresolved). The resolved set is accumulated as a
-    // LIST of already-checkpointed level frames and unioned once at
-    // the end — re-checkpointing the growing union each level
-    // re-materialized every resolved row at every depth,
-    // O(depth × |resolved|) for no consumer. The separate
-    // `unresolved.isEmpty` guard action is gone too: an exhausted
-    // unresolved set yields an empty `next` (count 0) and exits the
-    // loop through the same gate.
-    var levels = List(roots)
-    var frontier = roots
-    var unresolved = base.filter(col("__parent").isNotNull).localCheckpoint()
-    var frontierCount = frontier.count()
-    while (frontierCount > 0) {
-      val next = materialized(unresolved.as("u")
-        .join(frontier.as("f"), col("u.__parent") === col(s"f.$idCol"))
-        .select(col(s"u.$idCol"), col("f.root_id"),
-          (col("f.depth") + 1).as("depth"),
-          concat(col("f.path"), lit("/"), col(s"u.$idCol").cast("string")).as("path")))
-      frontierCount = next.count()
-      if (frontierCount > 0) {
-        unresolved = unresolved.join(next.select(col(idCol)), Seq(idCol), "left_anti")
-          .localCheckpoint()
-        levels ::= next
-        frontier = next
-      }
+    // levels newest first; the last round's unresolved rows are the orphans
+    @tailrec def walk(unresolved: DataFrame, frontier: DataFrame,
+                      levels: List[DataFrame]): DataFrame = {
+      val (round, counts) = Barrier.materialize(
+        unresolved.as("u")
+          .join(frontier.as("f"), col("u.__parent") === col(s"f.$idCol"), "left_outer")
+          .select(col(s"u.$idCol"), col("u.__parent"), col("f.root_id"),
+            (col("f.depth") + 1).as("depth"),
+            concat(col("f.path"), lit("/"), col(s"u.$idCol").cast("string")).as("path")),
+        count(col("root_id")).as("resolved"),
+        count_if(col("root_id").isNull).as("unresolved"))
+      val (resolvedNow, pending) = (counts.getLong(0), counts.getLong(1))
+      val next = round.filter(col("root_id").isNotNull).drop("__parent")
+      val rest = round.filter(col("root_id").isNull)
+      val done = if (resolvedNow > 0) next :: levels else levels
+      if (resolvedNow == 0 || pending == 0) (rest.drop("__parent") :: done).reverse.reduce(_ unionByName _)
+      else walk(rest.select(col(idCol), col("__parent")), next, done)
     }
-    val resolved = levels.reverse.reduce(_ unionByName _)
-    val orphans = unresolved.select(
-      col(idCol), lit(null).cast(nodes.schema(idCol).dataType).as("root_id"),
-      lit(null).cast("int").as("depth"), lit(null).cast("string").as("path"))
-    resolved.unionByName(orphans)
+    walk(nodes.filter(col(parentCol).isNotNull).select(col(idCol), col(parentCol).as("__parent")),
+      roots, List(roots))
   }
 }

@@ -1,10 +1,15 @@
 package graft
 
+import scala.util.Random
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Hierarchy
 
 /** CONNECT BY traversal: multi-root forests, path materialization,
-  * and orphan-cycle surfacing (where SQL CONNECT BY would loop). */
+  * orphan-cycle surfacing (where SQL CONNECT BY would loop), agreement
+  * with a driver-side parent walk, and the job budget of one barrier
+  * per level. */
 class HierarchySpec extends SparkTestBase {
   import spark.implicits._
 
@@ -34,5 +39,122 @@ class HierarchySpec extends SparkTestBase {
     val orphans = out.filter(col("root_id").isNull)
       .select("id").as[Long].collect().sorted
     assert(orphans.toSeq == Seq(8L, 9L))
+  }
+
+  type Out = Map[String, (Option[String], Option[Int], Option[String])]
+
+  /** The reference: each node walks its parent chain on the driver. A
+    * chain that reaches a NULL parent resolves to that root; one that
+    * meets a missing parent or repeats a node is an orphan. */
+  def parentWalk(nodes: Seq[(String, Option[String])]): Out = {
+    val parent = nodes.toMap
+    nodes.map { case (id, _) =>
+      @annotation.tailrec
+      def up(cur: String, chain: List[String]): Option[List[String]] =
+        parent.get(cur) match {
+          case None => None                          // dangling parent id
+          case Some(None) => Some(cur :: chain)      // reached a root
+          case Some(Some(p)) =>
+            if (chain.contains(cur)) None            // cycle
+            else up(p, cur :: chain)
+        }
+      id -> (up(id, Nil) match {
+        case Some(path) => (Some(path.head), Some(path.size - 1), Some(path.mkString("/")))
+        case None => (None, None, None)
+      })
+    }.toMap
+  }
+
+  def collectOut(out: DataFrame): Seq[(String, (Option[String], Option[Int], Option[String]))] =
+    out.select(col("id").cast("string"), col("root_id").cast("string"), col("depth"), col("path"))
+      .collect().toSeq.map(r => r.getString(0) ->
+        ((Option(r.getString(1)), if (r.isNullAt(2)) None else Some(r.getInt(2)),
+          Option(r.getString(3)))))
+
+  def checkAgainstWalk(label: String, nodes: Seq[(String, Option[String])]): Unit = {
+    val rows = collectOut(Hierarchy.connectBy(nodes.toDF("id", "parent"), "id", "parent"))
+    assert(rows.size == nodes.size, s"$label: one output row per node")
+    assert(rows.toMap == parentWalk(nodes), s"$label: differs from the parent walk")
+  }
+
+  /** A seeded forest with string ids: `roots` trees whose nodes hang
+    * under a random earlier node, an orphan 2-cycle with a subtree off
+    * it, and nodes under parent ids that do not exist. */
+  def forest(seed: Long, size: Int, roots: Int): Seq[(String, Option[String])] = {
+    val rnd = new Random(seed)
+    val ids = rnd.shuffle((0 until size).map(i => s"n$i-$seed"))
+    val (rootIds, rest) = ids.splitAt(roots)
+    val tree = rest.foldLeft(rootIds.map(_ -> Option.empty[String]).toVector) { (acc, id) =>
+      acc :+ (id -> Some(acc(rnd.nextInt(acc.size))._1))
+    }
+    val cycle = Seq(s"c0-$seed" -> Some(s"c1-$seed"), s"c1-$seed" -> Some(s"c0-$seed"))
+    val offCycle = (0 until 1 + rnd.nextInt(4)).foldLeft(cycle.toVector) { (acc, i) =>
+      acc :+ (s"h$i-$seed" -> Some(acc(rnd.nextInt(acc.size))._1))
+    }
+    val dangling = (0 until 1 + rnd.nextInt(3)).flatMap { i =>
+      Seq(s"d$i-$seed" -> Some(s"missing$i-$seed"), s"e$i-$seed" -> Some(s"d$i-$seed"))
+    }
+    rnd.shuffle(tree ++ offCycle ++ dangling)
+  }
+
+  test("property: connectBy equals a driver-side parent walk on seeded forests") {
+    for (seed <- 1L to 4L) {
+      val nodes = forest(seed, 20 + 10 * seed.toInt, 1 + seed.toInt % 3)
+      checkAgainstWalk(s"seed $seed", nodes)
+    }
+  }
+
+  test("property: no roots, empty input, and a 40-deep chain") {
+    val noRoots = forest(9L, 12, 1).filter(_._2.nonEmpty)
+    assert(parentWalk(noRoots).values.forall(_._1.isEmpty))
+    checkAgainstWalk("no roots", noRoots)
+    checkAgainstWalk("empty", Seq.empty)
+    val chain = ("k0" -> None) +: (1 to 40).map(i => s"k$i" -> Some(s"k${i - 1}"))
+    checkAgainstWalk("40-deep chain", chain)
+    val deepest = parentWalk(chain)("k40")
+    assert(deepest._2.contains(40) && deepest._3.get.split("/").length == 41)
+  }
+
+  test("output over a joined nodes frame survives self-union, self-join, and a second connectBy") {
+    val ids = (0L until 60L).toDF("id")
+    val parents = (0L until 60L).map(i => (i, if (i == 0) None else Some(i / 3))).toDF("pid", "parent")
+    val cyc = Seq((100L, Some(101L)), (101L, Some(100L))).toDF("id", "parent")
+    val nodes = ids.join(parents, col("id") === col("pid")).select("id", "parent").unionByName(cyc)
+    val out = Hierarchy.connectBy(nodes, "id", "parent")
+    assert(out.count() == 62)
+
+    assert(out.unionByName(out).count() == 124)
+    assert(out.unionByName(out).distinct().count() == 62)
+
+    val pairs = out.as("a").join(out.as("b"), col("a.root_id") === col("b.id"))
+      .select(col("a.id"), col("b.depth").as("root_depth"))
+    assert(pairs.count() == 60)
+    assert(pairs.filter(col("root_depth") =!= 0).isEmpty)
+
+    // each node re-hung directly under its root: a two-level forest,
+    // orphans (NULL root) become roots of their own
+    val again = Hierarchy.connectBy(
+      out.select(col("id"), when(col("depth") === 0, lit(null)).otherwise(col("root_id")).as("parent")),
+      "id", "parent")
+    val byId = collectOut(again).toMap
+    assert(byId.size == 62)
+    assert(byId("0") == ((Some("0"), Some(0), Some("0"))))
+    assert(byId("59") == ((Some("0"), Some(1), Some("0/59"))))
+    assert(byId("100") == ((Some("100"), Some(0), Some("100"))))
+  }
+
+  test("the benchmark-shaped tree runs within its job budget") {
+    // doc_id 0..1249 under doc_id/7: a single root, depth 4
+    val nodes = spark.range(0, 1250).select(col("id").as("doc_id"),
+      when(col("id") === 0, lit(null).cast("long")).otherwise(floor(col("id") / 7).cast("long")).as("parent"))
+    var out: Seq[(Long, Int)] = Nil
+    val jobs = jobsOf("connect-by-budget") {
+      out = Hierarchy.connectBy(nodes, "doc_id", "parent")
+        .select(col("doc_id"), col("depth")).as[(Long, Int)].collect().toSeq
+    }
+    info(s"$jobs jobs")
+    assert(out.size == 1250)
+    assert(out.map(_._2).max == 4)
+    assert(jobs <= 9, s"connectBy launched $jobs jobs, over its budget of 9")
   }
 }

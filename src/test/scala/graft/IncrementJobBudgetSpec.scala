@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{RawLoader, ViewingData}
@@ -19,26 +16,6 @@ class IncrementJobBudgetSpec extends SparkTestBase {
   /** Jobs launched by `copyInto` → `viewingEvents` → `insertOnlyParquet`
     * → `weightedFrom` → `insertOnlyParquet` over an existing target. */
   val IncrementJobBudget = 19
-
-  /** Jobs `f` launches from this thread, counted by job group. */
-  def jobsOf(group: String)(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "increment job budget")
-    try f
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   test("the nightly increment's graft calls stay within their job budget at sf0.001") {
     val root = Files.createTempDirectory("job-budget").toString

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,4 +47,24 @@ abstract class SparkTestBase extends AnyFunSuite {
     * fallback, so only this catches a broken doConsume). */
   def withStrictCodegen[T](f: => T): T =
     withConfs("spark.sql.codegen.fallback" -> "false")(f)
+
+  /** Jobs `f` launches from this thread, counted by job group. */
+  def jobsOf(group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget")
+    try f
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 }
