@@ -205,9 +205,7 @@ QUALIFY draw_rank <= 100"""))
       // Exactly D2's pairs (shared helper), materialized once — the
       // symmetrize union in Components consumes them twice.
       val pairs = QueriesML.ngramJaccardPairsCached(s, dir).localCheckpoint()
-      // probe-picked CC: shallow near-dup clusters keep min-propagation
-      // (the probe sees convergence before it ever considers star)
-      Components.connectedComponentsAuto(pairs, "id_a", "id_b")
+      Components.connectedComponents(pairs, "id_a", "id_b")
         .select(col("id").as("doc_id"), col("comp").as("canonical_id"))
     },
     Some(s"""WITH RECURSIVE ${QueriesML.ngramPairsCte},

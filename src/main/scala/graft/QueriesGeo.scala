@@ -174,12 +174,11 @@ SELECT c_custkey, s_suppkey, dist_km FROM r WHERE rn = 1"""))
     * ENTIRELY from operators the engine already proves: neighbor
     * pairs from `GeoJoin.radiusJoin` (grid-bucketed, never all-pairs),
     * core points from one count aggregate (≥ minPts neighbors incl.
-    * self), clusters from `Components.connectedComponentsStar` over
-    * the core-core subgraph (the alternating two-phase star CC,
-    * O(log n) rounds — chosen over Pregel min-propagation whose
-    * superstep count is the cluster DIAMETER, which a percolated
-    * geometric graph makes large), border points assigned to their
-    * MINIMUM adjacent core
+    * self), clusters from `Components.connectedComponents` over the
+    * core-core subgraph (its probe switches to the O(log n)-round
+    * alternating star when the graph percolates, where min-propagation's
+    * superstep count would be the cluster DIAMETER), border points
+    * assigned to their MINIMUM adjacent core
     * cluster (classic DBSCAN takes the first-discovered cluster —
     * order-dependent; the min rule is the deterministic variant a
     * reproducible pipeline needs), everything else noise. eps=60 km /
@@ -212,13 +211,12 @@ SELECT c_custkey, s_suppkey, dist_km FROM r WHERE rn = 1"""))
       val coreEdges = pairs
         .join(core.select(col("id").as("a_id")), "a_id")
         .join(core.select(col("id").as("b_id")), "b_id")
-      // PROBE-picked CC: min-propagation while the graph is shallow,
-      // alternating-star when the probe sees percolation (a
-      // density-replicated sweep's giant component has diameter ≈
-      // domain/eps, where min-propagation's superstep count explodes —
-      // measured 291 s → 45 s at ×10; identical labels either way,
-      // spec'd in ComponentsSpec's auto cases)
-      val comps = Components.connectedComponentsAuto(coreEdges, "a_id", "b_id")
+      // a density-replicated sweep's giant component has diameter ≈
+      // domain/eps: Components' probe sees the percolation and takes
+      // the star route (measured 291 s → 45 s at ×10 against
+      // min-propagation alone; identical labels, spec'd in
+      // ComponentsSpec's route cases)
+      val comps = Components.connectedComponents(coreEdges, "a_id", "b_id")
       // isolated cores never reach the edge set — they cluster alone
       val coreClusters = core
         .join(comps.withColumnRenamed("id", "cid"), col("id") === col("cid"), "left")

@@ -143,19 +143,19 @@ GROUP BY 1"""))
     * fixpoint with the same per-round plan). Scale shape = PageRank's:
     * each round is ONE |edges| shuffle (adjacency join) + a
     * map-side-combined (node, label) count + a per-node top-1 that
-    * Catalyst runs as WindowGroupLimit; labels localCheckpoint'd per
+    * Catalyst runs as WindowGroupLimit; labels go through a Barrier per
     * round so the lineage stays flat. Output: community sizes. */
   private val labelProp = Q(
     "graph_label_prop",
     (s, dir) => {
       import graft.operators.LabelProp
-      val adj = adjacency(undirectedEdges(s, dir)).localCheckpoint()
+      val (adj, _) = Barrier.materialize(adjacency(undirectedEdges(s, dir)))
       // fixed 3 rounds — the unrolled-CTE oracle's depth; the operator
       // form (LabelProp.propagate) iterates to the fixpoint with
       // 2-cycle detection, spec'd in LabelPropSpec
-      var labels = LabelProp.seed(adj).localCheckpoint()
+      var labels = Barrier.materialize(LabelProp.seed(adj))._1
       for (_ <- 1 to 3)
-        labels = LabelProp.step(adj, labels).localCheckpoint()
+        labels = Barrier.materialize(LabelProp.step(adj, labels))._1
       labels.groupBy("label").agg(count(lit(1)).as("n_members"))
         .withColumnRenamed("label", "community")
     },

@@ -1,216 +1,193 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.annotation.tailrec
 
-/** Connected components over an edge list by iterative min-label
-  * propagation — the Pregel superstep pattern (GraphX's
-  * ConnectedComponents, HashToMin of Rastogi et al. ICDE'13),
-  * driver-coordinated: each superstep is one shuffle join + one
-  * map-side-combined min aggregation, and the loop stops at the
-  * fixpoint. Near-dup canonicalization needs this: pair lists
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+
+/** Connected components over an edge list: (id, comp) for every node
+  * appearing in the edges, comp = the minimum node id reachable over
+  * undirected edges. Near-dup canonicalization needs this: pair lists
   * (MinHash/SimHash/Jaccard output) only say "a~b"; choosing ONE
-  * canonical row per duplicate cluster requires the transitive
-  * closure, and min-label gives a deterministic canonical id.
+  * canonical row per duplicate cluster requires the transitive closure,
+  * and the min label is a deterministic canonical id.
   *
-  * Scale: supersteps = graph diameter, and near-dup graphs are
-  * shallow (clusters, not chains), so 3-6 rounds in practice.
-  * localCheckpoint truncates lineage per round — without it the plan
-  * doubles every superstep. The per-round count() is the convergence
-  * barrier every iterative-graph system pays.
+  * There is one route, and the code picks each step from what it has
+  * already observed:
+  *  1. The symmetrized, deduplicated edges are one [[Barrier]] that also
+  *     counts the canonical (src < dst) edges. With integral ids of one
+  *     type and at most 2^16^ canonical edges, one driver union-find
+  *     answers.
+  *  2. Otherwise min-propagation, the Pregel superstep (GraphX's
+  *     ConnectedComponents, HashToMin of Rastogi et al. ICDE'13). The
+  *     first propagation is fused into the seed, comp(x) = min(x, min
+  *     neighbour).
+  *  3. After 3 rounds, if at least 20% of the labels still moved and
+  *     the ids are integral, the graph is percolating: a chain's label
+  *     frontier moves one hop a round, so min-propagation would pay its
+  *     whole diameter. The round-3 labels contract the graph (edge
+  *     (u, v) → (label u, label v)); every label is a member of its own
+  *     component, so the contracted graph has the same component
+  *     minima. The contracted graph is solved by the alternating star
+  *     (Kiveris et al., SoCC'14), O(log n) rounds, and the labels
+  *     compose node → round-3 label → contracted component.
+  *  4. When the contracted graph has at most 2^20^ edges (≈16 MB of
+  *     longs), a driver union-find replaces the star: the star pays
+  *     ~10 shuffle rounds whatever the volume, which dominates once
+  *     contraction has collapsed the graph. The upfront bound is far
+  *     below this one because step 1 collects the raw graph: at
+  *     q_geo_dbscan ×10 (≈1M raw edges, percolated) an upfront collect
+  *     at 2^20^ took 32 s where probe, contraction and union-find took
+  *     22 s.
+  *
+  * Every round is one [[Barrier]] whose own job observes the round's
+  * stop signal. A min-propagation round keeps each node's previous
+  * label beside the new one and counts the labels that decreased
+  * (labels only decrease): the loop stops when that count is 0, which
+  * is exact for every orderable id type. The same count over the
+  * round's row count is the percolation readout at round 3. A star
+  * round's second phase observes the signature (count, Σu, Σv,
+  * Σxxhash64(u, v)) of its canonical edge set; the loop stops when it
+  * repeats.
+  *
+  * The limits are constants: they bound driver memory and pick between
+  * engines that give the same labels, so no caller has a reason to set
+  * them. Specs force the distributed routes on small graphs through
+  * [[routed]].
   */
 object Components {
 
-  /** O(1)-row convergence signature over an (id, comp) labeling.
-    * Numeric label types use the exact monotone argument: labels only
-    * ever DECREASE (min of own and neighbors'), so the label sum
-    * strictly decreases until the fixpoint. Non-numeric orderable ids
-    * (string doc ids, …) can't be summed — the ADVICE review round
-    * found the old sum("comp") check threw CAST_INVALID_INPUT under
-    * ANSI on exactly that case — so they use the order-independent
-    * Σ xxhash64(id, comp) signature instead: any label change moves
-    * the hash sum except with negligible 2^-64-scale probability (the
-    * same barrier the star fixpoint uses), accumulated in
-    * decimal(38,0) because a long sum of 64-bit hashes overflows. */
-  private def labelSig(df: DataFrame): Any = {
-    import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
-    df.schema("comp").dataType match {
-      // EXACT sum types only: integral and decimal sums are
-      // associative-exact, so sum equality ⟺ no label moved. Float/
-      // double labels must NOT take this branch — a non-associative
-      // FP sum can absorb a real label decrease below the running
-      // sum's ulp and stop the loop early with wrong labels (silent,
-      // unlike the old getLong which at least threw) — they route to
-      // the hash signature with every other orderable type.
-      case ByteType | ShortType | IntegerType | LongType | _: DecimalType =>
-        df.agg(coalesce(sum("comp"), lit(0L))).head.get(0)
-      case _ =>
-        // The 0 fallback is for the EMPTY frame only (sum over no rows
-        // is null). A null sum over a NON-empty frame is a decimal
-        // overflow (non-ANSI mode nulls instead of throwing — needs
-        // ~1e19 rows, theoretical) and must fail LOUDLY: a blanket
-        // coalesce would read two consecutive overflowed rounds as
-        // 0 == 0 and falsely signal convergence with wrong labels
-        // (r9 advice).
-        val r = df.agg(
-          sum(xxhash64(col("id"), col("comp")).cast("decimal(38,0)")),
-          count(lit(1))).head
-        if (r.getLong(1) == 0L) java.math.BigDecimal.ZERO
-        else {
-          require(!r.isNullAt(0),
-            "label-signature decimal sum overflowed (non-ANSI null) — " +
-              "convergence check cannot proceed")
-          r.get(0)
-        }
-    }
-  }
-
-  /** Driver-local fast path shared by [[connectedComponents]] and
-    * [[connectedComponentsAutoWithChoice]]: when the deduped,
-    * symmetrized edge set is small enough to union-find on the driver
-    * (≤ `maxEdges` canonical edges), the whole distributed fixpoint
-    * collapses to ONE collect plus a broadcastable label table. At
-    * bench scale this replaces 2–3 rounds of join+aggregate+signature
-    * ACTIONS (fixed per-action cost dominates tiny frames); at 100 TB
-    * the count() probe is one cheap aggregate on the
-    * already-checkpointed sym frame and the path simply never
-    * triggers. The UPFRONT bound is 2^16, deliberately far below the
-    * star ENDGAME's 2^20: the endgame collects a graph ALREADY
-    * collapsed by probe+contraction, while this path would collect
-    * the raw graph — measured on q_geo_dbscan ×10 (≈1M raw edges,
-    * percolated), upfront-local at 2^20 cost 32 s where
-    * probe→contract→local runs 22 s, so big-but-collectable raw
-    * graphs must still take the contraction route. Integral id types
-    * only (the collect needs longs); labels return in the INPUT id
-    * type so downstream joins/oracles see the exact schema the loop
-    * would produce. */
-  private def tryLocalSolve(sym: DataFrame,
-      srcType: org.apache.spark.sql.types.DataType,
-      dstType: org.apache.spark.sql.types.DataType,
-      maxEdges: Long): Option[DataFrame] = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    def integral(t: org.apache.spark.sql.types.DataType) = t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    // BOTH endpoint types must be integral AND equal: the final cast
-    // back to srcType would otherwise narrow ids that only fit the
-    // wider column (review finding: src Int + dst Long with an id >
-    // Int.MaxValue truncates under non-ANSI, throws under ANSI —
-    // mixed-width graphs take the loop, whose labels keep the union's
-    // widened type)
-    if (!integral(srcType) || srcType != dstType || maxEdges <= 0L) return None
-    // canonical half of the symmetrized frame: each undirected edge
-    // once (no checkpoint — sym already is one, and a too-big graph
-    // must not materialize anything extra on its way to the loop)
-    val canon = sym.filter(col("src") < col("dst"))
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-    if (canon.count() > maxEdges) return None
-    val lbl = localUnionFind(canon)
-    // self-loop-only nodes never enter canon — the left-join fallback
-    // labels them with themselves (they ARE their own component)
-    val nodes = sym.select(col("src")).distinct()
-    Some(nodes.join(
-        broadcast(lbl).select(col("id").as("__i"), col("comp").as("__c")),
-        nodes("src").cast("long") === col("__i"), "left")
-      .select(nodes("src").cast(srcType).as("id"),
-        coalesce(col("__c"), nodes("src").cast("long")).cast(srcType).as("comp")))
-  }
+  private val ProbeRounds = 3
+  private val PercolationThreshold = 0.2
 
   /** @return (id, comp) for every node appearing in `edges`, where
     *         comp = min node id reachable via undirected edges. */
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      upfrontLocalMaxEdges: Long = 1L << 16): DataFrame = {
-    val sym = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct()
-      .localCheckpoint()
-    tryLocalSolve(sym, edges.schema(srcCol).dataType,
-        edges.schema(dstCol).dataType, upfrontLocalMaxEdges)
-      .foreach(out => return out)
-    // Seed with the first propagation fused into init: comp(x) =
-    // min(x, min neighbor) — one aggregate instead of an identity
-    // round plus a join round.
-    var labels = sym.groupBy(col("src").as("id"))
-      .agg(min("dst").as("min_nbr"))
-      .select(col("id"), least(col("id"), col("min_nbr")).as("comp"))
-      .localCheckpoint()
-    // Type-aware O(1)-row convergence barrier (labelSig) replaces the
-    // join+count convergence check.
-    var prevSig = labelSig(labels)
-    var converged = false
-    while (!converged) {
-      // neighbor labels flow along edges; keep the min of (own, theirs)
-      val prop = sym.join(labels, sym("dst") === labels("id"))
-        .select(sym("src").as("id"), col("comp"))
-      val next = labels.unionByName(prop)
-        .groupBy("id").agg(min("comp").as("comp"))
-        .localCheckpoint()
-      val nextSig = labelSig(next)
-      converged = nextSig == prevSig
-      prevSig = nextSig
-      labels = next
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    routed(edges, srcCol, dstCol)._1
+
+  /** [[connectedComponents]] with the two edge limits open to specs.
+    * A limit of 0 turns its driver union-find off.
+    * @return (labels, route), route ∈ {"local", "minprop", "star"} */
+  private[graft] def routed(edges: DataFrame, srcCol: String, dstCol: String,
+      upfrontLocalMaxEdges: Long = 1L << 16,
+      localSolveMaxEdges: Long = 1L << 20): (DataFrame, String) = {
+    val (srcType, dstType) = (edges.schema(srcCol).dataType, edges.schema(dstCol).dataType)
+    val (sym, symCounts) = Barrier.materialize(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
+        .distinct(),
+      count_if(col("src") < col("dst")).as("canonical"))
+    // the union-find returns longs: both endpoint types must be integral
+    // AND equal, or the cast back would narrow ids that only fit the
+    // wider column
+    if (integral(srcType) && srcType == dstType && upfrontLocalMaxEdges > 0 &&
+        symCounts.getLong(0) <= upfrontLocalMaxEdges)
+      return (localSolve(sym, srcType), "local")
+    val starEligible = integral(srcType) && integral(dstType)
+
+    @tailrec def propagate(labels: DataFrame, round: Int): (DataFrame, String) = {
+      val prop = sym.join(labels, col("dst") === col("id"))
+        .select(col("src").as("id"), col("comp"))
+      val (next, m) = Barrier.materialize(
+        labels.select(col("id"), col("comp"), col("comp").as("prev"))
+          .unionByName(prop.withColumn("prev", lit(null).cast(labels.schema("comp").dataType)))
+          .groupBy("id").agg(min("comp").as("comp"), min("prev").as("prev")),
+        count(lit(1)).as("nodes"),
+        count_if(col("comp") < col("prev")).as("changed"))
+      val (nodes, changed) = (m.getLong(0), m.getLong(1))
+      val labelled = next.select("id", "comp")
+      if (changed == 0) (labelled, "minprop")
+      else if (round == ProbeRounds && starEligible &&
+          changed.toDouble / nodes >= PercolationThreshold)
+        (contractAndSolve(sym, labelled, localSolveMaxEdges), "star")
+      else propagate(labelled, round + 1)
     }
-    labels
+    propagate(
+      sym.groupBy(col("src").as("id"))
+        .agg(min("dst").as("min_nbr"))
+        .select(col("id"), least(col("id"), col("min_nbr")).as("comp")),
+      round = 1)
   }
 
-  /** Connected components by the ALTERNATING two-phase star algorithm
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — O(log n) rounds instead of min-propagation's
-    * O(diameter). The distinction is invisible on shallow near-dup
-    * clusters but decisive on long-diameter graphs: a percolated
-    * geometric graph (q_geo_dbscan's ×10 sweep replica, diameter ≈
-    * 70 cells) runs ~70 supersteps under min-propagation and ~a dozen
-    * here. Same contract as [[connectedComponents]]: (id, comp) for
-    * every node appearing in `edges`, comp = min reachable id.
-    *
-    * Each phase re-points part of every node's neighborhood at the
-    * neighborhood minimum m(u) = min(Γ(u) ∪ {u}):
-    *   large-star: (v, m(u)) for v ∈ Γ(u), v > u  — larger neighbors
-    *   small-star: (v, m(u)) for v ∈ Γ(u), v < u, plus (u, m(u))
-    * Both preserve connectivity; alternating them converges to a
-    * forest of stars whose centers are the component minima.
-    * Convergence = the (count, Σu, Σv) signature of the canonical
-    * (min,max)-form edge set repeating — the same O(1)-row-aggregate
-    * barrier the min-propagation loop uses. */
-  def connectedComponentsStar(
-      edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val canon = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
+  private def integral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** Labels from one driver union-find over the canonical half of
+    * `sym`, returned in the input id type so downstream joins see the
+    * schema the loop would produce. */
+  private def localSolve(sym: DataFrame, idType: DataType): DataFrame = {
+    val lbl = localUnionFind(sym.filter(col("src") < col("dst"))
+      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v")))
+    // self-loop-only nodes never enter the canonical half: the left-join
+    // fallback labels them with themselves
+    val nodes = sym.select(col("src")).distinct()
+    nodes.join(
+        broadcast(lbl).select(col("id").as("__i"), col("comp").as("__c")),
+        col("src").cast("long") === col("__i"), "left")
+      .select(col("src").cast(idType).as("id"),
+        coalesce(col("__c"), col("src").cast("long")).cast(idType).as("comp"))
+  }
+
+  /** Contracts `sym` by the partial labels, solves the contracted graph
+    * (driver union-find when it has at most `localSolveMaxEdges` edges,
+    * else the star) and composes node → partial label → component. */
+  private def contractAndSolve(sym: DataFrame, partial: DataFrame,
+      localSolveMaxEdges: Long): DataFrame = {
+    val lu = partial.select(col("id").as("src"), col("comp").as("lu"))
+    val lv = partial.select(col("id").as("dst"), col("comp").as("lv"))
+    val (contracted, sig) = Barrier.materialize(
+      canonical(sym.join(lu, "src").join(lv, "dst"), "lu", "lv"), starSig: _*)
+    val starLabels =
+      if (sig.getLong(0) <= localSolveMaxEdges) localUnionFind(contracted)
+      else starFixpoint(contracted, sig, partial.select(col("comp").cast("long").as("id")).distinct())
+    // a fully-settled cluster's contracted edges vanish as self-loops:
+    // its label never reaches the solver, so the compose join is LEFT
+    // with the partial label (already its component min) as fallback
+    partial
+      .join(starLabels.select(col("id").as("__l"), col("comp").as("__c")),
+        col("comp").cast("long") === col("__l"), "left")
+      .select(col("id"), coalesce(col("__c"), col("comp").cast("long")).as("comp"))
+  }
+
+  /** Each undirected edge once as longs (u < v), self-loops dropped. */
+  private def canonical(df: DataFrame, a: String, b: String): DataFrame =
+    df.select(col(a).cast("long").as("u"), col(b).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .distinct()
-      .localCheckpoint()
-    // remember every input node: star rounds may drop a node's edges
-    // once it coincides with its component min
-    val nodes = canon.select(col("u").as("id"))
-      .union(canon.select(col("v").as("id"))).distinct().localCheckpoint()
-    starFromCanonical(canon, nodes)
+
+  /** Order-independent signature of a canonical edge set. (count, Σu,
+    * Σv) alone collides across different edge sets ({(1,4),(2,3)} and
+    * {(1,3),(2,4)} both give (2,3,7)); Σxxhash64(u, v) breaks such
+    * collisions except with 2^-64^-scale probability. The hash sum
+    * accumulates in decimal(38,0): a long sum of 64-bit hashes
+    * overflows after a handful of edges. */
+  private val starSig: Seq[Column] = Seq(
+    count(lit(1)).as("edges"), sum("u").as("su"), sum("v").as("sv"),
+    sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("sh"))
+
+  /** The alternating star alone, from raw edges. Integral ids only. */
+  private[graft] def connectedComponentsStar(
+      edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val (canon, sig) = Barrier.materialize(canonical(edges, srcCol, dstCol), starSig: _*)
+    // every input node: star rounds drop a node's edges once it
+    // coincides with its component min
+    starFixpoint(canon, sig,
+      canon.select(col("u").as("id")).union(canon.select(col("v").as("id"))).distinct())
   }
 
-  /** Star fixpoint over an edge frame ALREADY in canonical form —
-    * long-typed, u < v, distinct, checkpointed — with `nodes` the id
-    * set to label. Split out so [[connectedComponentsAutoWithChoice]]
-    * can hand over its probe's symmetrized/checkpointed work (as a
-    * label-contracted graph) instead of restarting from raw edges. */
-  private def starFromCanonical(canon: DataFrame, nodes: DataFrame): DataFrame = {
-    var e = canon
-
-    // Order-independent fixpoint signature. (count, Σu, Σv) alone can
-    // collide across DIFFERENT edge sets ({(1,4),(2,3)} vs {(1,3),(2,4)}
-    // both give (2,3,7)) — a colliding-but-changed round would stop the
-    // loop early with wrong labels. Σ xxhash64(u,v) over the canonical
-    // (min,max) pairs breaks such collisions: any single-edge swap moves
-    // the hash sum except with negligible 2^-64-scale probability, and
-    // the aggregate stays O(1) rows. The hash sum accumulates in
-    // decimal(38,0) — a long sum of 64-bit hashes overflows (ANSI
-    // throws) after a handful of edges.
-    def sig(df: DataFrame): Seq[Any] = df.agg(
-      count(lit(1)), coalesce(sum("u"), lit(0L)), coalesce(sum("v"), lit(0L)),
-      coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head.toSeq
-    def phase(cur: DataFrame, large: Boolean): DataFrame = {
+  /** Star fixpoint over a canonical edge frame with signature `sig`,
+    * labelling `nodes`. Each phase re-points part of every node's
+    * neighbourhood at its minimum m(u) = min(Γ(u) ∪ {u}):
+    *   large-star: (v, m(u)) for v ∈ Γ(u), v > u
+    *   small-star: (v, m(u)) for v ∈ Γ(u), v < u, plus (u, m(u))
+    * Both preserve connectivity; alternating them converges to a forest
+    * of stars whose centers are the component minima. */
+  private def starFixpoint(canon: DataFrame, sig: Row, nodes: DataFrame): DataFrame = {
+    def phase(cur: DataFrame, large: Boolean, metrics: Column*): (DataFrame, Row) = {
       val sym = cur.select(col("u"), col("v"))
         .union(cur.select(col("v").as("u"), col("u").as("v")))
       val m = sym.groupBy("u").agg(min("v").as("mv"))
@@ -222,175 +199,26 @@ object Components {
         else withM.filter(col("v") < col("u"))
           .select(col("v").as("a"), col("m").as("b"))
           .union(m.select(col("u").as("a"), col("m").as("b")))
-      out.filter(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-        .distinct()
-        .localCheckpoint()
+      Barrier.materialize(canonical(out, "a", "b"), metrics: _*)
     }
-
-    var prev = sig(e)
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      rounds += 1
+    @tailrec def loop(e: DataFrame, prev: Row, rounds: Int): DataFrame = {
       require(rounds <= 64, "alternating-star CC failed to converge in 64 rounds")
-      val next = phase(phase(e, large = true), large = false)
-      val s = sig(next)
-      converged = s == prev
-      prev = s
-      e = next
+      val (next, s) = phase(phase(e, large = true)._1, large = false, starSig: _*)
+      if (s == prev) next else loop(next, s, rounds + 1)
     }
-    // converged stars: every node's min neighbor IS its component min
+    val e = loop(canon, sig, 1)
+    // converged stars: every node's min neighbour IS its component min
     val sym = e.select(col("u"), col("v"))
       .union(e.select(col("v").as("u"), col("u").as("v")))
     nodes.join(sym.groupBy(col("u").as("id")).agg(min("v").as("mn")), Seq("id"), "left")
       .select(col("id"), least(col("id"), coalesce(col("mn"), col("id"))).as("comp"))
   }
 
-  /** [[connectedComponents]] with the algorithm picked by a CHEAP
-    * PROBE instead of the caller: run `probeRounds` min-propagation
-    * supersteps; if unconverged, measure the fraction of labels that
-    * still changed in the last probe round. Shallow near-dup graphs
-    * (clusters, diameter 2-4) have settled almost everywhere by then
-    * — keep min-propagation, whose per-round cost is lower than a
-    * star double-phase. A high changed fraction is a PERCOLATION
-    * signal (labels still walking a long diameter — a chain moves its
-    * frontier one hop per round, so the unsettled share stays large
-    * for ~diameter rounds): restart on the O(log n)-round alternating
-    * star. The probe costs the rounds min-propagation would have run
-    * anyway plus ONE O(1)-row changed-count aggregate; both engines
-    * emit comp = min reachable id, so the pick never changes labels
-    * (ComponentsSpec pins both shapes).
-    *
-    * The star restart does NOT start over: the probe's partial labels
-    * CONTRACT the graph first (edge (u,v) → (label(u), label(v)),
-    * self-loops dropped) — valid because every label is the min id
-    * reached so far, itself a member of the same component, so the
-    * contracted graph's component minima equal the original's; the
-    * final labels compose node → probe label → contracted comp.
-    * Settled regions collapse to single nodes, so the star runs on a
-    * fraction of the edges and the probe's supersteps are paid back
-    * instead of thrown away.
-    *
-    * The star engine needs integral node ids (its canonical form
-    * casts to long — under non-ANSI mode a non-castable id would
-    * silently null every edge). Non-integral id columns (string doc
-    * ids, decimals, …) therefore disable the star option at entry
-    * and the probe loop just runs min-propagation to its fixpoint,
-    * which handles any orderable id type.
-    *
-    * When the CONTRACTED graph fits `localSolveMaxEdges` (default
-    * 2²⁰ canonical edges ≈ 16 MB of longs — an explicitly bounded,
-    * control-plane-sized collect), the star fixpoint is replaced by
-    * a driver-local union-find: the distributed star pays ~10 fixed-
-    * cost shuffle rounds regardless of data volume, which dominates
-    * wall time exactly when contraction has already collapsed the
-    * graph (measured: q_geo_dbscan's CC stage 11.1 s → the union-
-    * find solves the same contracted graph in well under a second).
-    * This is the standard two-level CC endgame: distributed while
-    * big, local once provably small; a contracted graph over the
-    * bound stays on the distributed star unconditionally.
-    *
-    * @return (labels, picked) — picked ∈ {"minprop", "star"} for
-    *         specs/telemetry; use [[connectedComponentsAuto]] when
-    *         only the labels matter. */
-  def connectedComponentsAutoWithChoice(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      probeRounds: Int = 3,
-      percolationThreshold: Double = 0.2,
-      localSolveMaxEdges: Long = 1L << 20,
-      upfrontLocalMaxEdges: Long = 1L << 16): (DataFrame, String) = {
-    require(probeRounds >= 1, s"probeRounds must be >= 1, got $probeRounds")
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val starEligible = Seq(srcCol, dstCol).forall { c =>
-      edges.schema(c).dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-    }
-    val sym = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct()
-      .localCheckpoint()
-    // bounded driver-local fast path first (its own bound, distinct
-    // from the star ENDGAME's localSolveMaxEdges so probe-semantics
-    // specs can disable one without the other): a graph this small
-    // never needs the probe at all
-    tryLocalSolve(sym, edges.schema(srcCol).dataType,
-        edges.schema(dstCol).dataType, upfrontLocalMaxEdges)
-      .foreach(out => return (out, "local"))
-    var labels = sym.groupBy(col("src").as("id"))
-      .agg(min("dst").as("min_nbr"))
-      .select(col("id"), least(col("id"), col("min_nbr")).as("comp"))
-      .localCheckpoint()
-    var prevSig = labelSig(labels)
-    var rounds = 0
-    while (true) {
-      rounds += 1
-      val prop = sym.join(labels, sym("dst") === labels("id"))
-        .select(sym("src").as("id"), col("comp"))
-      val next = labels.unionByName(prop)
-        .groupBy("id").agg(min("comp").as("comp"))
-        .localCheckpoint()
-      val nextSig = labelSig(next)
-      if (nextSig == prevSig) return (next, "minprop") // fixpoint
-      if (rounds == probeRounds && starEligible) {
-        // one O(1)-row probe readout: how much of the graph is still
-        // moving? (labels only decrease, so changed = strictly less)
-        val r = next.join(labels.withColumnRenamed("comp", "__prev"), "id")
-          .agg(count(lit(1)),
-            sum(when(col("comp") < col("__prev"), 1L).otherwise(0L))).head
-        val total = r.getLong(0)
-        val changed = r.getLong(1)
-        if (total > 0 && changed.toDouble / total >= percolationThreshold) {
-          // contract by the probe's partial labels (scaladoc argument),
-          // then run the star fixpoint on the collapsed graph and
-          // compose: node → probe label → contracted component min.
-          val partial = next.localCheckpoint()
-          val lu = partial.select(col("id").as("src"), col("comp").as("lu"))
-          val lv = partial.select(col("id").as("dst"), col("comp").as("lv"))
-          val contracted = sym.join(lu, "src").join(lv, "dst")
-            .select(col("lu").cast("long").as("u"), col("lv").cast("long").as("v"))
-            .filter(col("u") =!= col("v"))
-            .select(least(col("u"), col("v")).as("u"),
-              greatest(col("u"), col("v")).as("v"))
-            .distinct()
-            .localCheckpoint()
-          // a fully-settled cluster's contracted edges vanish as
-          // self-loops — its label never reaches the solver, so the
-          // compose join is LEFT with the partial label as fallback
-          // (an absent center IS its own component min already)
-          val starLabels =
-            if (contracted.count() <= localSolveMaxEdges)
-              localUnionFind(contracted)
-            else {
-              val centers = partial.select(col("comp").cast("long").as("id"))
-                .distinct().localCheckpoint()
-              starFromCanonical(contracted, centers)
-            }
-          val out = partial
-            .join(starLabels.select(col("id").as("__l"), col("comp").as("__c")),
-              partial("comp").cast("long") === col("__l"), "left")
-            .select(partial("id"),
-              coalesce(col("__c"), partial("comp").cast("long")).as("comp"))
-          return (out, "star")
-        }
-      }
-      prevSig = nextSig
-      labels = next
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** Driver-local union-find over a canonical (u, v) long edge frame
-    * ALREADY proven ≤ [[connectedComponentsAutoWithChoice]]'s
-    * `localSolveMaxEdges` — the bounded two-level-CC endgame. Union
-    * always points the LARGER root at the smaller, so every set's
-    * root is its minimum id and labels match the distributed
-    * engines' comp = min-reachable-id contract exactly; find is
-    * path-compressed. Labels only nodes appearing in edges (isolated
-    * centers are handled by the caller's left-join fallback). */
+    * already proven small. Union points the LARGER root at the smaller,
+    * so every set's root is its minimum id, matching comp = min
+    * reachable id; find is path-compressed. Labels only nodes appearing
+    * in edges (isolated centers take the caller's left-join fallback). */
   private def localUnionFind(canon: DataFrame): DataFrame = {
     val spark = canon.sparkSession
     import spark.implicits._
@@ -411,15 +239,4 @@ object Components {
     }
     parent.keys.toSeq.map(id => (id, find(id))).toDF("id", "comp")
   }
-
-  /** [[connectedComponentsAutoWithChoice]] returning only the labels. */
-  def connectedComponentsAuto(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      probeRounds: Int = 3,
-      percolationThreshold: Double = 0.2,
-      localSolveMaxEdges: Long = 1L << 20,
-      upfrontLocalMaxEdges: Long = 1L << 16): DataFrame =
-    connectedComponentsAutoWithChoice(
-      edges, srcCol, dstCol, probeRounds, percolationThreshold,
-      localSolveMaxEdges, upfrontLocalMaxEdges)._1
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,10 +23,11 @@ import org.apache.spark.sql.functions._
   *
   * Per round: ONE |edges| shuffle (adjacency ⋈ labels) + a map-side-
   * combined (node, label) count + a map-side-combined min_by modal
-  * pick (no sort anywhere in the round), labels
-  * localCheckpoint'd so lineage stays flat; the convergence barrier
-  * is a join-and-count like Components' label-sum barrier (label sums
-  * here aren't monotone, so the exact compare is the honest check).
+  * pick (no sort anywhere in the round). Each round is one [[Barrier]]
+  * over the new labels joined to the two earlier states; its own job
+  * counts the labels that differ from each and sums the new labels, so
+  * a round is one action and the 2-cycle pick reads sums already
+  * observed.
   */
 object LabelProp {
 
@@ -52,36 +55,34 @@ object LabelProp {
     adj.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
 
-  private def differs(x: DataFrame, y: DataFrame): Boolean =
-    x.join(y.withColumnRenamed("label", "l2"), "node")
-      .filter(col("label") =!= col("l2"))
-      .isEmpty == false
-
-  private def labelSum(x: DataFrame): Long =
-    x.agg(coalesce(sum("label"), lit(0L))).head.getLong(0)
-
   /** Runs to the fixpoint (or a detected 2-cycle), bounded by
-    * `maxRounds` as the oscillation backstop. */
+    * `maxRounds` as the oscillation backstop. Labels are numeric (the
+    * 2-cycle pick compares label sums). */
   def propagate(adj0: DataFrame, maxRounds: Int = 32): Result = {
-    val adj = adj0.localCheckpoint()
-    var prevPrev: DataFrame = null
-    var prev = seed(adj).localCheckpoint()
-    var rounds = 0
-    while (rounds < maxRounds) {
-      rounds += 1
-      val next = step(adj, prev).localCheckpoint()
-      if (!differs(next, prev))
-        return Result(prev, rounds, cycled = false)
-      if (prevPrev != null && !differs(next, prevPrev)) {
-        // 2-cycle: next replays prevPrev — pick the alternating state
-        // with the smaller label sum (deterministic; on equal sums the
-        // earlier state, which `next` equals, wins)
-        val pick = if (labelSum(prev) < labelSum(next)) prev else next
-        return Result(pick, rounds, cycled = true)
+    val (adj, _) = Barrier.materialize(adj0)
+    // `prev` carries its own predecessor's labels as l1, so one join
+    // brings both earlier states into the round
+    @tailrec def loop(prev: DataFrame, prevSum: Long, round: Int): Result =
+      if (round > maxRounds) Result(prev.select("node", "label"), round - 1, cycled = false)
+      else {
+        val (next, m) = Barrier.materialize(
+          step(adj, prev.select("node", "label"))
+            .join(prev.select(col("node"), col("label").as("l1"), col("l1").as("l2")),
+              Seq("node"), "left"),
+          count_if(col("label") =!= col("l1")).as("moved"),
+          count_if(col("label") =!= col("l2")).as("moved2"),
+          coalesce(sum("label"), lit(0L)).as("sum"))
+        val (moved, moved2, nextSum) = (m.getLong(0), m.getLong(1), m.getLong(2))
+        if (moved == 0) Result(prev.select("node", "label"), round, cycled = false)
+        else if (round > 1 && moved2 == 0) {
+          // 2-cycle: next replays the state two rounds back — pick the
+          // alternating state with the smaller label sum (deterministic;
+          // on equal sums the earlier state, which `next` equals, wins)
+          val pick = if (prevSum < nextSum) prev else next
+          Result(pick.select("node", "label"), round, cycled = true)
+        } else loop(next.drop("l2"), nextSum, round + 1)
       }
-      prevPrev = prev
-      prev = next
-    }
-    Result(prev, rounds, cycled = false)
+    val start = seed(adj)
+    loop(start.withColumn("l1", lit(null).cast(start.schema("label").dataType)), 0L, 1)
   }
 }

@@ -41,8 +41,7 @@ class ComponentsPropertySpec extends SparkTestBase {
         .as[(Long, Long)].collect().toMap
       assert(got == naive(edges), s"graph $i with ${edges.length} edges")
       // and the distributed loop (upfront local solve disabled) agrees
-      val loop = Components.connectedComponents(edges.toDF("a", "b"), "a", "b",
-          upfrontLocalMaxEdges = 0L)
+      val loop = Components.routed(edges.toDF("a", "b"), "a", "b", upfrontLocalMaxEdges = 0L)._1
         .as[(Long, Long)].collect().toMap
       assert(loop == naive(edges), s"loop path, graph $i")
     }

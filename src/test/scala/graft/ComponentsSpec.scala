@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.operators.Components
 
 class ComponentsSpec extends SparkTestBase {
@@ -11,8 +13,7 @@ class ComponentsSpec extends SparkTestBase {
 
   /** The distributed min-propagation loop, upfront local solve off. */
   private def compsLoop(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Components.connectedComponents(edges.toDF("a", "b"), "a", "b",
-        upfrontLocalMaxEdges = 0L)
+    Components.routed(edges.toDF("a", "b"), "a", "b", upfrontLocalMaxEdges = 0L)._1
       .as[(Long, Long)].collect().toMap
 
   test("upfront local solve == the distributed loop on every small shape") {
@@ -90,53 +91,51 @@ class ComponentsSpec extends SparkTestBase {
     assert((0L to 200L).forall(m(_) == 0L))
   }
 
-  // ---- probe-picked auto variant ----
+  // ---- the route: local solve, min-propagation, probe, star ----
 
-  private def auto(edges: Seq[(Long, Long)]): (Map[Long, Long], String) = {
+  private def route(edges: Seq[(Long, Long)]): (Map[Long, Long], String) = {
     // upfront local solve OFF: these cases pin the PROBE semantics
     // (minprop-vs-star picks), which the fast path would short-circuit
-    val (df, pick) = Components.connectedComponentsAutoWithChoice(
-      edges.toDF("a", "b"), "a", "b", upfrontLocalMaxEdges = 0L)
+    val (df, pick) = Components.routed(edges.toDF("a", "b"), "a", "b", upfrontLocalMaxEdges = 0L)
     (df.as[(Long, Long)].collect().toMap, pick)
   }
 
-  test("auto defaults to the upfront local solve under the bound, labels identical") {
+  test("route defaults to the upfront local solve under the bound, labels identical") {
     val cliques = (0L until 6L).flatMap { c =>
       val ids = (0L until 4L).map(c * 100 + _)
       for (a <- ids; b <- ids if a < b) yield (a, b)
     }
-    val (df, pick) = Components.connectedComponentsAutoWithChoice(
-      cliques.toDF("a", "b"), "a", "b")
+    val (df, pick) = Components.routed(cliques.toDF("a", "b"), "a", "b")
     assert(pick == "local", "under the bound the driver union-find answers")
     assert(df.as[(Long, Long)].collect().toMap == comps(cliques))
   }
 
-  test("auto keeps min-propagation on a shallow near-dup cluster graph") {
+  test("route keeps min-propagation on a shallow near-dup cluster graph") {
     // disjoint near-dup cliques (diameter 1-2) — the dedup workload:
     // converged within the probe, star is never consulted
     val cliques = (0L until 10L).flatMap { c =>
       val ids = (0L until 4L).map(c * 100 + _)
       for (a <- ids; b <- ids if a < b) yield (a, b)
     }
-    val (m, pick) = auto(cliques)
+    val (m, pick) = route(cliques)
     assert(pick == "minprop", s"shallow graph must stay on min-propagation")
     assert(m == comps(cliques), "labels identical to the plain operator")
   }
 
-  test("auto switches to star on a percolated long-diameter graph, labels identical") {
+  test("route switches to star on a percolated long-diameter graph, labels identical") {
     // a 120-node path: after 3 probe rounds the label frontier has
     // moved 3 hops — nearly every label is still changing, the
     // percolation signal
     val path = (0L until 120L).map(i => (i, i + 1))
-    val (m, pick) = auto(path)
+    val (m, pick) = route(path)
     assert(pick == "star", "long diameter must switch to alternating star")
     assert((0L to 120L).forall(m(_) == 0L))
     assert(m == comps(path), "labels identical to min-propagation")
   }
 
-  test("auto on empty and tiny inputs: no crash, minprop pick") {
-    assert(auto(Seq.empty) == (Map.empty, "minprop"))
-    val (m, pick) = auto(Seq((9L, 2L)))
+  test("route on empty and tiny inputs: no crash, minprop pick") {
+    assert(route(Seq.empty) == (Map.empty, "minprop"))
+    val (m, pick) = route(Seq((9L, 2L)))
     assert(pick == "minprop" && m == Map(2L -> 2L, 9L -> 2L))
   }
 
@@ -160,34 +159,43 @@ class ComponentsSpec extends SparkTestBase {
     // 35 cliques (140 nodes) + path P=30 (31 nodes): changed = 27,
     // total = 171, ratio 0.158 < 0.2 → stays on min-propagation
     val below = mix(35, 30)
-    val (mBelow, pickBelow) = auto(below)
+    val (mBelow, pickBelow) = route(below)
     assert(pickBelow == "minprop",
       s"ratio ≈ 0.158 is under the 0.2 knee — must stay minprop")
     assert(mBelow == comps(below))
     // 25 cliques (100 nodes) + path P=40 (41 nodes): changed = 37,
     // total = 141, ratio 0.262 ≥ 0.2 → star restart
     val above = mix(25, 40)
-    val (mAbove, pickAbove) = auto(above)
+    val (mAbove, pickAbove) = route(above)
     assert(pickAbove == "star",
       s"ratio ≈ 0.262 is over the 0.2 knee — must switch to star")
     assert(mAbove == comps(above))
   }
 
-  test("auto with non-integral (string) ids never routes to star and labels correctly") {
+  test("route with string or double ids never takes star and labels correctly") {
     // the star engine casts ids to long; a string id would null every
-    // edge under non-ANSI mode — auto must detect the type at entry
-    // and stay on min-propagation even when the graph LOOKS percolated
+    // edge under non-ANSI mode — the route must detect the type at
+    // entry and stay on min-propagation even when the graph LOOKS
+    // percolated
     val path = (0 until 60).map(i => (f"n$i%03d", f"n${i + 1}%03d"))
-    val (labels, pick) = Components.connectedComponentsAutoWithChoice(
-      path.toDF("a", "b"), "a", "b")
+    val (labels, pick) = Components.routed(path.toDF("a", "b"), "a", "b")
     val m = labels.as[(String, String)].collect().toMap
     assert(pick == "minprop",
       "string ids must disable the star option AND the local fast path")
     assert((0 to 60).forall(i => m(f"n$i%03d") == "n000"), s"$m")
+    // fractional ids whose minimum sits at the far end of the path:
+    // the stop rule counts labels that decreased, so it must see every
+    // fractional step of the walk
+    val id = (i: Int) => 100.0 - i * 1.25
+    val dpath = (0 until 60).map(i => (id(i), id(i + 1)))
+    val (dLabels, dPick) = Components.routed(dpath.toDF("a", "b"), "a", "b")
+    val dm = dLabels.as[(Double, Double)].collect().toMap
+    assert(dPick == "minprop", "double ids must disable star and the local fast path")
+    assert(dm.size == 61 && dm.values.forall(_ == id(60)), s"$dm")
   }
 
   test("star-restart endgame: local union-find and distributed star give identical labels") {
-    // percolated graph (auto switches to star): solve the contracted
+    // percolated graph (the route switches to star): solve the contracted
     // graph BOTH ways by steering localSolveMaxEdges — default (well
     // above the contracted size → driver union-find) vs 0 (forces
     // the distributed star fixpoint) — labels must be identical and
@@ -195,10 +203,9 @@ class ComponentsSpec extends SparkTestBase {
     val path = (0L until 150L).map(i => (i, i + 1)) ++
       Seq((500L, 501L), (501L, 502L), (500L, 502L)) // plus a settled clique
     val df = path.toDF("a", "b")
-    val (viaLocal, p1) = Components.connectedComponentsAutoWithChoice(df, "a", "b",
-      upfrontLocalMaxEdges = 0L)
-    val (viaStar, p2) = Components.connectedComponentsAutoWithChoice(
-      df, "a", "b", localSolveMaxEdges = 0L, upfrontLocalMaxEdges = 0L)
+    val (viaLocal, p1) = Components.routed(df, "a", "b", upfrontLocalMaxEdges = 0L)
+    val (viaStar, p2) = Components.routed(df, "a", "b",
+      upfrontLocalMaxEdges = 0L, localSolveMaxEdges = 0L)
     assert(p1 == "star" && p2 == "star")
     val mLocal = viaLocal.as[(Long, Long)].collect().toMap
     val mStar = viaStar.as[(Long, Long)].collect().toMap
@@ -207,6 +214,38 @@ class ComponentsSpec extends SparkTestBase {
     assert((0L to 150L).forall(mLocal(_) == 0L))
     assert(Seq(500L, 501L, 502L).forall(mLocal(_) == 500L),
       "settled-clique labels survive the left-join fallback")
+  }
+
+  test("job budget per route: one barrier per round, no separate stop-signal job") {
+    val cliques = (0L until 10L).flatMap { c =>
+      val ids = (0L until 4L).map(c * 100 + _)
+      for (a <- ids; b <- ids if a < b) yield (a, b)
+    }.toDF("a", "b")
+    val path = (n: Long) => (0L until n).map(i => (i, i + 1))
+    val strings = (0 until 60).map(i => (f"n$i%03d", f"n${i + 1}%03d")).toDF("a", "b")
+    // (name, run, expected route, budget); counted warm, labels collected
+    val cases = Seq[(String, () => (DataFrame, String), String, Int)](
+      ("local", () => Components.routed(cliques, "a", "b"), "local", 6),
+      ("minprop", () => Components.routed(cliques, "a", "b", upfrontLocalMaxEdges = 0L),
+        "minprop", 7),
+      ("star + local endgame", () => Components.routed(path(120).toDF("a", "b"), "a", "b",
+        upfrontLocalMaxEdges = 0L), "star", 18),
+      ("distributed star", () => Components.routed(
+        (path(150) ++ Seq((500L, 501L), (501L, 502L), (500L, 502L))).toDF("a", "b"), "a", "b",
+        upfrontLocalMaxEdges = 0L, localSolveMaxEdges = 0L), "star", 92),
+      ("string ids", () => Components.routed(strings, "a", "b"), "minprop", 185))
+    cases.foreach { case (name, run, expected, budget) =>
+      run()._1.collect()
+      var picked = ""
+      val jobs = jobsOf(s"components-$name") {
+        val (labels, route) = run()
+        labels.collect()
+        picked = route
+      }
+      info(s"$name: $jobs jobs")
+      assert(picked == expected, name)
+      assert(jobs <= budget, s"$name launched $jobs jobs, over its budget of $budget")
+    }
   }
 
   test("star fixpoint signature is collision-proof: the ADVICE pair of edge sets") {

@@ -51,6 +51,17 @@ class LabelPropSpec extends SparkTestBase {
     assert(moved == 0L, "propagate's result must be a step fixpoint")
   }
 
+  test("job budget: one barrier per round on the two-clique graph") {
+    val a = adj(Seq((1L, 2L), (2L, 3L), (1L, 3L),
+      (10L, 11L), (11L, 12L), (10L, 12L), (3L, 10L)))
+    LabelProp.propagate(a).labels.collect()
+    val jobs = jobsOf("label-prop-budget") {
+      LabelProp.propagate(a).labels.collect()
+    }
+    info(s"$jobs jobs")
+    assert(jobs <= 23, s"propagate launched $jobs jobs, over its budget of 23")
+  }
+
   test("maxRounds bounds a pathological run") {
     val a = adj(Seq((1L, 2L)))
     val r = LabelProp.propagate(a, maxRounds = 1)
