@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Ad-hoc plan/time profiler for local iteration (not part of the
   * library surface).
@@ -44,176 +43,6 @@ object Prof {
           println(f"$name%-40s ${math.min(once, once)}%8.3f s")
         }
         args.drop(1).foreach(n => time(n)(SparkEntry.queries(n)(spark, dir)))
-      case "floor" =>
-        // per-exec fixed-cost isolation: what does ONE table() call pay
-        // (listing is session-cached; schema inference reads footers
-        // per spark.read.parquet call), and what does a minimal
-        // file-backed noop exec cost end to end?
-        def ms[A](n: Int)(f: => A): Double = {
-          f // warm
-          val t0 = System.nanoTime(); (1 to n).foreach(_ => f)
-          (System.nanoTime() - t0) / 1e6 / n
-        }
-        val rd = ms(40)(spark.read.parquet(s"$dir/lineitem.parquet").schema)
-        val tb = ms(40)(graft.sources.ViewingData.table(spark, dir, "lineitem").schema)
-        val ev = ms(40)(graft.sources.ViewingData.table(spark, dir, "events").schema)
-        val ex = ms(10) {
-          graft.sources.ViewingData.table(spark, dir, "region")
-            .select(col("r_regionkey"))
-            .write.format("noop").mode("overwrite").save()
-        }
-        println(f"FLOOR read.parquet(lineitem).schema: $rd%.1f ms; table(lineitem): $tb%.1f ms; table(events): $ev%.1f ms; trivial exec: $ex%.1f ms")
-      case "icws" =>
-        // signature-build isolation (r12: the dim-join rewrite)
-        val docs = graft.sources.ViewingData.table(spark, dir, "documents")
-          .repartition(spark.sparkContext.defaultParallelism)
-          .select(col("doc_id"), col("text")).localCheckpoint()
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.operators.Icws.signatures(docs, "doc_id", "text", 16)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once()
-        println(f"ICWS signatures: ${(1 to 3).map(_ => once()).min}%.3f s")
-        graft.operators.Icws.signatures(docs, "doc_id", "text", 16)
-          .explain("formatted")
-      case "pfx" =>
-        // dedup_prefix_filter stage split (r13 measure-first): where do
-        // the ~3 s go — gram-set build, candidate generation (universe
-        // shuffle + ranked agg + prefix self-join), or exact verify?
-        // Restates PrefixFilter.pairs' stages for timing only; the
-        // operator stays the single source of truth.
-        val docs = graft.sources.ViewingData.table(spark, dir, "documents")
-        def t(label: String)(f: => Unit): Unit = {
-          f // warm
-          val t0 = System.nanoTime(); f
-          println(f"PFX $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        }
-        val sets0 = docs.select(col("doc_id"), split(col("text"), " ").as("__ws"))
-          .filter(size(col("__ws")) >= 3)
-          .select(col("doc_id"), array_distinct(expr(
-            """transform(sequence(0, size(__ws) - 3),
-               i -> array_join(slice(__ws, i + 1, 3), ' '))""")).as("grams"))
-        t("sets build (no ckpt)") {
-          sets0.write.format("noop").mode("overwrite").save()
-        }
-        val sets = sets0.localCheckpoint()
-        val tau = 0.5
-        val dfTab = sets.select(explode(col("grams")).as("gram"))
-          .groupBy("gram").agg(count(lit(1)).as("df"))
-        t("dfTab") { dfTab.write.format("noop").mode("overwrite").save() }
-        val universe = sets.select(col("doc_id"), explode(col("grams")).as("gram"))
-          .join(broadcast(dfTab), "gram")
-        val ranked = universe
-          .groupBy("doc_id")
-          .agg(sort_array(collect_list(struct(col("df"), col("gram"))))
-            .as("ordered"), count(lit(1)).as("n"))
-          .select(col("doc_id"), col("n"),
-            expr("transform(ordered, x -> x.gram)").as("sorted_grams"))
-          .withColumn("__k0", floor(col("n") * tau))
-          .withColumn("__minov",
-            when(col("__k0") / col("n") >= tau, col("__k0"))
-              .otherwise(col("__k0") + 1))
-          .withColumn("prefix", slice(col("sorted_grams"), lit(1),
-            greatest(lit(0),
-              (size(col("sorted_grams")) - col("__minov") + 1).cast("int"))))
-        t("ranked (universe+agg)") {
-          ranked.write.format("noop").mode("overwrite").save()
-        }
-        val pref = ranked.select(col("doc_id"), col("n"),
-          posexplode(col("prefix")).as(Seq("pos", "gram")))
-        val cand = pref.select(col("gram"), col("doc_id").as("id_a"),
-            col("n").as("na"), col("pos").as("pa"))
-          .join(pref.select(col("gram"), col("doc_id").as("id_b"),
-            col("n").as("nb"), col("pos").as("pb")), "gram")
-          .filter(col("id_a") < col("id_b") &&
-            col("nb") / col("na") >= tau && col("na") / col("nb") >= tau)
-          .groupBy("id_a", "id_b")
-          .agg(min("pa").as("pa"), min("pb").as("pb"),
-            min("na").as("na"), min("nb").as("nb"))
-          .withColumn("bound", least(col("na") - col("pa"), col("nb") - col("pb")))
-          .filter(col("bound") / (col("na") + col("nb") - col("bound")) >= tau)
-          .select("id_a", "id_b")
-        t("cand (prefix self-join)") {
-          cand.write.format("noop").mode("overwrite").save()
-        }
-        val a = sets.select(col("doc_id").as("id_a"), col("grams").as("ga"))
-        val b = sets.select(col("doc_id").as("id_b"), col("grams").as("gb"))
-        val out = cand.join(a, "id_a").join(b, "id_b")
-          .withColumn("inter", size(array_intersect(col("ga"), col("gb"))))
-          .filter(col("inter") /
-            (size(col("ga")) + size(col("gb")) - col("inter")) >= tau)
-          .select("id_a", "id_b")
-        t("verify (full)") { out.write.format("noop").mode("overwrite").save() }
-      case "lsh" =>
-        // dedup_lsh_tuning stage split (r13 measure-first): grams
-        // checkpoint vs exact truth vs signature build vs band sweep.
-        def tl(label: String)(f: => Unit): Unit = {
-          f // warm
-          val t0 = System.nanoTime(); f
-          println(f"LSH $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        }
-        val (docsL, gramsL, qsL) = graft.QueriesML.lshTuningGramsAndSample(spark, dir)
-        tl("truth (from ckpt grams)") {
-          graft.QueriesML.lshTuningTruth(gramsL, qsL)
-            .write.format("noop").mode("overwrite").save()
-        }
-        tl("sig build") {
-          graft.functions.HashFunctions
-            .md5MinhashSignaturesText(docsL, "doc_id", "text", 5, 16)
-            .write.format("noop").mode("overwrite").save()
-        }
-        val sigL = graft.functions.HashFunctions
-          .md5MinhashSignaturesText(docsL, "doc_id", "text", 5, 16)
-          .localCheckpoint()
-        tl("bandAll (4 configs)") {
-          Seq(16, 8, 4, 2).map { r =>
-            sigL.select(lit(r.toLong).as("rows_per_band"), col("doc_id"),
-              explode(graft.functions.HashFunctions
-                .md5Bands(col("sig"), 16 / r, r)).as("bk"))
-          }.reduce(_ unionAll _).write.format("noop").mode("overwrite").save()
-        }
-      case "compactsweep" =>
-        // Probe cost vs batch-dir fragmentation (r11: the streaming
-        // loops' in-loop compaction claim) — seed an ICWS band index,
-        // append N tiny batches, time the incremental probe on the
-        // fragmented layout, compact, time again on the folded one.
-        import graft.operators.IcwsDelta
-        import org.apache.spark.sql.functions.col
-        val n = args.lift(1).map(_.toInt).getOrElse(40)
-        val base = java.nio.file.Files.createTempDirectory("compactsweep").toString
-        val idx = s"$base/idx"
-        val docs = graft.sources.ViewingData.table(spark, dir, "documents")
-          .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-          .localCheckpoint()
-        val standing = docs.filter(col("doc_id") % 4 =!= 0)
-        val delta = docs.filter(col("doc_id") % 4 === 0).localCheckpoint()
-        IcwsDelta.seedBatch(standing, "doc_id", "text", idx)
-        // fragment: n slivers of the standing corpus re-appended as
-        // micro-batches (content irrelevant — dir/file count is the
-        // variable under test)
-        (0 until n).foreach { i =>
-          IcwsDelta.writeBatch(
-            standing.filter(col("doc_id") % (4L * n) === 4L * i + 1),
-            "doc_id", "text", idx, i.toLong)
-        }
-        def probeSec(): Double = {
-          val t0 = System.nanoTime()
-          IcwsDelta.incrementalCandidates(delta, "doc_id", "text",
-              IcwsDelta.readIndex(spark, idx))
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        def batchDirs() = new java.io.File(idx).listFiles()
-          .count(f => f.isDirectory && f.getName.startsWith("batch="))
-        probeSec() // warm
-        val frag = (1 to 3).map(_ => probeSec()).min
-        val dirsBefore = batchDirs()
-        IcwsDelta.compactIndex(spark, idx)
-        val compacted = (1 to 3).map(_ => probeSec()).min
-        val dirsAfter = batchDirs()
-        println(f"COMPACTSWEEP icws: $dirsBefore%d dirs ${frag}%.2f s -> $dirsAfter%d dirs ${compacted}%.2f s")
     }
     spark.stop()
   }

@@ -906,7 +906,7 @@ GROUP BY l_orderkey"""))
           to_date(col("o_orderdate")).as("t"), col("o_orderkey"))
         .groupBy("k", "t").agg(max("o_orderkey").as("ref_order"))
         .withColumn("ref_odate", col("t").cast("string"))
-      operators.AsOfJoin.nearestBefore(ev, r, "k", "t", Seq("ref_order", "ref_odate"))
+      operators.AsOfJoin.nearestBefore(ev, r, Seq("k"), "t", Seq("ref_order", "ref_odate"))
         .select("event_id", "k", "ref_order", "ref_odate")
     },
     Some("""WITH ev AS (SELECT event_id, user_id AS k, CAST(ts AS DATE) AS t FROM events),
@@ -929,7 +929,8 @@ FROM ev e ASOF LEFT JOIN r ON e.k = r.k AND e.t >= r.rt"""))
           to_date(col("o_orderdate")).as("t"), col("o_orderkey"))
         .groupBy("k", "t").agg(max("o_orderkey").as("ref_order"))
         .withColumn("ref_odate", col("t").cast("string"))
-      operators.AsOfJoin.nearestBeforeBroadcast(ev, r, "k", "t", Seq("ref_order", "ref_odate"))
+      operators.AsOfJoin.broadcastAsOf(ev, r, Seq("k"), "t", Seq("ref_order", "ref_odate"),
+          forward = false)
         .select("event_id", "k", "ref_order", "ref_odate")
     },
     Some("""WITH ev AS (SELECT event_id, user_id AS k, CAST(ts AS DATE) AS t FROM events),
@@ -958,7 +959,7 @@ FROM ev e ASOF LEFT JOIN r ON e.k = r.k AND e.t >= r.rt"""))
           to_date(col("o_orderdate")).as("t"), col("o_orderkey"))
         .groupBy("k", "t").agg(max("o_orderkey").as("ref_order"))
         .withColumn("ref_odate", col("t").cast("string"))
-      operators.AsOfJoin.nearestBeforeWithin(ev, r, "k", "t",
+      operators.AsOfJoin.nearestBeforeWithin(ev, r, Seq("k"), "t",
           Seq("ref_order", "ref_odate"),
           stale = (l, m) => datediff(l, m) > 7)
         .select("event_id", "k", "ref_order", "ref_odate")
@@ -1167,7 +1168,8 @@ FROM final GROUP BY grp"""))
           concat(lit("P"), (col("o_orderkey") % 3).cast("string")).as("cls"),
           to_date(col("o_orderdate")).as("t"), col("o_orderkey"))
         .groupBy("k", "cls", "t").agg(max("o_orderkey").as("ref_order"))
-      operators.AsOfJoin.nearestBeforeBroadcast(ev, r, Seq("k", "cls"), "t", Seq("ref_order"))
+      operators.AsOfJoin.broadcastAsOf(ev, r, Seq("k", "cls"), "t", Seq("ref_order"),
+          forward = false)
         .select("event_id", "k", "cls", "ref_order")
     },
     Some("""WITH ev AS (SELECT event_id, user_id AS k,

@@ -504,7 +504,7 @@ FROM d GROUP BY 1, 2"""))
         .withColumn("c_ts", col("t"))
       val window = 604800L // 7 days
       operators.AsOfJoin
-        .nearestBefore(p, c, "user_id", "t", Seq("click_id", "c_ts"))
+        .nearestBefore(p, c, Seq("user_id"), "t", Seq("click_id", "c_ts"))
         .withColumn("age", col("t") - col("c_ts"))
         .select(col("event_id"), col("user_id"),
           when(col("c_ts").isNotNull && col("age") <= window,

@@ -1,69 +1,55 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, MapType, StructType, TimestampNTZType, TimestampType}
 
 /** As-of join: each left row picks the right row with the greatest
   * timestamp <= its own, per key — the time-series join Spark has no
   * built-in operator for (PanelAsOf is its calendar-window cousin).
   *
-  * Implementation is the union+window form, not a range join: tag the
-  * sides, union, sort each key group by (ts, side) with right rows
+  * [[nearestBefore]] is the one backward entry point, and it has one
+  * plan: the union+window form (Vogelsgesang et al., SIGMOD 2022).
+  * Tag the sides, union, sort each key group by (ts, side), right rows
   * first at equal ts, and carry right payloads forward with
-  * last(ignoreNulls). ONE shuffle on the key, O(n log n) per group, no
-  * row duplication — a range join would replicate every left row per
-  * candidate right row before aggregating, which at 100 TB is the
-  * difference between a working join and an exploding one.
+  * last(ignoreNulls). ONE shuffle on the key and no row duplication,
+  * where a range join replicates every left row per candidate right
+  * row before aggregating.
   *
-  * The carry columns are packed into a single struct and carried
-  * forward with ONE last(ignoreNulls=true): the struct itself is
-  * non-null on every right row, so the matched row's payload — nulls
-  * included — arrives atomically. Filling each column independently
-  * would substitute stale values for per-column nulls and could tear
-  * a row across different right ancestors.
+  * A NULL key or time never matches (SQL equality, as DuckDB's ASOF
+  * LEFT JOIN): such right rows are dropped, such left rows carry NULLs;
+  * duplicate right rows at one (key, ts) resolve to the max carry when
+  * its type is orderable (maps aren't). The carry columns travel as
+  * ONE struct, so the matched row's payload — nulls included — arrives
+  * atomically; a per-column fill could tear a row across different
+  * right ancestors. `rightCarry` names must not collide with left
+  * columns.
   *
-  * Requirements: `rightCarry` column names must not collide with left
-  * columns, and the right side should be unique per (key, ts) — ties
-  * there have no defined winner (pre-aggregate, e.g. max per key+ts).
+  * The broadcast probe ([[graft.plans.BroadcastAsOfJoin]]) returns the
+  * same rows but is not a route of [[nearestBefore]]: in paired runs
+  * (4 vCPU) it lost to the union+window form on three of four registry
+  * as-of rows at a x10 replica of sf0.1, right sides well under any
+  * broadcast limit, so a size rule would pick the slower plan. It
+  * serves [[nearestAfterBroadcast]], and [[broadcastAsOf]] keeps the
+  * backward probe open to the registry rows and specs that check it.
   */
 object AsOfJoin {
 
-  /** (ts, side[, carry]) window ordering: the carry struct joins as a
-    * deterministic tiebreak when its type is orderable (maps aren't);
-    * null carries (left rows) sort first so the right-before-left
-    * equal-ts rule is untouched. */
-  private def orderWithCarryTiebreak(
-      tsCol: String, carryType: org.apache.spark.sql.types.DataType): Seq[Column] =
-    if (org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(carryType))
-      Seq(col(tsCol), col("__side"), col("__carry").asc_nulls_first)
-    else Seq(col(tsCol), col("__side"))
+  private val IndexTimeTypes: Set[DataType] =
+    Set(DateType, IntegerType, LongType, TimestampType, TimestampNTZType)
 
   def nearestBefore(
       left: DataFrame,
       right: DataFrame,
-      keyCol: String,
+      keyCols: Seq[String],
       tsCol: String,
       rightCarry: Seq[String]): DataFrame = {
-    require(rightCarry.nonEmpty, "rightCarry must name at least one column")
-    require(!rightCarry.exists(left.columns.contains),
-      s"carry columns ${rightCarry.mkString(",")} collide with left columns")
-
-    val r0 = right.select(col(keyCol), col(tsCol),
-      struct(rightCarry.map(col): _*).as("__carry"))
-      .withColumn("__side", lit(0))
-    val l = left.withColumn("__side", lit(1))
-      .withColumn("__carry", lit(null).cast(r0.schema("__carry").dataType))
-    val u = l.unionByName(r0, allowMissingColumns = true)
-
-    // same discipline as nearestClosest: when the carry struct is
-    // orderable it joins the ordering, so right-side duplicates at one
-    // (key, ts) — a contract violation, but one that must not be
-    // shuffle-order-dependent — resolve to the max carry every run
-    val w = Window.partitionBy(keyCol)
-      .orderBy(orderWithCarryTiebreak(tsCol, r0.schema("__carry").dataType): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    u.withColumn("__carry", last(col("__carry"), ignoreNulls = true).over(w))
+    requireArgs(left, keyCols, rightCarry)
+    val (u, w) = tagged(left, right, keyCols, tsCol, rightCarry.map(col))
+    u.withColumn("__carry", last(col("__carry"), ignoreNulls = true)
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .filter(col("__side") === 1)
       .select(left.columns.map(col) ++
         rightCarry.map(c => col(s"__carry.$c").as(c)): _*)
@@ -76,21 +62,20 @@ object AsOfJoin {
     * carries month-old state forward is usually a bug, not a join).
     * `stale(leftTs, matchedTs)` returns true when the match is TOO
     * old — the caller states the clock arithmetic (datediff, epoch
-    * subtraction), so the operator stays type-agnostic. Same
-    * single-shuffle plan: the matched timestamp rides the carry
-    * struct and the bound is a scan-speed projection after the fill. */
+    * subtraction), so the operator stays type-agnostic. The matched
+    * timestamp rides the carry struct (still one shuffle) and the
+    * bound is a scan-speed projection after the join. */
   def nearestBeforeWithin(
       left: DataFrame,
       right: DataFrame,
-      keyCol: String,
+      keyCols: Seq[String],
       tsCol: String,
       rightCarry: Seq[String],
-      stale: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-        org.apache.spark.sql.Column): DataFrame = {
+      stale: (Column, Column) => Column): DataFrame = {
     val rtCol = "__asof_rt"
     val joined = nearestBefore(
       left, right.withColumn(rtCol, col(tsCol)),
-      keyCol, tsCol, rightCarry :+ rtCol)
+      keyCols, tsCol, rightCarry :+ rtCol)
     val tooStale = col(rtCol).isNull || stale(col(tsCol), col(rtCol))
     rightCarry.foldLeft(joined)((d, c) =>
         d.withColumn(c, when(tooStale, lit(null)).otherwise(col(c))))
@@ -102,43 +87,23 @@ object AsOfJoin {
     * sensor alignment and event-to-snapshot matching where "latest
     * prior" is wrong half the time. One union + TWO windows on the
     * SAME (key, ts, side) ordering — Catalyst plans them on one
-    * exchange/sort, so the cost is [[nearestBefore]] plus a second
-    * window function, not a second shuffle. The matched timestamp
-    * rides each carry struct; `dist(leftTs, matchedTs)` supplies the
-    * orderable distance (datediff, abs epoch delta — caller's clock,
-    * operator stays type-agnostic). */
+    * exchange/sort, so the cost is [[nearestBefore]] plus
+    * a second window function, not a second shuffle. The matched
+    * timestamp rides each carry struct; `dist(leftTs, matchedTs)`
+    * supplies the orderable distance (datediff, abs epoch delta —
+    * caller's clock, operator stays type-agnostic). NULL keys and
+    * times never match; duplicate right rows at one (key, ts) resolve
+    * to the max carry before and the min carry after. */
   def nearestClosest(
       left: DataFrame,
       right: DataFrame,
       keyCol: String,
       tsCol: String,
       rightCarry: Seq[String],
-      dist: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-        org.apache.spark.sql.Column): DataFrame = {
-    require(rightCarry.nonEmpty, "rightCarry must name at least one column")
-    require(!rightCarry.exists(left.columns.contains),
-      s"carry columns ${rightCarry.mkString(",")} collide with left columns")
-    val r0 = right.select(col(keyCol), col(tsCol),
-      struct(col(tsCol).as("__rt") +: rightCarry.map(col): _*).as("__carry"))
-      .withColumn("__side", lit(0))
-    val l = left.withColumn("__side", lit(1))
-      .withColumn("__carry", lit(null).cast(r0.schema("__carry").dataType))
-    val u = l.unionByName(r0, allowMissingColumns = true)
-    // right rows sort BEFORE left at an equal instant: an equal-ts
-    // match lands in the "before" window at distance 0 and wins any
-    // tie — merge_asof's own equal-timestamp rule. The carry struct
-    // itself is the THIRD ordering key (when its type is orderable):
-    // duplicate right rows at the same (key, ts) then resolve to the
-    // max-carry row on every run, instead of whichever the shuffle
-    // happened to deliver last. Null carries (left rows) sort first,
-    // so the side rule above is untouched.
-    val carryOrderable = org.apache.spark.sql.catalyst.expressions
-      .RowOrdering.isOrderable(r0.schema("__carry").dataType)
-    val ordCols =
-      if (carryOrderable)
-        Seq(col(tsCol), col("__side"), col("__carry").asc_nulls_first)
-      else Seq(col(tsCol), col("__side"))
-    val ord = Window.partitionBy(keyCol).orderBy(ordCols: _*)
+      dist: (Column, Column) => Column): DataFrame = {
+    requireArgs(left, Seq(keyCol), rightCarry)
+    val (u, ord) = tagged(left, right, Seq(keyCol), tsCol,
+      col(tsCol).as("__rt") +: rightCarry.map(col))
     val wb = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wa = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     u.withColumn("__b", last(col("__carry"), ignoreNulls = true).over(wb))
@@ -154,56 +119,12 @@ object AsOfJoin {
         rightCarry.map(c => col(s"__pick.$c").as(c)): _*)
   }
 
-  /** [[nearestBefore]] as the custom BROADCAST physical operator
-    * ([[graft.plans.BroadcastAsOfJoin]]): same semantics, but the left
-    * (fact) side is NEVER shuffled or sorted — each row probes a
-    * broadcast per-key sorted index. Use when the right side is
-    * dimension-sized (it is broadcast in full); fall back to
-    * `nearestBefore` when both sides are large. */
-  def nearestBeforeBroadcast(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      tsCol: String,
-      rightCarry: Seq[String]): DataFrame =
-    broadcastAsOf(left, right, Seq(keyCol), tsCol, rightCarry, forward = false)
-
-  /** Size-routed as-of: picks the broadcast probe for dimension-sized
-    * right sides and the union+window form beyond `maxBroadcastBytes`
-    * (default 128 MiB — an index comfortably inside executor memory),
-    * using Catalyst's size estimate so NO job runs to decide — the
-    * same discipline as Spark's autoBroadcastJoinThreshold. This is
-    * the r6 decade-sweep crossover guidance as code: the broadcast
-    * probe wins while the per-executor index fits (zero fact
-    * exchange); past that, the shuffled form's one fact exchange is
-    * the plan that survives. */
-  def nearestBeforeAuto(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      tsCol: String,
-      rightCarry: Seq[String],
-      maxBroadcastBytes: Long = 128L << 20): DataFrame = {
-    val est = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(maxBroadcastBytes))
-      nearestBeforeBroadcast(left, right, keyCol, tsCol, rightCarry)
-    else nearestBefore(left, right, keyCol, tsCol, rightCarry)
-  }
-
-  /** Multi-column-key form: the as-of key is the tuple of `keyCols`
-    * (e.g. (hh_id, title, content_id) for per-content rate cards). */
-  def nearestBeforeBroadcast(
-      left: DataFrame,
-      right: DataFrame,
-      keyCols: Seq[String],
-      tsCol: String,
-      rightCarry: Seq[String]): DataFrame =
-    broadcastAsOf(left, right, keyCols, tsCol, rightCarry, forward = false)
-
   /** Forward as-of: each left row picks the right row with the LEAST
     * timestamp >= its own, per key (DuckDB `ASOF ... ON l.t <= r.t`) —
-    * next scheduled airing, next price change. Same broadcast
-    * zero-fact-exchange plan; the probe is a ceiling search. */
+    * next scheduled airing, next price change. The broadcast
+    * zero-fact-exchange plan with a ceiling search; duplicate right
+    * rows at one (key, ts) resolve to the min carry. Inputs must pass
+    * [[broadcastAsOf]]'s type check. */
   def nearestAfterBroadcast(
       left: DataFrame,
       right: DataFrame,
@@ -212,17 +133,59 @@ object AsOfJoin {
       rightCarry: Seq[String]): DataFrame =
     broadcastAsOf(left, right, Seq(keyCol), tsCol, rightCarry, forward = true)
 
-  private def broadcastAsOf(
+  private def requireArgs(left: DataFrame, keyCols: Seq[String], rightCarry: Seq[String]): Unit = {
+    require(keyCols.nonEmpty, "at least one key column required")
+    require(rightCarry.nonEmpty, "rightCarry must name at least one column")
+    require(!rightCarry.exists(left.columns.contains),
+      s"carry columns ${rightCarry.mkString(",")} collide with left columns")
+  }
+
+  /** The tagged union both shuffled forms window over: left rows get
+    * `__side` 1 and a NULL `__carry`, right rows `__side` 0 and the
+    * struct of `carry`. Right rows with a NULL key or time are dropped:
+    * under SQL equality they can never match. The window orders each
+    * key by [[orderWithCarryTiebreak]]. */
+  private def tagged(
+      left: DataFrame,
+      right: DataFrame,
+      keyCols: Seq[String],
+      tsCol: String,
+      carry: Seq[Column]): (DataFrame, WindowSpec) = {
+    val r = right
+      .filter((tsCol +: keyCols).map(col(_).isNotNull).reduce(_ && _))
+      .select(keyCols.map(col) ++ Seq(col(tsCol), struct(carry: _*).as("__carry")): _*)
+      .withColumn("__side", lit(0))
+    val carryType = r.schema("__carry").dataType
+    val l = left.withColumn("__side", lit(1))
+      .withColumn("__carry", lit(null).cast(carryType))
+    (l.unionByName(r, allowMissingColumns = true),
+      Window.partitionBy(keyCols.map(col): _*)
+        .orderBy(orderWithCarryTiebreak(tsCol, carryType): _*))
+  }
+
+  /** (ts, side[, carry]) window ordering: right rows sort before left at
+    * an equal instant, and the carry struct joins as a tiebreak when its
+    * type is orderable (maps aren't), so duplicate right rows at one
+    * (key, ts) resolve the same way on every run instead of by shuffle
+    * delivery order. Null carries (left rows) sort first, so the side
+    * rule is untouched. */
+  private def orderWithCarryTiebreak(tsCol: String, carryType: DataType): Seq[Column] =
+    if (RowOrdering.isOrderable(carryType))
+      Seq(col(tsCol), col("__side"), col("__carry").asc_nulls_first)
+    else Seq(col(tsCol), col("__side"))
+
+  /** The broadcast probe: each left row searches a per-key sorted
+    * index of the right side (floor backward, ceiling forward) — zero
+    * exchange and zero sort on the fact side. Same rows as the
+    * union+window form, for inputs [[indexable]] accepts. */
+  private[graft] def broadcastAsOf(
       left: DataFrame,
       right: DataFrame,
       keyCols: Seq[String],
       tsCol: String,
       rightCarry: Seq[String],
       forward: Boolean): DataFrame = {
-    require(keyCols.nonEmpty, "at least one key column required")
-    require(rightCarry.nonEmpty, "rightCarry must name at least one column")
-    require(!rightCarry.exists(left.columns.contains),
-      s"carry columns ${rightCarry.mkString(",")} collide with left columns")
+    requireArgs(left, keyCols, rightCarry)
     val spark = left.sparkSession
     graft.plans.GraftExtensions.register(spark)
     // Fresh-alias every right column so its exprIds can never collide
@@ -243,14 +206,28 @@ object AsOfJoin {
     }
     val lKeys = keyCols.map(lAttr)
     val lt = lAttr(tsCol)
-    lKeys.zip(rKeys).foreach { case (l, r) =>
-      require(l.dataType == r.dataType,
-        s"as-of key types differ for ${l.name}: ${l.dataType} vs ${r.dataType}")
-    }
-    require(lt.dataType == rTime.dataType,
-      s"as-of time types differ: ${lt.dataType} vs ${rTime.dataType}")
+    val (lTypes, rTypes) = ((lt +: lKeys).map(_.dataType), (rTime +: rKeys).map(_.dataType))
+    require(indexable(lTypes, rTypes),
+      s"broadcast as-of needs equal (time, key) types, an integral time and no " +
+        s"float/double inside a key: $lTypes vs $rTypes")
     org.apache.spark.sql.graft.PlanBridge.dataFrame(spark,
       graft.plans.BroadcastAsOfJoin(lKeys, lt, rKeys, rTime, rCarry, forward,
         lplan, rplan))
+  }
+
+  /** (time +: key) types the index serves with SQL-equality semantics:
+    * equal on both sides, a date/int/bigint/timestamp(_ntz) time (the
+    * index stores longs), and no float/double anywhere inside a key —
+    * SQL equality and window partitioning normalize -0.0 and NaN,
+    * nested ones included; the index compares key bytes. */
+  private def indexable(left: Seq[DataType], right: Seq[DataType]): Boolean = {
+    def floating(t: DataType): Boolean = t match {
+      case FloatType | DoubleType => true
+      case s: StructType => s.fields.exists(f => floating(f.dataType))
+      case a: ArrayType => floating(a.elementType)
+      case m: MapType => floating(m.keyType) || floating(m.valueType)
+      case _ => false
+    }
+    left == right && IndexTimeTypes(left.head) && !left.tail.exists(floating)
   }
 }

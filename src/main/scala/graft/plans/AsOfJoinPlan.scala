@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, GenericInternalRow, InterpretedOrdering, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, BroadcastMode, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
@@ -29,11 +29,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * shows no Exchange above the scan). That plan is not expressible by
   * composing existing operators: a broadcast range join explodes
   * every fact row across all <= candidates before re-aggregating.
+  * Measured, the saving has not yet shown: the probe lost to the
+  * union+window form on three of four registry as-of rows at a x10
+  * replica of sf0.1 (4 vCPU), so it is not a route of `nearestBefore`.
   *
   * Semantics match `nearestBefore`: greatest right time <= left time
   * per key; unmatched (or NULL key/time) left rows carry NULLs; right
-  * rows with NULL key/time never match; the right side must be unique
-  * per (key, time) — ties have no defined winner there.
+  * rows with NULL key/time never match; duplicate right rows at one
+  * (key, time) resolve to the max carry backward and the min carry
+  * forward when the carry type is orderable ([[AsOfIndexMode]] sorts
+  * each key by (time, carry)).
   */
 case class BroadcastAsOfJoin(
     leftKeys: Seq[Attribute],
@@ -205,6 +210,11 @@ case class AsOfIndexMode(
           ((t, carryProj(r).copy()))
       }
     }
+    // (time, carry) order when the carry is orderable: the floor probe
+    // lands on the max carry among equal times, the ceiling on the min
+    val byTime = Ordering.by[(Long, UnsafeRow), Long](_._1)
+    val entryOrd = if (!carryTypes.forall(RowOrdering.isOrderable)) byTime
+      else byTime.orElseBy(_._2)(InterpretedOrdering.forSchema(carryTypes).on[UnsafeRow](r => r))
     // blob layout: int keyMode | int nKeys | per key:
     //   key (mode 0: long; mode 1/2: int len + bytes)
     //   int n | n× long time (sorted asc) | n× (int len + row bytes)
@@ -222,7 +232,7 @@ case class AsOfIndexMode(
           val kr = k.asInstanceOf[UnsafeRow]
           out.writeInt(kr.getSizeInBytes); out.write(kr.getBytes)
       }
-      val sorted = buf.sortBy(_._1)
+      val sorted = buf.sorted(entryOrd)
       out.writeInt(sorted.length)
       sorted.foreach(e => out.writeLong(e._1))
       sorted.foreach { e =>

@@ -44,10 +44,10 @@ object ViewingData {
     * catalog role Spark's metastore-backed tables play for managed
     * data. A bare `spark.read.parquet(path)` re-resolves the
     * DataSource, re-lists the directory, and re-reads the footer for
-    * schema inference on EVERY call — measured ~70-90 ms per call on
-    * this sandbox (graft.Prof floor), paid thousands of times across a
-    * bench/verify run for paths whose contents never change within a
-    * session. This caches ONLY metadata (the analyzed logical plan +
+    * schema inference on EVERY call — ~70-90 ms per call, measured in
+    * optimization round 12 (OPTIMIZATION_r12.md), paid thousands of
+    * times across a bench/verify run for paths whose contents never
+    * change within a session. This caches ONLY metadata (the analyzed logical plan +
     * file listing): every execution still scans the parquet data —
     * nothing about results or computed intermediates is reused.
     * Contract, unchanged from what callers already assumed: a source

@@ -26,8 +26,9 @@ class AsOfJoinNativeSpec extends SparkTestBase {
   ).toDF("k", "t", "tag", "w")
 
   test("broadcast as-of matches the union+window form row for row") {
-    val native = AsOfJoin.nearestBeforeBroadcast(leftDf, rightDf, "k", "t", Seq("tag", "w"))
-    val ref = AsOfJoin.nearestBefore(leftDf, rightDf, "k", "t", Seq("tag", "w"))
+    val native = AsOfJoin.broadcastAsOf(leftDf, rightDf, Seq("k"), "t", Seq("tag", "w"),
+      forward = false)
+    val ref = AsOfJoin.nearestBefore(leftDf, rightDf, Seq("k"), "t", Seq("tag", "w"))
     assert(native.columns.toSeq == ref.columns.toSeq)
     val n = native.orderBy("id").collect().toSeq
     assert(n == ref.orderBy("id").collect().toSeq)
@@ -43,14 +44,16 @@ class AsOfJoinNativeSpec extends SparkTestBase {
   test("NULL left key/time rows pass through with null carry") {
     val l = Seq((Some(10L), Some(100L)), (None: Option[Long], Some(100L)),
       (Some(10L), None: Option[Long])).toDF("k", "t")
-    val out = AsOfJoin.nearestBeforeBroadcast(l, rightDf, "k", "t", Seq("tag"))
+    val out = AsOfJoin.broadcastAsOf(l, rightDf, Seq("k"), "t", Seq("tag"),
+      forward = false)
     assert(out.count() == 3)
     assert(out.filter(col("tag").isNotNull).count() == 1)
   }
 
   test("plan: zero exchange, no sort, and codegen'd probe on the fact side") {
     withStrictCodegen {
-    val native = AsOfJoin.nearestBeforeBroadcast(leftDf, rightDf, "k", "t", Seq("tag"))
+    val native = AsOfJoin.broadcastAsOf(leftDf, rightDf, Seq("k"), "t", Seq("tag"),
+      forward = false)
     native.collect() // materialize through AQE
     val p = native.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastAsOfJoin"), p)
@@ -68,7 +71,8 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     val base = Seq((10L, 50L, 1L), (10L, 100L, 2L), (11L, 70L, 3L)).toDF("k", "t", "v")
     // each row finds the latest row at-or-before its own time: itself
     val prior = base.withColumnRenamed("v", "self_v")
-    val out = AsOfJoin.nearestBeforeBroadcast(base, prior, "k", "t", Seq("self_v"))
+    val out = AsOfJoin.broadcastAsOf(base, prior, Seq("k"), "t", Seq("self_v"),
+      forward = false)
     assert(out.count() == 3)
     assert(out.filter(col("v") === col("self_v")).count() == 3)
   }
@@ -99,7 +103,8 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       (10L, "x", 50L, "a"), (10L, "x", 200L, "b"),
       (10L, "y", 90L, "c")
     ).toDF("k1", "k2", "t", "tag")
-    val df = AsOfJoin.nearestBeforeBroadcast(l, r, Seq("k1", "k2"), "t", Seq("tag"))
+    val df = AsOfJoin.broadcastAsOf(l, r, Seq("k1", "k2"), "t", Seq("tag"),
+      forward = false)
     df.collect() // materialize through AQE before reading the plan
     val out = df.orderBy("id").collect().map(row => row.getLong(0) -> Option(row.get(4))).toMap
     assert(out(1L) == Some("a") && out(2L) == Some("c") && out(3L) == None &&
@@ -119,7 +124,8 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       .toDF("k", "t", "id")
     val r = Seq(("u1", 50L, "a"), ("u1", 200L, "b"), ("u2", 90L, "c"))
       .toDF("k", "t", "tag")
-    val out = AsOfJoin.nearestBeforeBroadcast(l, r, "k", "t", Seq("tag"))
+    val out = AsOfJoin.broadcastAsOf(l, r, Seq("k"), "t", Seq("tag"),
+      forward = false)
     out.collect()
     val p = out.queryExecution.executedPlan.toString
     assert("\\*\\(\\d+\\) BroadcastAsOfJoin".r.findFirstIn(p).isDefined,
@@ -138,7 +144,8 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     ).toDF("k", "t", "id")
     val r = Seq(("u1", 50L, "a"), ("u1", 200L, "b"), ("u2", 90L, "c"))
       .toDF("k", "t", "tag")
-    val back = AsOfJoin.nearestBeforeBroadcast(l, r, "k", "t", Seq("tag"))
+    val back = AsOfJoin.broadcastAsOf(l, r, Seq("k"), "t", Seq("tag"),
+      forward = false)
       .collect().map(row => row.getLong(2) -> Option(row.get(3))).toMap
     assert(back == Map(1L -> Some("b"), 2L -> None, 3L -> None, 4L -> None))
     val fwd = AsOfJoin.nearestAfterBroadcast(l, r, "k", "t", Seq("tag"))
@@ -155,7 +162,8 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     val facts = Seq((1L, 10L, 100L), (2L, 11L, 150L)).toDF("id", "k", "t")
     val dup = Seq((1L, "p"), (1L, "q"), (2L, "r"), (2L, "s")).toDF("id", "side")
     val enriched = facts.join(broadcast(dup), "id") // 2 rows per fact row
-    val out = AsOfJoin.nearestBeforeBroadcast(enriched, rightDf, "k", "t", Seq("tag"))
+    val out = AsOfJoin.broadcastAsOf(enriched, rightDf, Seq("k"), "t", Seq("tag"),
+      forward = false)
     val rows = out.collect()
     val p = out.queryExecution.executedPlan.toString
     // the hash join and the as-of probe must share ONE codegen span for
@@ -179,26 +187,25 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     }
   }
 
-  test("nearestBeforeAuto routes on the right side's size estimate") {
-    // dimension-sized right -> the broadcast probe (zero fact exchange)
-    val small = AsOfJoin.nearestBeforeAuto(leftDf, rightDf, "k", "t", Seq("tag"))
-    small.collect()
-    assert(small.queryExecution.executedPlan.toString.contains("BroadcastAsOfJoin"))
-    // force the estimate over a 1-byte ceiling -> union+window form
-    // (Window over the key, no custom operator)
-    val big = AsOfJoin.nearestBeforeAuto(leftDf, rightDf, "k", "t", Seq("tag"),
-      maxBroadcastBytes = 1L)
-    big.collect()
-    val p = big.queryExecution.executedPlan.toString
+  test("nearestBefore keeps the union+window plan on a dimension-sized right side") {
+    // no size routing: even a tiny right side takes the Window over the
+    // key, never the custom operator, and the rows match the probe's
+    val probe = AsOfJoin.broadcastAsOf(leftDf, rightDf, Seq("k"), "t", Seq("tag"),
+      forward = false)
+    probe.collect()
+    assert(probe.queryExecution.executedPlan.toString.contains("BroadcastAsOfJoin"))
+    val shuffled = AsOfJoin.nearestBefore(leftDf, rightDf, Seq("k"), "t", Seq("tag"))
+    shuffled.collect()
+    val p = shuffled.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastAsOfJoin") && p.contains("Window"), p)
-    // both routes produce identical rows
-    assert(small.exceptAll(big).isEmpty && big.exceptAll(small).isEmpty)
+    assert(probe.exceptAll(shuffled).isEmpty && shuffled.exceptAll(probe).isEmpty)
   }
 
   test("driver-built index: BroadcastExchange carries AsOfIndexMode, ships ONE blob row") {
     // the index is built once inside the exchange's collect thread
     // (like HashedRelation) — executors decode, they never group/sort
-    val native = AsOfJoin.nearestBeforeBroadcast(leftDf, rightDf, "k", "t", Seq("tag", "w"))
+    val native = AsOfJoin.broadcastAsOf(leftDf, rightDf, Seq("k"), "t", Seq("tag", "w"),
+      forward = false)
     native.collect()
     // AQE buries the exchange inside query stages — descend explicitly
     def deep(p: org.apache.spark.sql.execution.SparkPlan):
@@ -229,10 +236,12 @@ class AsOfJoinNativeSpec extends SparkTestBase {
 
   test("empty sides: empty right -> all null carry; empty left -> empty output") {
     val emptyR = rightDf.filter(col("k") === -1L)
-    val allNull = AsOfJoin.nearestBeforeBroadcast(leftDf, emptyR, "k", "t", Seq("tag", "w"))
+    val allNull = AsOfJoin.broadcastAsOf(leftDf, emptyR, Seq("k"), "t", Seq("tag", "w"),
+      forward = false)
     assert(allNull.count() == 5 && allNull.filter(col("tag").isNotNull).count() == 0)
     val emptyL = leftDf.filter(col("id") === -1L)
-    assert(AsOfJoin.nearestBeforeBroadcast(emptyL, rightDf, "k", "t", Seq("tag", "w"))
+    assert(AsOfJoin.broadcastAsOf(emptyL, rightDf, Seq("k"), "t", Seq("tag", "w"),
+        forward = false)
       .count() == 0)
   }
 
@@ -243,7 +252,8 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     val q = input.toDF().toDF("id", "k", "t").writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        AsOfJoin.nearestBeforeBroadcast(batch, rightDf, "k", "t", Seq("tag"))
+        AsOfJoin.broadcastAsOf(batch, rightDf, Seq("k"), "t", Seq("tag"),
+            forward = false)
           .write.mode("append").parquet(dir)
       }
       .start()
@@ -265,9 +275,10 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       .select(col("o_custkey").as("k"), to_date(col("o_orderdate")).as("t"),
         col("o_orderkey"))
       .groupBy("k", "t").agg(max("o_orderkey").as("ref_order"))
-    val a = AsOfJoin.nearestBeforeBroadcast(ev, r, "k", "t", Seq("ref_order"))
+    val a = AsOfJoin.broadcastAsOf(ev, r, Seq("k"), "t", Seq("ref_order"),
+      forward = false)
       .select("event_id", "ref_order")
-    val b = AsOfJoin.nearestBefore(ev, r, "k", "t", Seq("ref_order"))
+    val b = AsOfJoin.nearestBefore(ev, r, Seq("k"), "t", Seq("ref_order"))
       .select("event_id", "ref_order")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }

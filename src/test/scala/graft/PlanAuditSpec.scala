@@ -535,6 +535,14 @@ class PlanAuditSpec extends SparkTestBase {
     assert("hashpartitioning\\(k#\\d+L, \\d+\\)".r.findAllIn(p).size == 1, p)
   }
 
+  test("q_asof_join: one key-only exchange and no broadcast probe") {
+    val p = plan("q_asof_join")
+    // nearestBefore has one plan, the union+window form, whatever the
+    // right side's size: ONE key-only exchange, no custom operator
+    assert("hashpartitioning\\(k#\\d+L, \\d+\\)".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("BroadcastAsOfJoin"), p)
+  }
+
   test("q_geo_dbscan / q_geofence_events: no cartesian anywhere") {
     Seq("q_geo_dbscan", "q_geofence_events").foreach { q =>
       val p = plan(q)
