@@ -362,11 +362,11 @@ FROM golden g JOIN gpick p USING (canonical_id)
   /** Snowflake CONNECT BY (hierarchy traversal with
     * SYS_CONNECT_BY_PATH) over a deterministic tree derived from
     * documents (parent = doc_id/7, single root 0, depth ≤ 4):
-    * `operators.Hierarchy.connectBy` resolves one LEVEL per
-    * driver-coordinated join round — rounds bound by tree depth, not
-    * rows. Each round is one `operators.Barrier` whose own job counts
-    * what the level resolved, so this tree costs four barriers and the
-    * loop ends on the round that leaves nothing unresolved. Oracle is
+    * `operators.Hierarchy.connectBy` probes the node count and, since
+    * the tree fits its driver route (at most 2^16^ unique bigint ids),
+    * walks every parent chain on the driver and returns a local
+    * relation: one probe job, no join, no per-level barrier. A larger
+    * tree takes the barrier loop, one join round per level. Oracle is
     * the equivalent ANSI recursive CTE. */
   private val connectBy = Q(
     "q_connect_by",

@@ -888,19 +888,20 @@ GROUP BY 1, 2"""))
   private val rfmSegments = Q(
     "q_rfm_segments",
     (s, dir) => {
-      // ONE fact fold; the corpus max date derives from the folded
-      // entity table (max of per-user last dates), not a second scan
-      val per0 = ViewingData.table(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(max(to_date(col("ts"))).as("last_d"),
-          count(lit(1)).as("freq"),
-          sum(floor(col("value")).cast("long")).as("monetary"))
-        .localCheckpoint()
-      val maxd = per0.agg(max(col("last_d")).as("max_d"))
-      val per = per0.crossJoin(broadcast(maxd))
+      // ONE fact fold; the corpus max date is the max of the per-user
+      // last dates, observed on the fold's own barrier job and applied
+      // as a literal: no second scan, no aggregate, no cross join
+      val (per0, maxd) = operators.Barrier.materialize(
+        ViewingData.table(s, dir, "events")
+          .groupBy(col("user_id"))
+          .agg(max(to_date(col("ts"))).as("last_d"),
+            count(lit(1)).as("freq"),
+            sum(floor(col("value")).cast("long")).as("monetary")),
+        max(col("last_d")).as("max_d"))
+      val per = per0
         .withColumn("recency_days",
-          datediff(col("max_d"), col("last_d")).cast("long"))
-        .drop("max_d", "last_d")
+          datediff(lit(maxd.get(0)).cast("date"), col("last_d")).cast("long"))
+        .drop("last_d")
       per
         .withColumn("r", ntile(5).over(
           Window.orderBy(col("recency_days"), col("user_id"))))

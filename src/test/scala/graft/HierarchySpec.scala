@@ -8,8 +8,9 @@ import graft.operators.Hierarchy
 
 /** CONNECT BY traversal: multi-root forests, path materialization,
   * orphan-cycle surfacing (where SQL CONNECT BY would loop), agreement
-  * with a driver-side parent walk, and the job budget of one barrier
-  * per level. */
+  * of both routes (the driver walk and the barrier loop, forced through
+  * `routed(…, 0)`) with a parent walk written here, the inputs the
+  * driver walk refuses, and each route's job budget. */
 class HierarchySpec extends SparkTestBase {
   import spark.implicits._
 
@@ -45,7 +46,8 @@ class HierarchySpec extends SparkTestBase {
 
   /** The reference: each node walks its parent chain on the driver. A
     * chain that reaches a NULL parent resolves to that root; one that
-    * meets a missing parent or repeats a node is an orphan. */
+    * meets a missing parent or repeats a node is an orphan. A NULL id
+    * follows SQL: its path is NULL, as is its root when it is one. */
   def parentWalk(nodes: Seq[(String, Option[String])]): Out = {
     val parent = nodes.toMap
     nodes.map { case (id, _) =>
@@ -59,7 +61,8 @@ class HierarchySpec extends SparkTestBase {
             else up(p, cur :: chain)
         }
       id -> (up(id, Nil) match {
-        case Some(path) => (Some(path.head), Some(path.size - 1), Some(path.mkString("/")))
+        case Some(path) => (Option(path.head), Some(path.size - 1),
+          if (path.contains(null)) None else Some(path.mkString("/")))
         case None => (None, None, None)
       })
     }.toMap
@@ -71,11 +74,32 @@ class HierarchySpec extends SparkTestBase {
         ((Option(r.getString(1)), if (r.isNullAt(2)) None else Some(r.getInt(2)),
           Option(r.getString(3)))))
 
-  def checkAgainstWalk(label: String, nodes: Seq[(String, Option[String])]): Unit = {
-    val rows = collectOut(Hierarchy.connectBy(nodes.toDF("id", "parent"), "id", "parent"))
-    assert(rows.size == nodes.size, s"$label: one output row per node")
-    assert(rows.toMap == parentWalk(nodes), s"$label: differs from the parent walk")
+  /** Both routes over `df`: `connectBy`'s own, which must be `route`,
+    * and the barrier loop. Each must return one row per node, equal to
+    * the parent walk over `nodes` (the same rows with ids as strings),
+    * and both must return the same schema. */
+  def checkRoutes(label: String, df: DataFrame, nodes: Seq[(String, Option[String])],
+      route: String): Unit = {
+    val (chosen, took) = Hierarchy.routed(df, "id", "parent")
+    assert(took == route, s"$label: took the $took route")
+    val (loop, loopRoute) = Hierarchy.routed(df, "id", "parent", localMaxNodes = 0)
+    assert(loopRoute == "barrier")
+    assert(chosen.schema == loop.schema, s"$label: the routes' schemas differ")
+    val expected = parentWalk(nodes)
+    for ((name, out) <- Seq(took -> chosen, "forced barrier" -> loop)) {
+      val rows = collectOut(out)
+      assert(rows.size == nodes.size, s"$label, $name: one output row per node")
+      assert(rows.toMap == expected, s"$label, $name: differs from the parent walk")
+    }
   }
+
+  /** `connectBy` as callers reach it, and the barrier loop forced. */
+  def routes(idCol: String, parentCol: String): Seq[(String, DataFrame => DataFrame)] = Seq(
+    "connectBy" -> (Hierarchy.connectBy(_, idCol, parentCol)),
+    "forced barrier" -> (Hierarchy.routed(_, idCol, parentCol, localMaxNodes = 0)._1))
+
+  def checkAgainstWalk(label: String, nodes: Seq[(String, Option[String])]): Unit =
+    checkRoutes(label, nodes.toDF("id", "parent"), nodes, "local")
 
   /** A seeded forest with string ids: `roots` trees whose nodes hang
     * under a random earlier node, an orphan 2-cycle with a subtree off
@@ -120,41 +144,85 @@ class HierarchySpec extends SparkTestBase {
     val parents = (0L until 60L).map(i => (i, if (i == 0) None else Some(i / 3))).toDF("pid", "parent")
     val cyc = Seq((100L, Some(101L)), (101L, Some(100L))).toDF("id", "parent")
     val nodes = ids.join(parents, col("id") === col("pid")).select("id", "parent").unionByName(cyc)
-    val out = Hierarchy.connectBy(nodes, "id", "parent")
-    assert(out.count() == 62)
+    checkRoutes("joined nodes", nodes,
+      nodes.as[(Long, Option[Long])].collect().toSeq.map { case (i, p) => i.toString -> p.map(_.toString) },
+      "local")
+    for ((route, connect) <- routes("id", "parent")) {
+      val out = connect(nodes)
+      assert(out.count() == 62, route)
 
-    assert(out.unionByName(out).count() == 124)
-    assert(out.unionByName(out).distinct().count() == 62)
+      assert(out.unionByName(out).count() == 124)
+      assert(out.unionByName(out).distinct().count() == 62)
 
-    val pairs = out.as("a").join(out.as("b"), col("a.root_id") === col("b.id"))
-      .select(col("a.id"), col("b.depth").as("root_depth"))
-    assert(pairs.count() == 60)
-    assert(pairs.filter(col("root_depth") =!= 0).isEmpty)
+      val pairs = out.as("a").join(out.as("b"), col("a.root_id") === col("b.id"))
+        .select(col("a.id"), col("b.depth").as("root_depth"))
+      assert(pairs.count() == 60)
+      assert(pairs.filter(col("root_depth") =!= 0).isEmpty)
 
-    // each node re-hung directly under its root: a two-level forest,
-    // orphans (NULL root) become roots of their own
-    val again = Hierarchy.connectBy(
-      out.select(col("id"), when(col("depth") === 0, lit(null)).otherwise(col("root_id")).as("parent")),
-      "id", "parent")
-    val byId = collectOut(again).toMap
-    assert(byId.size == 62)
-    assert(byId("0") == ((Some("0"), Some(0), Some("0"))))
-    assert(byId("59") == ((Some("0"), Some(1), Some("0/59"))))
-    assert(byId("100") == ((Some("100"), Some(0), Some("100"))))
+      // each node re-hung directly under its root: a two-level forest,
+      // orphans (NULL root) become roots of their own
+      val again = connect(
+        out.select(col("id"), when(col("depth") === 0, lit(null)).otherwise(col("root_id")).as("parent")))
+      val byId = collectOut(again).toMap
+      assert(byId.size == 62)
+      assert(byId("0") == ((Some("0"), Some(0), Some("0"))))
+      assert(byId("59") == ((Some("0"), Some(1), Some("0/59"))))
+      assert(byId("100") == ((Some("100"), Some(0), Some("100"))))
+    }
+  }
+
+  test("int, long and string ids take the local route with the barrier route's schema") {
+    val forest = Seq("1" -> None, "2" -> Some("1"), "3" -> Some("2"), "4" -> Some("1"),
+      "5" -> Some("6"), "6" -> Some("5"), "7" -> Some("99"), "8" -> Some("8"))
+    val ints = forest.map { case (i, p) => (i.toInt, p.map(_.toInt)) }.toDF("id", "parent")
+    checkRoutes("int ids", ints, forest, "local")
+    checkRoutes("long ids", forest.map { case (i, p) => (i.toLong, p.map(_.toLong)) }
+      .toDF("id", "parent"), forest, "local")
+    checkRoutes("string ids", forest.toDF("id", "parent"), forest, "local")
+    assert(Hierarchy.connectBy(ints, "id", "parent").schema.map(_.dataType.simpleString) ==
+      Seq("int", "int", "int", "string"))
+  }
+
+  test("duplicate ids and a NULL id take the barrier route and match the parent walk") {
+    // a duplicated leaf comes back once per input row; a NULL id never
+    // matches as a parent, and its path is NULL
+    val dup = Seq("a" -> None, "b" -> Some("a"), "c" -> Some("b"), "c" -> Some("b"), "d" -> Some("a"))
+    checkRoutes("duplicate ids", dup.toDF("id", "parent"), dup, "barrier")
+    val nullId = Seq("r" -> None, "x" -> Some("r"), (null: String) -> Some("x"), "y" -> Some("x"))
+    checkRoutes("a NULL id", nullId.toDF("id", "parent"), nullId, "barrier")
+  }
+
+  test("a parent typed apart from the id takes the barrier route and matches the parent walk") {
+    val rows = Seq((1L, None: Option[Int]), (2L, Some(1)), (3L, Some(2)), (4L, Some(2)),
+      (7L, Some(9)), (8L, Some(8)))
+    checkRoutes("bigint ids, int parents", rows.toDF("id", "parent"),
+      rows.map { case (i, p) => i.toString -> p.map(_.toString) }, "barrier")
+  }
+
+  test("a chain whose paths exceed the character budget takes the barrier route") {
+    // three 1.5M-character ids: 9M path characters in all, over the
+    // driver walk's budget of 2^23
+    val id = (i: Int) => s"k$i-" + "x" * 1500000
+    val chain = (id(0) -> None) +: (1 to 2).map(i => id(i) -> Some(id(i - 1)))
+    checkRoutes("long-id chain", chain.toDF("id", "parent"), chain, "barrier")
   }
 
   test("the benchmark-shaped tree runs within its job budget") {
     // doc_id 0..1249 under doc_id/7: a single root, depth 4
     val nodes = spark.range(0, 1250).select(col("id").as("doc_id"),
       when(col("id") === 0, lit(null).cast("long")).otherwise(floor(col("id") / 7).cast("long")).as("parent"))
-    var out: Seq[(Long, Int)] = Nil
-    val jobs = jobsOf("connect-by-budget") {
-      out = Hierarchy.connectBy(nodes, "doc_id", "parent")
-        .select(col("doc_id"), col("depth")).as[(Long, Int)].collect().toSeq
+    // the local route: the probe, then a local relation; the barrier
+    // loop: one barrier per level, the union of levels and the collect
+    for (((route, connect), budget) <- routes("doc_id", "parent").zip(Seq(2, 9))) {
+      var out: Seq[(Long, Int)] = Nil
+      val jobs = jobsOf(s"connect-by-budget-$budget") {
+        out = connect(nodes).select(col("doc_id"), col("depth")).as[(Long, Int)].collect().toSeq
+      }
+      info(s"$route: $jobs jobs")
+      assert(out.size == 1250)
+      assert(out.map(_._2).max == 4)
+      assert(jobs <= budget, s"$route launched $jobs jobs, over its budget of $budget")
     }
-    info(s"$jobs jobs")
-    assert(out.size == 1250)
-    assert(out.map(_._2).max == 4)
-    assert(jobs <= 9, s"connectBy launched $jobs jobs, over its budget of 9")
+    assert(Hierarchy.routed(nodes, "doc_id", "parent")._2 == "local")
   }
 }

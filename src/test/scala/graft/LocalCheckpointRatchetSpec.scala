@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * moves calls onto the primitive. */
 class LocalCheckpointRatchetSpec extends AnyFunSuite {
 
-  val Ceiling = 140
+  val Ceiling = 139
 
   /** `src/main/scala` of this checkout, found from the working directory up. */
   def mainSources: Path =

@@ -543,6 +543,15 @@ class PlanAuditSpec extends SparkTestBase {
     assert(!p.contains("BroadcastAsOfJoin"), p)
   }
 
+  test("q_connect_by: the hierarchy is walked on the driver — no join, no exchange") {
+    // the documents tree fits Hierarchy's local route: the answer is a
+    // local relation, so a change that sends the row back to the
+    // per-level barrier loop brings its joins and exchanges back
+    val p = plan("q_connect_by")
+    assert(!p.contains("Join"), p)
+    assert(!p.contains("Exchange"), p)
+  }
+
   test("q_geo_dbscan / q_geofence_events: no cartesian anywhere") {
     Seq("q_geo_dbscan", "q_geofence_events").foreach { q =>
       val p = plan(q)
