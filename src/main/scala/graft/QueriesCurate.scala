@@ -126,7 +126,6 @@ HAVING COUNT(*) >= 2$havingExtra"""
   private val dedupSubstringFast = Q(
     "dedup_substring_fast",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val f = graft.operators.Winnow.fingerprintsFast(
         graft.Par.widen(
           ViewingData.table(s, dir, "documents").select("doc_id", "text")),
@@ -151,7 +150,6 @@ HAVING COUNT(*) >= 2$havingExtra"""
   private val dedupSubstringIncremental = Q(
     "dedup_substring_incremental",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val docs = graft.Par.widen(
         ViewingData.table(s, dir, "documents").select("doc_id", "text"))
       val fc = graft.operators.Winnow.fingerprintsFast(

@@ -579,7 +579,6 @@ FROM per_island GROUP BY user_id"""))
   private val bitmapReach = Q(
     "q_bitmap_reach",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       ViewingData.table(s, dir, "events")
         .groupBy("event_type")
         .agg(expr("bitmap_distinct(user_id)").as("n_users"))
@@ -597,7 +596,6 @@ FROM events GROUP BY event_type"""))
   private val quantileSketch = Q(
     "q_quantile_sketch",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       ViewingData.table(s, dir, "events")
         .select(col("event_type"), to_date(col("ts")).as("day"),
           col("value").cast("double").as("v"))
@@ -623,7 +621,6 @@ FROM events GROUP BY event_type"""))
   private val audienceOverlap = Q(
     "q_audience_overlap",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       // localCheckpoint: both crossJoin sides read the SAME 5-row
       // bitmap table — without it each side re-scans events (Prof
       // census catches the double read)

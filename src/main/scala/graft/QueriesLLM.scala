@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Multimodal, TextFunctions}
+import graft.functions.{Multimodal, TextFunctions, VectorFunctions}
 import graft.operators.{Components, DocPack}
 import graft.sources.ViewingData
 
@@ -252,7 +252,6 @@ FROM base b LEFT JOIN leaked l ON b.doc_id = l.doc_id"""))
   private val textDecontaminateBloom = Q(
     "text_decontaminate_bloom",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       gramTable(s, dir).createOrReplaceTempView("decon_grams_bloom")
       // might_contain demands its bloom be a constant or SCALAR
       // SUBQUERY (same contract Spark's InjectRuntimeFilter plans) —
@@ -865,7 +864,6 @@ GROUP BY p.doc_id"""))
   private val mmHeaderParse = Q(
     "mm_header_parse",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val w = (col("doc_id") % 640 + 1).cast("int")
       val h = (col("doc_id") % 480 + 1).cast("int")
       val png = synthPng(w, h)
@@ -908,7 +906,6 @@ FROM documents"""))
   private val mmDimsCard = Q(
     "mm_dims_card",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val w = (col("doc_id") % 640 + 1).cast("int")
       val h = (col("doc_id") % 480 + 1).cast("int")
       val dims = Multimodal.pngDims(synthPng(w, h))
@@ -1414,7 +1411,6 @@ FROM r"""))
   private val sampleWeightedK = Q(
     "q_sample_weighted_k",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       weightedSampleK(ViewingData.table(s, dir, "documents"),
         "source", "doc_id", "n_chars", k = 3, seedTag = "graft-wrs-11")
     },
@@ -1521,8 +1517,6 @@ FROM r WHERE rank <= 20"""))
 
   // --- hybrid retrieval shared pieces (q_hybrid_search + _indexed) ---
 
-  private def vdot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (p, q) => p + q)
   private def vss(a: org.apache.spark.sql.Column) =
     aggregate(transform(a, x => x * x), lit(0.0), (p, q) => p + q)
   private def hybridQv = hashEmbedRaw(lit(QueryText), 8)
@@ -1545,7 +1539,7 @@ FROM r WHERE rank <= 20"""))
     docs
       .select(col("doc_id"), hashEmbedRaw(col("text"), 8).as("d"))
       .select(col("doc_id"),
-        (vdot(col("d"), hybridQv) / (sqrt(vss(col("d"))) * sqrt(vss(hybridQv))))
+        (VectorFunctions.dot(col("d"), hybridQv) / (sqrt(vss(col("d"))) * sqrt(vss(hybridQv))))
           .as("cos"))
 
   /** Reciprocal-rank fusion Σ 1/(60 + rank) of the two 20-row lists —
@@ -1655,7 +1649,6 @@ FROM fused QUALIFY rank <= 10"""
   private val hybridSearchIndexed = Q(
     "q_hybrid_search_indexed",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       import graft.functions.VectorFunctions.normalize
       val docs = ViewingData.table(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)

@@ -862,7 +862,6 @@ WHERE hamming <= 3"""))
       // Embedding near-dup pairs, IVF-style: candidates restricted to
       // the same coarse partition (label); vectors unit-normalized ONCE
       // per row so the pair loop is a bare dot product.
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("label"),
@@ -873,7 +872,7 @@ WHERE hamming <= 3"""))
         .select(
           col("a.vec_id").as("id_a"),
           col("b.vec_id").as("id_b"),
-          round(dotNative(col("a.e"), col("b.e")), 6).as("cos_sim"))
+          round(dot(col("a.e"), col("b.e")), 6).as("cos_sim"))
         .filter(col("cos_sim") >= 0.3)
     },
     Some("""WITH v0 AS (
@@ -901,7 +900,6 @@ WHERE round(list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * 
   private val dedupEmbeddingIncremental = Q(
     "dedup_embedding_incremental",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       // normalize ONCE; corpus and delta both derive from the
       // checkpoint so the broadcast side is not recomputed per branch
       val v = ViewingData.table(s, dir, "embeddings")
@@ -916,11 +914,11 @@ WHERE round(list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * 
         .select(
           least(col("i.vec_id"), col("d.vec_id")).as("id_a"),
           greatest(col("i.vec_id"), col("d.vec_id")).as("id_b"),
-          round(dotNative(col("i.e"), col("d.e")), 6).as("cos_sim"))
+          round(dot(col("i.e"), col("d.e")), 6).as("cos_sim"))
       val self = delta.as("a")
         .join(delta.as("b"), expr("a.label = b.label AND a.vec_id < b.vec_id"))
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-          round(dotNative(col("a.e"), col("b.e")), 6).as("cos_sim"))
+          round(dot(col("a.e"), col("b.e")), 6).as("cos_sim"))
       oldNew.unionAll(self).filter(col("cos_sim") >= 0.3)
     },
     Some("""WITH v0 AS (
@@ -1007,7 +1005,6 @@ WHERE round(list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * 
   private val annBruteforce = Q(
     "ann_bruteforce",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
@@ -1015,7 +1012,7 @@ WHERE round(list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * 
         .select(col("e").as("qe"))
       val scored = v.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
-        .select(col("vec_id"), round(dotNative(col("e"), col("qe")), 6).as("cos_sim"))
+        .select(col("vec_id"), round(dot(col("e"), col("qe")), 6).as("cos_sim"))
       // Distributed top-k (TakeOrderedAndProject): per-partition heads
       // merged on the driver — no single-partition global window.
       val top = scored.orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
@@ -1044,7 +1041,6 @@ WHERE rk <= 10"""))
       // Scale path: 4 random-hyperplane bits → 16 buckets (sized to the
       // test corpus; planes scale with corpus size), probe = vec_id 0's
       // bucket, top-10 by cosine within it.
-      graft.plans.GraftExtensions.register(s)
       // Materialize the bucketed index once (localCheckpoint) — the
       // ANN pattern is build-once/probe-many; without it the probe and
       // index branches would each recompute the hyperplane projections.
@@ -1058,7 +1054,7 @@ WHERE rk <= 10"""))
       v.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= 0 && col("bucket") === col("qbucket"))
         .select(col("vec_id"), col("bucket"),
-          round(dotNative(col("e"), col("qe")), 6).as("cos_sim"))
+          round(dot(col("e"), col("qe")), 6).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
         .withColumn("rank",
           row_number().over(Window.orderBy(col("cos_sim").desc, col("vec_id"))))
@@ -1074,7 +1070,6 @@ WHERE rk <= 10"""))
       // top-10) is pinned by the oracle, not just row counts. Same
       // plan shape as ann_bucketed: build-once index, one-bucket
       // probe, distributed top-k.
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
@@ -1085,7 +1080,7 @@ WHERE rk <= 10"""))
       v.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= 0 && col("bucket") === col("qbucket"))
         .select(col("vec_id"), col("bucket"),
-          round(dotNative(col("e"), col("qe")), 6).as("cos_sim"))
+          round(dot(col("e"), col("qe")), 6).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
         .withColumn("rank",
           row_number().over(Window.orderBy(col("cos_sim").desc, col("vec_id"))))
@@ -1125,7 +1120,6 @@ WHERE rk <= 10"""))
     * recall@10 vs full precision and the quantization error bound. */
   private def q8Pipeline(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val v = ViewingData.table(s, dir, "embeddings")
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("vec_id"),
@@ -1199,7 +1193,6 @@ FROM top"""))
   private val annQ8Error = Q(
     "ann_q8_error_report",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("label"),
@@ -1264,7 +1257,6 @@ FROM m GROUP BY label"""))
       // IVF-Flat multi-probe: cells seeded from the label column,
       // refined to true centroids, nprobe=3 of 10 cells. Index built
       // once (localCheckpoint); probe touches ~30% of the corpus.
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("label"),
@@ -1479,7 +1471,6 @@ FROM m GROUP BY label"""))
       // index now persists at a source-stamped path and only builds
       // when absent (first run on a fresh VM / after a testdata
       // regen); ann_ivfpq_build is the explicit build-cost row.
-      graft.plans.GraftExtensions.register(s)
       import s.implicits._
       val v = embCorpus(s, dir)
       val path = ensureIvfPqIndex(s, dir, v)
@@ -1503,7 +1494,6 @@ FROM m GROUP BY label"""))
       // default rounds). Returns the per-(batch, cell) fill — the
       // retrain-signal readout — so the row has checkable output;
       // rows-only (seeded k-means has no DuckDB twin).
-      graft.plans.GraftExtensions.register(s)
       val v = embCorpus(s, dir)
       val path = stampedIndexPath(s, dir, "embeddings", IvfPqScheme)
       rebuildArtifact(s, path) { staged =>
@@ -1531,7 +1521,6 @@ FROM m GROUP BY label"""))
   private val annRangeSearch = Q(
     "ann_range_search",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("label"),
@@ -1574,7 +1563,6 @@ SELECT vec_id, round(c, 6) AS cos_sim FROM scored WHERE c >= 0.2"""))
   private val annRangeSearchBatch = Q(
     "ann_range_search_batch",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val v = embCorpus(s, dir)
       // label-seeded cells, no trained quantizer: v1 covers the layout
       val path = stampedIndexPath(s, dir, "embeddings", "ivfrange_v1")
@@ -1621,7 +1609,6 @@ SELECT query_id, vec_id, round(c, 6) AS cos_sim FROM scored WHERE c >= 0.2"""))
   private val annKnnJoin = Q(
     "ann_knn_join",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("label"), normalize(toDouble(col("embedding"))).as("e"))
@@ -1631,7 +1618,7 @@ SELECT query_id, vec_id, round(c, 6) AS cos_sim FROM scored WHERE c >= 0.2"""))
         .select(
           col("a.vec_id").as("query_id"),
           col("b.vec_id").as("neighbor_id"),
-          round(dotNative(col("a.e"), col("b.e")), 6).as("cos_sim"))
+          round(dot(col("a.e"), col("b.e")), 6).as("cos_sim"))
         .withColumn("rank", row_number().over(
           Window.partitionBy("query_id")
             .orderBy(col("cos_sim").desc, col("neighbor_id"))))
@@ -1741,7 +1728,7 @@ FROM occ"""))
   private def recallScored(
       cand: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = cand
     .select(col("query_id"), col("vec_id"),
-      round(dotNative(col("e"), col("qe")), 6).as("cos_sim"))
+      round(dot(col("e"), col("qe")), 6).as("cos_sim"))
 
   /** Exact brute top-10 per query — the ground truth every recall
     * report compares against. Exposed so a multi-config sweep (E15)
@@ -1811,7 +1798,6 @@ FROM occ"""))
   private val annMultiprobeRecall = Q(
     "ann_multiprobe_recall",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
@@ -1891,7 +1877,6 @@ GROUP BY 1, 2"""))
   private val annPlanesTuning = Q(
     "ann_planes_tuning",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
@@ -1919,7 +1904,7 @@ GROUP BY 1, 2"""))
           expr("(bucket & 1) = (qbucket & 1)") &&
             col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"), lvl.as("lvl"),
-          round(dotNative(col("e"), col("qe")), 6).as("cos_sim"))
+          round(dot(col("e"), col("qe")), 6).as("cos_sim"))
         .localCheckpoint()
       (1 to 4).map { p =>
         recallReadoutScored(exact,
@@ -1983,7 +1968,6 @@ GROUP BY 1, 2, 3"""))
   private val annRecallReport = Q(
     "ann_recall_report",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val v = ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
@@ -2113,7 +2097,6 @@ WHERE frame_id % 2 = 0 AND frame_id * 64 < strlen(text)"""))
   private val mmAudioEnergy = Q(
     "mm_audio_energy",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val bin = col("text").cast("binary")
       ViewingData.table(s, dir, "documents")
         .select(col("doc_id"),
@@ -2168,7 +2151,6 @@ FROM v GROUP BY doc_id, frame_id"""))
   private val mmAudioSegments = Q(
     "mm_audio_segments",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val bin = col("text").cast("binary")
       val frames = ViewingData.table(s, dir, "documents")
         .select(col("doc_id"),
@@ -2409,7 +2391,6 @@ v AS (
   private val annIvfOracle = Q(
     "ann_ivf_oracle",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val cents = fixedCentroids(s)
       val v = normalizedVecs(s, dir)
       val index = graft.operators.Ivf.assign(v, cents, "vec_id", "e", "cell")
@@ -2469,7 +2450,6 @@ ORDER BY cos_sim DESC, vec_id LIMIT 10"""))
   private val annDiversitySample = Q(
     "ann_diversity_sample",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val cents = fixedCentroids(s)
       val v = normalizedVecs(s, dir)
       val index = graft.operators.Ivf.assign(v, cents, "vec_id", "e", "cell")
@@ -2527,7 +2507,6 @@ WHERE rk <= 5"""))
   private val annPairMining = Q(
     "ann_pair_mining",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val cents = fixedCentroids(s)
       val v = normalizedVecs(s, dir)
       val index = graft.operators.Ivf.assign(v, cents, "vec_id", "e", "cell")
@@ -2537,7 +2516,7 @@ WHERE rk <= 5"""))
       val b = index.select(col("cell"), col("vec_id").as("cand"),
         col("e").as("eb"))
       val pos = a.join(b, "cell").filter(col("anchor") =!= col("cand"))
-        .withColumn("sim", VectorFunctions.dotNative(col("ea"), col("eb")))
+        .withColumn("sim", VectorFunctions.dot(col("ea"), col("eb")))
         .groupBy("cell", "anchor")
         .agg(max_by(struct(col("cand"), col("sim")),
           struct(col("sim"), -col("cand"))).as("best"))
@@ -2609,11 +2588,10 @@ FROM best b JOIN neg n ON n.neg_cell = (b.cell + 1) % 8"""))
   private val annClusterQuality = Q(
     "ann_cluster_quality",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val cents = fixedCentroids(s)
       val v = normalizedVecs(s, dir)
       val top2 = v.crossJoin(broadcast(cents))
-        .withColumn("dot", VectorFunctions.dotNative(col("e"), col("centroid")))
+        .withColumn("dot", VectorFunctions.dot(col("e"), col("centroid")))
         .groupBy("vec_id")
         .agg(sort_array(collect_list(struct(col("dot"), col("cell"))),
           asc = false).as("arr"))
@@ -2683,7 +2661,6 @@ FROM top2 GROUP BY cell"""))
   private val annPqOracle = Q(
     "ann_pq_oracle",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val m = 8; val kCodes = 16; val segLen = 8
       val cb = md5Codebooks(s, m, kCodes, segLen)
       val qv = (0 until m * segLen).map(i => md5Unit(s"graft-pqq-1:$i"))
@@ -2752,7 +2729,6 @@ FROM sc ORDER BY round(score, 6) DESC, vec_id LIMIT 10"""))
   private val annIvfPqOracle = Q(
     "ann_ivfpq_oracle",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       import s.implicits._
       val m = 8; val kCodes = 16; val segLen = 8; val dim = 64
       def unitVec(tag: String, d: Int): Seq[Double] = {

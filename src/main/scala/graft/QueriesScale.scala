@@ -56,7 +56,6 @@ GROUP BY 1"""))
   private val topkAgg = Q(
     "q_topk_agg",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       ViewingData.table(s, dir, "orders")
         .groupBy("o_orderpriority")
         .agg(expr("topk_by(o_totalprice, o_orderkey, 3)").as("top"))
@@ -146,7 +145,6 @@ FROM events GROUP BY 1, 2"""))
   private val slidingReach = Q(
     "q_sliding_reach",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val daily = ViewingData.table(s, dir, "events")
         .groupBy(to_date(col("ts")).as("day"))
         .agg(expr("bitmap_agg(user_id)").as("bm"))
@@ -180,7 +178,6 @@ GROUP BY 1"""))
   private val sampleReservoir = Q(
     "q_sample_reservoir",
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       ViewingData.table(s, dir, "events")
         .groupBy("event_type")
         .agg(expr(
@@ -485,7 +482,6 @@ FROM events GROUP BY 1"""))
     "q_reach_curve",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftExtensions.register(s)
       val daily = ViewingData.table(s, dir, "events")
         .groupBy(to_date(col("ts")).as("day"))
         .agg(expr("bitmap_agg(user_id)").as("bm"))

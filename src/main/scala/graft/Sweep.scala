@@ -161,7 +161,6 @@ object Sweep {
     scaleUp(spark, src, work, factor, verbatimDocs)
     names.foreach {
       case "ann_ivfpq_probe" =>
-        graft.plans.GraftExtensions.register(spark)
         import spark.implicits._
         val v = graft.sources.ViewingData.table(spark, work, "embeddings")
           .repartition(spark.sparkContext.defaultParallelism)
@@ -184,7 +183,6 @@ object Sweep {
         // per-cell radius stats EXIST (built once, untimed); measured
         // = the batch radius probe only — surviving-cell union,
         // file-pruned scan, candidate join, exact filter
-        graft.plans.GraftExtensions.register(spark)
         val v = graft.sources.ViewingData.table(spark, work, "embeddings")
           .repartition(spark.sparkContext.defaultParallelism)
           .select(col("vec_id"), col("label"),
@@ -266,7 +264,6 @@ object Sweep {
         // delta fingerprinting + the tagged bucket-fold probe — the
         // registry query re-fingerprints the corpus too, which a real
         // increment never pays
-        graft.plans.GraftExtensions.register(spark)
         val docs = sweepDocs(spark, work)
         val path = s"$work/win_index"
         // (k, w) taken from the registry rows' single definition so a
@@ -320,7 +317,6 @@ object Sweep {
         // its oracle): candidate volume tracks TRUE near-dup density,
         // so this is the curve a production corpus rides — compare
         // with corpus_prep_e2e at the same factor
-        graft.plans.GraftExtensions.register(spark)
         val sec = minOfTwo {
           QueriesLLM.corpusPrepFrom(spark, work,
               QueriesML.minhashPairs(spark, work)
@@ -366,7 +362,6 @@ object Sweep {
         // probe-many, the production shape; it embeds through the
         // UNcosted twin (bit-identical vectors), so both probes serve
         // from the same geometry.
-        graft.plans.GraftExtensions.register(spark)
         import graft.functions.VectorFunctions.dot
         val emb = operators.CostedEmbedder(8, spinPerDoc = 2000000)
         val docs = sweepDocs(spark, work).localCheckpoint()

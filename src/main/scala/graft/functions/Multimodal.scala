@@ -95,9 +95,7 @@ object Multimodal {
     * expression ([[graft.plans.JpegDimsStructExpr]] — variable marker
     * walk, one static call per row in every evaluation mode; the
     * struct-producing form exists so the scan is never repeated for
-    * the null guard + field unpack). Requires
-    * `plans.GraftExtensions.register(spark)` (idempotent). NULL for
-    * non-JPEG payloads. */
+    * the null guard + field unpack). NULL for non-JPEG payloads. */
   def jpegDims(bin: Column): Column =
     call_function("jpeg_dims_wh", bin)
 

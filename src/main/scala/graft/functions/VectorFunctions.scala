@@ -3,9 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Dense-vector math over `array<float|double>` columns using
-  * codegen'd higher-order functions (zip_with / aggregate) — no UDFs,
-  * so the whole similarity pipeline stays inside WholeStageCodegen.
+/** Dense-vector math over `array<double>` columns: graft's native
+  * expressions and codegen'd higher-order functions — no UDFs, so the
+  * whole similarity pipeline stays inside WholeStageCodegen.
   * Left-fold summation order is fixed (sequential), which keeps results
   * bitwise-reproducible across partitionings.
   */
@@ -15,13 +15,11 @@ object VectorFunctions {
     * engines; all scoring happens in double). */
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** Codegen'd dot product (plans.DotProduct) — bitwise-identical to
-    * [[dot]] but a primitive loop instead of interpreted lambdas.
-    * Requires `plans.GraftExtensions.register(spark)` (idempotent). */
-  def dotNative(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  /** Codegen'd dot product of two `array<double>` ([[graft.plans.DotProduct]]):
+    * a primitive loop with the left fold of
+    * `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)`, so bitwise-identical
+    * to it, NULL included (lengths differ or an element is NULL). */
+  def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -42,8 +40,7 @@ object VectorFunctions {
     * memory: the probe scans read `array<tinyint>` + one double scale
     * instead of `array<double>`. Returns struct(q array<tinyint>,
     * scale double); zero vectors quantize to all-zero with scale 0.
-    * Native expression ([[graft.plans.VecQuantize]]) — requires
-    * `plans.GraftExtensions.register(spark)` (idempotent). */
+    * Native expression ([[graft.plans.VecQuantize]]). */
   def quantize(v: Column): Column = call_function("vec_q8", v)
 
   /** Dot product of two quantized vectors: integer multiply-accumulate
@@ -55,8 +52,7 @@ object VectorFunctions {
   /** Element-wise vector sum AGGREGATE ([[graft.plans.VecSum]]) — the
     * centroid primitive: `groupBy(cell).agg(vecSum(vec))` shuffles one
     * partial-sum row per (partition, cell) where a posexplode
-    * formulation shuffles n×d element rows. Requires
-    * `plans.GraftExtensions.register(spark)` (idempotent). */
+    * formulation shuffles n×d element rows. */
   def vecSum(v: Column): Column = call_function("vec_sum", v)
 
   /** 0-based index of the `mat` row maximizing `v·mat[i] + bias[i]`

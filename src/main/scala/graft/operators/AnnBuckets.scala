@@ -37,7 +37,6 @@ object AnnBuckets extends CompactableIndex {
     * hyperplane bucket, so pairwise cosine is a bare dot product and
     * every column reproduces in ANSI SQL. */
   def bucketRows(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol).as("vec_id"),
         normalize(toDouble(col(vecCol))).as("e"))
       .withColumn("bucket", hyperplaneBucketMd5(col("e"), Planes))
@@ -52,7 +51,7 @@ object AnnBuckets extends CompactableIndex {
   def writeBatch(rows: DataFrame, path: String, batchId: Long): Unit =
     landStreamBatch(rows, path, batchId)
 
-  private def cos(a: Column, b: Column): Column = round(dotNative(a, b), 6)
+  private def cos(a: Column, b: Column): Column = round(dot(a, b), 6)
 
   /** Bucket-local near-dup matches of a delta against the standing
     * index PLUS the delta's own in-batch pairs — the D10/D11
@@ -65,7 +64,6 @@ object AnnBuckets extends CompactableIndex {
     * no-forced-broadcast posture). */
   def matches(delta: DataFrame, index: DataFrame,
       tau: Double = Tau): DataFrame = {
-    graft.plans.GraftExtensions.register(delta.sparkSession)
     // ABSORB the delta's own ids out of the standing side (the
     // Winnow.incrementalPairs discipline): under an at-least-once
     // replay the delta's rows already stand in the index, and a bare

@@ -187,7 +187,6 @@ object AsOfJoin {
       forward: Boolean): DataFrame = {
     requireArgs(left, keyCols, rightCarry)
     val spark = left.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     // Fresh-alias every right column so its exprIds can never collide
     // with the left subtree (self-join safe without analyzer dedup).
     val rdf = right.select(

@@ -2,8 +2,10 @@ package graft.operators
 
 import scala.annotation.tailrec
 import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -35,16 +37,24 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   *     level costs one action and no anti-join. The loop stops when a
   *     level resolves nothing or leaves nothing unresolved; tree depth
   *     bounds the rounds, not row count (an org chart or BOM is a few
-  *     dozen levels at any data size).
+  *     dozen levels at any data size). A repeated id puts its row in
+  *     the frontier once per copy, and the join would then hand each
+  *     child one row per copy. The barrier also observes how many rows
+  *     it read, so a level that wrote more rows than it read is redone
+  *     against the frontier's distinct rows, and so is every later
+  *     level: clean input pays no dedup shuffle, and the output keeps
+  *     one row per input row.
   *
   * Both routes return the same rows under the same schema. Nodes
   * unreachable from any root (orphan cycles, parents that do not exist)
   * are returned with NULL root/depth/path so callers can audit them:
   * CONNECT BY would loop, and surfacing beats looping. The local route
-  * refuses duplicate and NULL ids because the loop's join gives them
-  * its own answer (a duplicated inner node fans its subtree out; a NULL
-  * id's path is NULL), and a parent typed apart from the id because
-  * the join compares them after a cast the walk would have to mimic.
+  * refuses duplicate ids (its index holds one node per id), NULL ids
+  * (the loop's join gives a NULL id a NULL path), and a parent typed
+  * apart from the id (the join compares them after a cast the walk
+  * would have to mimic). An id listed under two different parents has
+  * no single path and is out of scope: each child of it comes back
+  * once per distinct path.
   *
   * The limits are constants: they bound driver memory (the probe's rows
   * and the path strings) and pick between routes that give the same
@@ -169,23 +179,30 @@ object Hierarchy {
         col(idCol).cast("string").as("path"))
     // levels newest first; the last round's unresolved rows are the orphans
     @tailrec def walk(unresolved: DataFrame, frontier: DataFrame,
-                      levels: List[DataFrame]): DataFrame = {
+                      levels: List[DataFrame], distinctFrontier: Boolean): DataFrame = {
+      val read = Observation()
+      val f = if (distinctFrontier) frontier.distinct() else frontier
       val (round, counts) = Barrier.materialize(
-        unresolved.as("u")
-          .join(frontier.as("f"), col("u.__parent") === col(s"f.$idCol"), "left_outer")
+        unresolved.observe(read, count(lit(1)).as("rows")).as("u")
+          .join(f.as("f"), col("u.__parent") === col(s"f.$idCol"), "left_outer")
           .select(col(s"u.$idCol"), col("u.__parent"), col("f.root_id"),
             (col("f.depth") + 1).as("depth"),
             concat(col("f.path"), lit("/"), col(s"u.$idCol").cast("string")).as("path")),
         count(col("root_id")).as("resolved"),
         count_if(col("root_id").isNull).as("unresolved"))
       val (resolvedNow, pending) = (counts.getLong(0), counts.getLong(1))
+      // more rows out than in: a frontier id matched twice, so the level
+      // is redone against the frontier's distinct rows, as are later ones
+      val fannedOut = resolvedNow + pending > Await.result(read.future, Duration.Inf).getLong(0)
       val next = round.filter(col("root_id").isNotNull).drop("__parent")
       val rest = round.filter(col("root_id").isNull)
       val done = if (resolvedNow > 0) next :: levels else levels
-      if (resolvedNow == 0 || pending == 0) (rest.drop("__parent") :: done).reverse.reduce(_ unionByName _)
-      else walk(rest.select(col(idCol), col("__parent")), next, done)
+      if (!distinctFrontier && fannedOut) walk(unresolved, frontier, levels, distinctFrontier = true)
+      else if (resolvedNow == 0 || pending == 0)
+        (rest.drop("__parent") :: done).reverse.reduce(_ unionByName _)
+      else walk(rest.select(col(idCol), col("__parent")), next, done, distinctFrontier)
     }
     walk(nodes.filter(col(parentCol).isNotNull).select(col(idCol), col(parentCol).as("__parent")),
-      roots, List(roots))
+      roots, List(roots), distinctFrontier = false)
   }
 }

@@ -24,8 +24,7 @@ object Ivf {
   /** Element-wise mean per cell via the native [[vecSum]] aggregate:
     * ONE exchange carrying one partial-sum row per (partition, cell)
     * — map-side combine over dense arrays — where a posexplode
-    * formulation shuffles n×d element rows through two exchanges.
-    * Requires `plans.GraftExtensions.register` (all callers do). */
+    * formulation shuffles n×d element rows through two exchanges. */
   def centroids(v: DataFrame, cellCol: String, vecCol: String): DataFrame =
     v.groupBy(col(cellCol))
       .agg(vecSum(col(vecCol)).as("__s"), count(lit(1)).as("__n"))
@@ -46,7 +45,7 @@ object Ivf {
     val c = cents.withColumnRenamed(cellCol, "__cell")
     v.drop(cellCol)
       .crossJoin(broadcast(c))
-      .withColumn("__sim", dotNative(col(vecCol), col("centroid")))
+      .withColumn("__sim", dot(col(vecCol), col("centroid")))
       .groupBy(idCol)
       .agg(max_by(
         struct(col(vecCol), col("__cell")),
@@ -177,7 +176,7 @@ object Ivf {
       .select(
         least(col(s"i.$idCol"), col(s"d.$idCol")).as("id_a"),
         greatest(col(s"i.$idCol"), col(s"d.$idCol")).as("id_b"),
-        round(dotNative(col(s"i.$vecCol"), col(s"d.$vecCol")), 6).as("cos_sim"))
+        round(dot(col(s"i.$vecCol"), col(s"d.$vecCol")), 6).as("cos_sim"))
     // within-delta pairs: both members arrive in the SAME batch, so
     // neither is indexed yet when the probe runs — the self-join is
     // what makes "each pair found exactly once" hold across any
@@ -185,7 +184,7 @@ object Ivf {
     val self = d.as("a")
       .join(d.as("b"), expr(s"a.$cellCol = b.$cellCol AND a.$idCol < b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        round(dotNative(col(s"a.$vecCol"), col(s"b.$vecCol")), 6).as("cos_sim"))
+        round(dot(col(s"a.$vecCol"), col(s"b.$vecCol")), 6).as("cos_sim"))
     oldNew.unionAll(self)
       .filter(col("cos_sim") >= threshold)
       .distinct()
@@ -237,7 +236,7 @@ object Ivf {
     idx.join(broadcast(cents), cellCol)
       .groupBy(cellCol)
       .agg(max(sqrt(greatest(lit(0.0),
-        lit(2.0) - lit(2.0) * dotNative(col(vecCol), col("centroid"))))).as("r"))
+        lit(2.0) - lit(2.0) * dot(col(vecCol), col("centroid"))))).as("r"))
       .withColumn("n_batches", lit(nBatches))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/cellstats")
   }
@@ -318,13 +317,13 @@ object Ivf {
     val surviving = f.cents.join(f.stats, cellCol)
       .crossJoin(broadcast(query))
       .filter(sqrt(greatest(lit(0.0),
-        lit(2.0) - lit(2.0) * dotNative(col("centroid"), col(qCol)))) -
+        lit(2.0) - lit(2.0) * dot(col("centroid"), col(qCol)))) -
         col("r") <= lit(t + 1e-9))
       .select(col(cellCol)).collect().map(_.get(0))
     f.cells
       .filter(col(cellCol).isin(surviving.toIndexedSeq: _*))
       .crossJoin(broadcast(query))
-      .withColumn("__cos", dotNative(col(vecCol), col(qCol)))
+      .withColumn("__cos", dot(col(vecCol), col(qCol)))
       .filter(col("__cos") >= minCos)
       .select(col(idCol), round(col("__cos"), 6).as("cos_sim"))
   }
@@ -352,7 +351,7 @@ object Ivf {
     val t = math.sqrt(math.max(0.0, 2.0 - 2.0 * minCos))
     val qCells = queries.crossJoin(broadcast(cents.join(stats, cellCol)))
       .filter(sqrt(greatest(lit(0.0),
-        lit(2.0) - lit(2.0) * dotNative(col("centroid"), col(qCol)))) -
+        lit(2.0) - lit(2.0) * dot(col("centroid"), col(qCol)))) -
         col("r") <= lit(t + 1e-9))
       .select(col(qIdCol), col(qCol), col(cellCol))
       .localCheckpoint() // consumed twice: cell-id union + candidate join
@@ -367,7 +366,7 @@ object Ivf {
     spark.read.parquet(s"$path/cells")
       .filter(col(cellCol).isin(survivingCells.toIndexedSeq: _*))
       .join(qCells, cellCol)
-      .withColumn("__cos", dotNative(col(vecCol), col(qCol)))
+      .withColumn("__cos", dot(col(vecCol), col(qCol)))
       .filter(col("__cos") >= minCos)
       .select(col(qIdCol), col(idCol), round(col("__cos"), 6).as("cos_sim"))
   }
@@ -382,14 +381,14 @@ object Ivf {
       nprobe: Int, k: Int, qCol: String = "q"): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
     val qCells = query.crossJoin(broadcast(cents))
-      .withColumn("__sim", dotNative(col(qCol), col("centroid")))
+      .withColumn("__sim", dot(col(qCol), col("centroid")))
       .orderBy(col("__sim").desc, col(cellCol)).limit(nprobe)
       .select(col(cellCol)).collect().map(_.get(0))
     spark.read.parquet(s"$path/cells")
       .filter(col(cellCol).isin(qCells.toIndexedSeq: _*))
       .crossJoin(broadcast(query))
       .select(col(idCol), col(cellCol),
-        round(dotNative(col(vecCol), col(qCol)), 6).as("cos_sim"))
+        round(dot(col(vecCol), col(qCol)), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol)).limit(k)
   }
 
@@ -415,7 +414,7 @@ object Ivf {
     import org.apache.spark.sql.expressions.Window
     val cents = spark.read.parquet(s"$path/centroids")
     val qCells = queries.crossJoin(broadcast(cents))
-      .withColumn("__sim", dotNative(col(qCol), col("centroid")))
+      .withColumn("__sim", dot(col(qCol), col("centroid")))
       .withColumn("__r", row_number().over(
         Window.partitionBy(qIdCol).orderBy(col("__sim").desc, col(cellCol))))
       .filter(col("__r") <= nprobe)
@@ -429,7 +428,7 @@ object Ivf {
       .filter(col(cellCol).isin(probedCells.toIndexedSeq: _*))
       .join(qCells, cellCol)
       .select(col(qIdCol), col(idCol), col(cellCol),
-        round(dotNative(col(vecCol), col(qCol)), 6).as("cos_sim"))
+        round(dot(col(vecCol), col(qCol)), 6).as("cos_sim"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(qIdCol).orderBy(col("cos_sim").desc, col(idCol))))
       .filter(col("rank") <= k)
@@ -464,7 +463,7 @@ object Ivf {
       minCos: Double, qCol: String = "q"): DataFrame = {
     val t = math.sqrt(math.max(0.0, 2.0 - 2.0 * minCos))
     def dist(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) * dotNative(a, b)))
+      sqrt(greatest(lit(0.0), lit(2.0) - lit(2.0) * dot(a, b)))
     val stats = index.join(broadcast(cents), cellCol)
       .groupBy(cellCol)
       .agg(max(dist(col(vecCol), col("centroid"))).as("__r"))
@@ -474,7 +473,7 @@ object Ivf {
       .select(col(cellCol))
     index.join(broadcast(qCells), cellCol)
       .crossJoin(broadcast(query))
-      .withColumn("__cos", dotNative(col(vecCol), col(qCol)))
+      .withColumn("__cos", dot(col(vecCol), col(qCol)))
       .filter(col("__cos") >= minCos)
       .select(col(idCol), round(col("__cos"), 6).as("cos_sim"))
   }
@@ -492,14 +491,14 @@ object Ivf {
       idCol: String, vecCol: String, cellCol: String,
       nprobe: Int, k: Int, qCol: String = "q"): DataFrame = {
     val qCells = query.crossJoin(broadcast(cents))
-      .withColumn("__sim", dotNative(col(qCol), col("centroid")))
+      .withColumn("__sim", dot(col(qCol), col("centroid")))
       .orderBy(col("__sim").desc, col(cellCol)).limit(nprobe)
       .select(col(cellCol))
     index
       .join(broadcast(qCells), cellCol)
       .crossJoin(broadcast(query))
       .select(col(idCol), col(cellCol),
-        round(dotNative(col(vecCol), col(qCol)), 6).as("cos_sim"))
+        round(dot(col(vecCol), col(qCol)), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol)).limit(k)
   }
 }

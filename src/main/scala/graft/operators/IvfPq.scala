@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.dotNative
+import graft.functions.VectorFunctions.dot
 
 /** IVF-PQ — the FAISS production ANN index, composed from this
   * library's two halves: [[Ivf]] coarse cells (refined centroids,
@@ -329,7 +329,7 @@ object IvfPq {
         col(s"i.$cellCol") === col("__c"))
       .select(col(s"i.$idCol").as("__iid"), col(s"d.$idCol").as("__did"),
         col(s"d.$vecCol").as("__dvec"),
-        dotNative(col(s"d.$vecCol"),
+        dot(col(s"d.$vecCol"),
           zip_with(col("centroid"), residHat, (a, b) => a + b)).as("__adc"))
       .filter(col("__adc") >= threshold - margin)
     // exact re-rank: the candidate set (bounded by the probe, tiny
@@ -342,11 +342,11 @@ object IvfPq {
       .select(
         least(col("__iid"), col("__did")).as("id_a"),
         greatest(col("__iid"), col("__did")).as("id_b"),
-        round(dotNative(col("__ivec"), col("__dvec")), 6).as("cos_sim"))
+        round(dot(col("__ivec"), col("__dvec")), 6).as("cos_sim"))
     val self = d.as("a")
       .join(d.as("b"), expr(s"a.$cellCol = b.$cellCol AND a.$idCol < b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        round(dotNative(col(s"a.$vecCol"), col(s"b.$vecCol")), 6).as("cos_sim"))
+        round(dot(col(s"a.$vecCol"), col(s"b.$vecCol")), 6).as("cos_sim"))
     oldNew.unionAll(self)
       .filter(col("cos_sim") >= threshold)
       .distinct()
@@ -380,7 +380,7 @@ object IvfPq {
     val books = collectBooks(spark.read.parquet(s"$path/codebooks"))
     val m = books.map(_._1).max + 1
     val qCells = queries.crossJoin(broadcast(cents))
-      .withColumn("__sim", dotNative(col(qCol), col("centroid")))
+      .withColumn("__sim", dot(col(qCol), col("centroid")))
       .withColumn("__r", row_number().over(
         Window.partitionBy(qIdCol).orderBy(col("__sim").desc, col(cellCol))))
       .filter(col("__r") <= nprobe)
@@ -391,7 +391,7 @@ object IvfPq {
       .filter(col(cellCol).isin(probedCells.toIndexedSeq: _*))
       .join(broadcast(qCells), cellCol)
       .select(col(qIdCol), col(idCol), col(qCol),
-        round(dotNative(col(qCol),
+        round(dot(col(qCol),
           zip_with(col("centroid"), residHatLit(books, m), (a, b) => a + b)),
           6).as("adc_score"))
       .withColumn("__r", row_number().over(
@@ -401,7 +401,7 @@ object IvfPq {
     corpus.select(col(idCol), col(vecCol))
       .join(broadcast(short), idCol)
       .select(col(qIdCol), col(idCol),
-        round(dotNative(col(vecCol), col(qCol)), 6).as("cos_sim"))
+        round(dot(col(vecCol), col(qCol)), 6).as("cos_sim"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(qIdCol).orderBy(col("cos_sim").desc, col(idCol))))
       .filter(col("rank") <= k)
@@ -418,7 +418,7 @@ object IvfPq {
       nprobe, k * shortlistFactor)
     corpus.join(broadcast(short.select(idCol)), idCol)
       .select(col(idCol),
-        round(dotNative(col(vecCol), lit(q.toArray)), 6).as("cos_sim"))
+        round(dot(col(vecCol), lit(q.toArray)), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol)).limit(k)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{argmaxDot, dotNative, vecSum}
+import graft.functions.VectorFunctions.{argmaxDot, vecSum}
 
 /** Product quantization (the FAISS PQ memory layout): split each
   * d-dim vector into `m` segments, k-means each segment to a `k`-entry

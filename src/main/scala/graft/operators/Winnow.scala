@@ -73,8 +73,7 @@ object Winnow extends CompactableIndex {
     * output contract (distinct fingerprints per doc), different hash
     * family — candidate SETS agree to the extent two winnowing hash
     * choices select the same positions (high, spec'd), and both sides
-    * feed the same [[candidatePairs]]. Requires
-    * [[graft.plans.GraftExtensions.register]]. */
+    * feed the same [[candidatePairs]]. */
   def fingerprintsFast(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, w: Int = 8): DataFrame =

@@ -55,9 +55,8 @@ case class BroadcastAsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy for graft's custom logical nodes; injected via
-  * [[GraftExtensions]] (conf route) or `GraftExtensions.register`
-  * (live-session route). */
+/** Planner strategy for graft's custom logical nodes; every session
+  * gets it from [[GraftExtensions]]. */
 object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: BroadcastAsOfJoin =>

@@ -1,22 +1,25 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registration of graft's native expressions.
+/** The one way graft's native functions and its planner strategy reach a
+  * session. `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`
+  * names this class, and Spark applies every provider it finds there to
+  * each session it builds, `newSession()` included. So a bare
+  * `SparkSession.builder().getOrCreate()` resolves `vec_dot` and plans
+  * [[BroadcastAsOfJoin]] with no graft call, and no operator has to ask
+  * its caller to register anything first. None of the injected names is
+  * a Spark builtin, so nothing is shadowed.
   *
-  * Two entry points for the two deployment shapes:
-  *  - `spark.sql.extensions=graft.plans.GraftExtensions` at session
-  *    build time (the standard SparkSessionExtensions route), or
-  *  - `GraftExtensions.register(spark)` on a live session (idempotent;
-  *    used by the query registry since the driver builds its own
-  *    sessions without extension conf).
+  * Setting `spark.sql.extensions=graft.plans.GraftExtensions` is
+  * redundant: it applies the same injections a second time, which
+  * changes nothing.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.injections.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => RewriteDotProduct)
     ext.injectPlannerStrategy(_ => GraftStrategy)
   }
 }
@@ -38,7 +41,7 @@ object GraftExtensions {
       s"$fn: $name must be a literal")
   }
 
-  private val injections: Seq[
+  private[graft] val injections: Seq[
       (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (
       new FunctionIdentifier("vec_dot"),
@@ -139,21 +142,4 @@ object GraftExtensions {
       (children: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           children(0), children(1))))
-
-  /** Idempotent runtime registration: functions into the session's
-    * registry, the dot-product rewrite into the experimental optimizer
-    * batch (the runtime equivalent of injectOptimizerRule). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    injections.foreach { case (ident, info, builder) =>
-      if (!registry.functionExists(ident))
-        registry.registerFunction(ident, info, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteDotProduct
-    if (!spark.experimental.extraStrategies.contains(GraftStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategy
-  }
 }

@@ -37,8 +37,8 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "vec_dot"
 
-  // NULL semantics mirror the higher-order form exactly (so the
-  // optimizer rewrite is observation-equivalent): zip_with null-pads
+  // NULL semantics mirror the higher-order form exactly (so the two
+  // are observation-equivalent): zip_with null-pads
   // unequal lengths and null elements poison the sum, hence result is
   // NULL when lengths differ or any element is null.
   override def nullable: Boolean = true

@@ -214,7 +214,6 @@ object StatsIndex {
     * layout rewrites, like [[build]]. */
   def buildBloom(spark: SparkSession, table: String, c: String,
       expectedItemsPerFile: Long = 1L << 20, numBits: Long = 1L << 23): Unit = {
-    graft.plans.GraftExtensions.register(spark)
     writeManifest(spark,
       spark.read.parquet(table)
         .select(col("_metadata.file_path").as("file"), col(c))

@@ -206,7 +206,6 @@ object MergeSink {
   def bitmapReachParquet(bitmapPath: String, groupCols: Seq[String],
       idCol: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     import org.apache.spark.sql.functions.{coalesce, col, expr}
     val batchBm = batch.groupBy(groupCols.map(col): _*)
       .agg(expr(s"bitmap_agg($idCol)").as("__bm_new"))
@@ -259,7 +258,6 @@ object MergeSink {
     * state-sized, bounded by the network and weight domains. */
   def duplicationFromBitmaps(spark: SparkSession, bitmapPath: String,
       netCol: String = "network", wCol: String = "w"): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import org.apache.spark.sql.functions.{broadcast, col, expr, lit, round, sum}
     val bm = spark.read.parquet(bitmapPath)
     val per = bm.select(col(netCol).as("net_a"),
@@ -328,7 +326,6 @@ object MergeSink {
   def sketchQuantileParquet(sketchPath: String, groupCols: Seq[String],
       valueCol: String)(batch: DataFrame, batchId: Long): Unit = {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.plans.GraftExtensions.register(batch.sparkSession)
     batch.groupBy(groupCols.map(col): _*)
       .agg(expr(s"qsketch_agg($valueCol)").as("qsk"))
       .write.mode(SaveMode.Overwrite)
@@ -340,7 +337,6 @@ object MergeSink {
   def quantilesFromSketches(spark: SparkSession, sketchPath: String,
       groupCols: Seq[String], percentiles: Seq[Double]): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.plans.GraftExtensions.register(spark)
     spark.read.option("basePath", sketchPath).parquet(sketchPath)
       .groupBy(groupCols.map(col): _*)
       .agg(expr("qsketch_combine(qsk)").as("qsk"))
@@ -411,7 +407,6 @@ object MergeSink {
   def anonymityStateParquet(statePath: String, groupCols: Seq[String],
       idCol: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     import org.apache.spark.sql.functions.{col, count, expr, lit}
     batch.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n"), expr(s"bitmap_agg($idCol)").as("bm"))
@@ -428,7 +423,6 @@ object MergeSink {
     * (the C94 build-once contract). */
   def anonymityRelease(spark: SparkSession, statePath: String,
       fullCols: Seq[String], generalizeCol: String, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import org.apache.spark.sql.functions.{col, expr, lit, sum}
     require(fullCols.contains(generalizeCol),
       s"$generalizeCol must be one of $fullCols")

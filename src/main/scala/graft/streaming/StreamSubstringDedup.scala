@@ -22,9 +22,8 @@ object StreamSubstringDedup {
 
   /** Returns a (batchDF, batchId) function for
     * `writeStream.foreachBatch`. `batch` must carry (`idCol`: long,
-    * `textCol`: string). Requires
-    * [[graft.plans.GraftExtensions.register]] on the session (the
-    * native `winnow_fps` kernel). Seed the standing corpus with
+    * `textCol`: string); the fingerprints come from the native
+    * `winnow_fps` kernel. Seed the standing corpus with
     * [[Winnow.seedBatch]] — seeds live at ids ≥ `Winnow.SeedBatchId`,
     * structurally disjoint from the stream's 0..N, and the append
     * below refuses the seed space, so a mis-seeded index fails LOUDLY

@@ -241,7 +241,6 @@ class EmbedContractSpec extends SparkTestBase {
   }
 
   test("float32 binding: widens at the boundary, ≈1e-7 of the double path, IVF-compatible") {
-    graft.plans.GraftExtensions.register(spark)
     val docs = ViewingData.table(spark, Sf, "documents")
       .select("doc_id", "text").limit(80).coalesce(1)
     val f32 = Embed.withEmbeddings(docs, "text", "e", Float32Embedder(dim))
@@ -281,7 +280,6 @@ class EmbedContractSpec extends SparkTestBase {
   }
 
   test("chunk → Embed.withEmbeddings → IVF build → probe composes through the interface") {
-    graft.plans.GraftExtensions.register(spark)
     val path = java.nio.file.Files.createTempDirectory("embed-ivf").toString
     val docs = ViewingData.table(spark, Sf, "documents").select("doc_id", "text")
     val chunks = Embed.withEmbeddings(

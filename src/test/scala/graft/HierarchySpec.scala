@@ -188,6 +188,16 @@ class HierarchySpec extends SparkTestBase {
     // matches as a parent, and its path is NULL
     val dup = Seq("a" -> None, "b" -> Some("a"), "c" -> Some("b"), "c" -> Some("b"), "d" -> Some("a"))
     checkRoutes("duplicate ids", dup.toDF("id", "parent"), dup, "barrier")
+    // a duplicated inner node or root: its children come back once each
+    val dupInner = Seq("a" -> None, "b" -> Some("a"), "b" -> Some("a"), "c" -> Some("b"))
+    checkRoutes("a duplicated inner node", dupInner.toDF("id", "parent"), dupInner, "barrier")
+    val dupRoot = Seq("r" -> None, "r" -> None, "s" -> Some("r"), "t" -> Some("s"))
+    checkRoutes("a duplicated root", dupRoot.toDF("id", "parent"), dupRoot, "barrier")
+    // the join plan of a frontier too big to broadcast
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      checkRoutes("a duplicated inner node, sort-merge join", dupInner.toDF("id", "parent"),
+        dupInner, "barrier")
+    }
     val nullId = Seq("r" -> None, "x" -> Some("r"), (null: String) -> Some("x"), "y" -> Some("x"))
     checkRoutes("a NULL id", nullId.toDF("id", "parent"), nullId, "barrier")
   }

@@ -12,7 +12,6 @@ class IvfPqSpec extends SparkTestBase {
   import spark.implicits._
 
   test("IVF-PQ: persisted layout prunes to nprobe cells; rerank recall@10 >= 0.9") {
-    graft.plans.GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val path = Files.createTempDirectory("ivfpq").toString
     val v = graft.sources.ViewingData.table(spark, dir, "embeddings")
@@ -50,7 +49,7 @@ class IvfPqSpec extends SparkTestBase {
 
     // recall: exact brute-force top-10 vs rerank(ADC shortlist)
     val exact = v.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), dotNative(col("e"), lit(q.toArray)).as("s"))
+      .select(col("vec_id"), dot(col("e"), lit(q.toArray)).as("s"))
       .orderBy(col("s").desc, col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSet
     val got = IvfPq.probe(spark, path, v.filter(col("vec_id") =!= 0), q,
@@ -62,7 +61,6 @@ class IvfPqSpec extends SparkTestBase {
   }
 
   test("appendToIndex: stored-quantizer encode parity; replay idempotent") {
-    graft.plans.GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val path = Files.createTempDirectory("ivfpqapp").toString
     val v = graft.sources.ViewingData.table(spark, dir, "embeddings")
@@ -127,7 +125,6 @@ class IvfPqSpec extends SparkTestBase {
   }
 
   test("quantizerDrift: clustered corpus — flat for in-distribution, fires on drift") {
-    graft.plans.GraftExtensions.register(spark)
     val path = Files.createTempDirectory("ivfpqdrift").toString + "/idx"
     // 8 tight clusters around one-hot centers e_0..e_7 (deterministic
     // small noise) — the distribution PQ is actually good at; the
@@ -225,7 +222,6 @@ class IvfPqSpec extends SparkTestBase {
   }
 
   test("probeIndexedBatch: per-query parity with the single-query probe, one pruned scan") {
-    graft.plans.GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val path = Files.createTempDirectory("ivfpqbatch").toString
     val v = graft.sources.ViewingData.table(spark, dir, "embeddings")
@@ -261,7 +257,6 @@ class IvfPqSpec extends SparkTestBase {
 
   test("streaming increment: nearDupProbe-then-append converges to one-shot pairs") {
     implicit val sqlCtx = spark.sqlContext
-    graft.plans.GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val root = Files.createTempDirectory("ivfpqstream").toString
     val path = s"$root/idx"
@@ -337,7 +332,7 @@ class IvfPqSpec extends SparkTestBase {
         .join(allAssigned.as("b"),
           expr("a.label = b.label AND a.vec_id < b.vec_id"))
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-          round(dotNative(col("a.e"), col("b.e")), 6).as("cos_sim"))
+          round(dot(col("a.e"), col("b.e")), 6).as("cos_sim"))
         .filter(col("cos_sim") >= 0.3)
         .filter(col("id_a") % 4 === 0 || col("id_b") % 4 === 0)
         .select("id_a", "id_b")

@@ -23,13 +23,12 @@ class IvfRangeSpec extends SparkTestBase {
   private def brute(v: org.apache.spark.sql.DataFrame, minCos: Double) =
     v.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(v.filter(col("vec_id") === 0).select(col("e").as("q"))))
-      .withColumn("c", dotNative(col("e"), col("q")))
+      .withColumn("c", dot(col("e"), col("q")))
       .filter(col("c") >= minCos)
       .select(col("vec_id"), round(col("c"), 6).as("cos_sim"))
       .as[(Long, Double)].collect().toSet
 
   test("uniform corpus: prunes nothing, result exactly equals brute force") {
-    graft.plans.GraftExtensions.register(spark)
     val v = ViewingData.table(spark, Sf, "embeddings")
       .select(col("vec_id").cast("long").as("vec_id"), col("label"),
         normalize(toDouble(col("embedding"))).as("e"))
@@ -50,7 +49,6 @@ class IvfRangeSpec extends SparkTestBase {
   }
 
   test("persisted index: file-pruned range probe is exact; stale stats after append refused") {
-    graft.plans.GraftExtensions.register(spark)
     val v = ViewingData.table(spark, Sf, "embeddings")
       .select(col("vec_id").cast("long").as("vec_id"), col("label"),
         normalize(toDouble(col("embedding"))).as("e"))
@@ -69,7 +67,7 @@ class IvfRangeSpec extends SparkTestBase {
       .as[(Long, Double)].collect().toSet
     val want = base.crossJoin(broadcast(query))
       .filter(col("vec_id") =!= 0)
-      .withColumn("c", dotNative(col("e"), col("q")))
+      .withColumn("c", dot(col("e"), col("q")))
       .filter(col("c") >= 0.2)
       .select(col("vec_id"), round(col("c"), 6).as("cos_sim"))
       .as[(Long, Double)].collect().toSet
@@ -105,7 +103,6 @@ class IvfRangeSpec extends SparkTestBase {
   }
 
   test("batch range probe equals per-query single probes (and shares their refusal)") {
-    graft.plans.GraftExtensions.register(spark)
     val v = ViewingData.table(spark, Sf, "embeddings")
       .select(col("vec_id").cast("long").as("vec_id"), col("label"),
         normalize(toDouble(col("embedding"))).as("e"))
@@ -134,7 +131,6 @@ class IvfRangeSpec extends SparkTestBase {
   }
 
   test("clustered corpus: most cells pruned, result still exactly brute force") {
-    graft.plans.GraftExtensions.register(spark)
     val dim = 16
     val rnd = new scala.util.Random(42)
     def unit(raw: Array[Double]): Array[Double] = {
@@ -163,7 +159,7 @@ class IvfRangeSpec extends SparkTestBase {
       .as[(Long, Double)].collect().toSet
     val want = v.filter(col("vec_id") =!= 1)
       .crossJoin(broadcast(query))
-      .withColumn("c", dotNative(col("e"), col("q")))
+      .withColumn("c", dot(col("e"), col("q")))
       .filter(col("c") >= tau)
       .select(col("vec_id"), round(col("c"), 6).as("cos_sim"))
       .as[(Long, Double)].collect().toSet
@@ -181,7 +177,7 @@ class IvfRangeSpec extends SparkTestBase {
       .as[(Int, Seq[Double])].collect().toMap.map { case (k, s) => k -> s.toArray }
     val radii = index.join(cents, "label")
       .withColumn("d", sqrt(greatest(lit(0.0),
-        lit(2.0) - lit(2.0) * dotNative(col("e"), col("centroid")))))
+        lit(2.0) - lit(2.0) * dot(col("e"), col("centroid")))))
       .groupBy("label").agg(max("d").as("r"))
       .as[(Int, Double)].collect().toMap
     val q = v.filter(col("vec_id") === 1).select("e")

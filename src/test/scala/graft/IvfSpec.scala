@@ -19,7 +19,6 @@ class IvfSpec extends SparkTestBase {
   test("IVF recall/nprobe curve: monotone, ≥0.7@4, ≥0.9@8, exact at nprobe=cells") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions._
-    graft.plans.GraftExtensions.register(spark)
     // One index build (the build-once/probe-many shape), swept at four
     // probe widths: any future change to cells, assignment, or probe
     // pruning that degrades the recall curve fails here, not in prod.
@@ -33,7 +32,7 @@ class IvfSpec extends SparkTestBase {
     val nCells = cents.count().toInt
     val query = v.filter(col("vec_id") === 0).select(col("e").as("q"))
     val brute = v.filter(col("vec_id") =!= 0).crossJoin(broadcast(query))
-      .select(col("vec_id"), dotNative(col("e"), col("q")).as("s"))
+      .select(col("vec_id"), dot(col("e"), col("q")).as("s"))
       .orderBy(col("s").desc, col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSet
 
@@ -61,7 +60,6 @@ class IvfSpec extends SparkTestBase {
   test("persisted index: probe matches in-memory probe and prunes to nprobe partitions") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions._
-    graft.plans.GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val path = java.nio.file.Files.createTempDirectory("ivfidx").toString + "/idx"
     val v = graft.sources.ViewingData.table(spark, dir, "embeddings")
@@ -99,7 +97,6 @@ class IvfSpec extends SparkTestBase {
   test("batch probe: parity with per-query probes, one cells scan") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions._
-    graft.plans.GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val path = java.nio.file.Files.createTempDirectory("ivfbatch").toString + "/idx"
     val v = graft.sources.ViewingData.table(spark, dir, "embeddings")
@@ -144,7 +141,6 @@ class IvfSpec extends SparkTestBase {
   test("Lloyd refinement recovers true clusters from a bad seed") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions._
-    graft.plans.GraftExtensions.register(spark)
     // Two tight clusters around (1,0) and (0,1), but the SEED cells
     // are scrambled; one refinement round must re-separate them.
     val v = Seq(
@@ -163,7 +159,6 @@ class IvfSpec extends SparkTestBase {
   test("appendToIndex: fixed-centroid delta lands batch=N; replay idempotent; base untouched") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions._
-    graft.plans.GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val path = java.nio.file.Files.createTempDirectory("ivfapp").toString + "/idx"
     val v = graft.sources.ViewingData.table(spark, dir, "embeddings")
@@ -228,7 +223,6 @@ class IvfSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions._
-    graft.plans.GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val root = java.nio.file.Files.createTempDirectory("ivfstream").toString
     val path = s"$root/idx"
@@ -279,7 +273,7 @@ class IvfSpec extends SparkTestBase {
         .join(allAssigned.as("b"),
           expr("a.label = b.label AND a.vec_id < b.vec_id"))
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-          round(dotNative(col("a.e"), col("b.e")), 6).as("cos_sim"))
+          round(dot(col("a.e"), col("b.e")), 6).as("cos_sim"))
         .filter(col("cos_sim") >= 0.3)
         .filter(col("id_a") % 4 === 0 || col("id_b") % 4 === 0)
         .select("id_a", "id_b")
@@ -292,7 +286,6 @@ class IvfSpec extends SparkTestBase {
   test("centroids are unit vectors and assignment covers every row") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions._
-    graft.plans.GraftExtensions.register(spark)
     val v = Seq(
       (1L, 0, Seq(1.0, 0.0)), (2L, 0, Seq(0.9, 0.1)),
       (3L, 1, Seq(0.0, 1.0)), (4L, 1, Seq(0.1, 0.9))

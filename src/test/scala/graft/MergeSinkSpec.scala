@@ -36,7 +36,6 @@ class MergeSinkSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.register(spark)
     val target = Files.createTempDirectory("bmreach").toString + "/t"
     val input = MemoryStream[(String, String, Long)]
     val q = input.toDF().toDF("seg", "day", "uid").writeStream
@@ -345,7 +344,6 @@ class MergeSinkSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.register(spark)
     val target = Files.createTempDirectory("skq").toString + "/t"
     val input = MemoryStream[(String, Double)]
     val q = input.toDF().toDF("day", "v").writeStream
@@ -387,7 +385,6 @@ class MergeSinkSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.register(spark)
     val target = Files.createTempDirectory("dupbm").toString + "/t"
     // the SAME weighted program rows the batch row folds (C116)
     val weights = graft.sources.ViewingData.table(spark, Sf, "customer")
@@ -428,7 +425,6 @@ class MergeSinkSpec extends SparkTestBase {
   test("duplication readout: coexisting weight cells with no shared viewer emit NO row; shared w=0 viewers emit w_both=0") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val target = Files.createTempDirectory("dupbm0").toString + "/t"
     val input = MemoryStream[(String, Long, Long)]
     val q = input.toDF().toDF("network", "w", "uid").writeStream
@@ -459,7 +455,6 @@ class MergeSinkSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.register(spark)
     val target = Files.createTempDirectory("bmslide").toString + "/t"
     val input = MemoryStream[(String, Long)]
     val q = input.toDF().toDF("day", "uid").writeStream

@@ -99,7 +99,6 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("jpeg_dims walks the segment chain to SOF; NULL for non-JPEG / no-SOF") {
-    graft.plans.GraftExtensions.register(spark)
     val rows = Seq(
       (1L, realJpeg(1024, 768)),
       (2L, realJpeg(65500, 1)), // dims are unsigned 16-bit

@@ -1,27 +1,34 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
-import graft.plans.GraftExtensions
 import graft.sources.ViewingData
 
 class NativeExpressionSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** The reference dot product: Spark's own higher-order fold, which no
+    * rule rewrites, so it never plans as vec_dot. */
+  def foldDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
   test("vec_dot is bitwise-identical to the higher-order dot on real embeddings") {
-    GraftExtensions.register(spark)
     val v = ViewingData.table(spark, Sf, "embeddings")
       .select(col("vec_id"), VectorFunctions.toDouble(col("embedding")).as("e"))
     val q = v.limit(1).select(col("e").as("qe"))
     val both = v.crossJoin(broadcast(q)).select(
-      VectorFunctions.dot(col("e"), col("qe")).as("hof"),
-      VectorFunctions.dotNative(col("e"), col("qe")).as("native"))
-    val diffs = both.filter(col("hof") =!= col("native")).count()
+      foldDot(col("e"), col("qe")).as("hof"),
+      VectorFunctions.dot(col("e"), col("qe")).as("native"))
+    val plan = both.queryExecution.optimizedPlan.toString
+    assert(plan.contains("zip_with") && plan.contains("vec_dot"),
+      s"the reference must stay a fold beside vec_dot:\n$plan")
+    assert(both.count() > 0)
+    val diffs = both.filter(!(col("hof") <=> col("native"))).count()
     assert(diffs == 0, "summation order must match the HOF left fold exactly")
   }
 
   test("vec_dot participates in WholeStageCodegen over a parquet scan") {
-    GraftExtensions.register(spark)
     // Inputs must be plain array<double> attributes: a transform-lambda
     // cast in the same projection is CodegenFallback and would push the
     // whole stage to interpreted eval (the pair-join queries pre-cast
@@ -31,7 +38,7 @@ class NativeExpressionSpec extends SparkTestBase {
       .select(col("vec_id"), VectorFunctions.toDouble(col("embedding")).as("e"))
       .write.parquet(tmp)
     val df = spark.read.parquet(tmp)
-      .select(VectorFunctions.dotNative(col("e"), col("e")).as("d"))
+      .select(VectorFunctions.dot(col("e"), col("e")).as("d"))
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     // `*(n)` prefixes mark operators inside a WholeStageCodegen stage
@@ -39,26 +46,37 @@ class NativeExpressionSpec extends SparkTestBase {
       s"expected vec_dot inside a codegen stage in:\n$plan")
   }
 
-  test("RewriteDotProduct turns the declarative HOF fold into vec_dot") {
-    GraftExtensions.register(spark)
-    val tmp = java.nio.file.Files.createTempDirectory("vecdot_rw").toString + "/t"
+  test("VectorFunctions.dot plans vec_dot and matches the reference fold") {
+    val tmp = java.nio.file.Files.createTempDirectory("vecdot_ref").toString + "/t"
     ViewingData.table(spark, Sf, "embeddings")
       .select(col("vec_id"), VectorFunctions.toDouble(col("embedding")).as("e"))
       .write.parquet(tmp)
-    val hof = spark.read.parquet(tmp)
+    val native = spark.read.parquet(tmp)
       .select(col("vec_id"), VectorFunctions.dot(col("e"), col("e")).as("d"))
-    val plan = hof.queryExecution.executedPlan.toString
-    assert(plan.contains("vec_dot"),
-      s"optimizer should rewrite aggregate(zip_with(...)) to vec_dot:\n$plan")
-    // and it must still compute the same values as the unrewritten form
-    val expected = spark.read.parquet(tmp)
-      .select(col("vec_id"), VectorFunctions.dotNative(col("e"), col("e")).as("d"))
-    assert(hof.collect().map(_.getDouble(1)).sum ==
-      expected.collect().map(_.getDouble(1)).sum)
+    val plan = native.queryExecution.executedPlan.toString
+    assert(plan.contains("vec_dot") && !plan.contains("zip_with"),
+      s"VectorFunctions.dot should plan as vec_dot alone:\n$plan")
+    val reference = spark.read.parquet(tmp)
+      .select(col("vec_id"), foldDot(col("e"), col("e")).as("d"))
+    assert(native.count() > 0)
+    assert(native.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      reference.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+    // NULL wherever the fold is NULL: unequal lengths, a NULL element, a
+    // NULL array; an empty pair sums to 0.0
+    val edges = Seq[(Option[Seq[Option[Double]]], Option[Seq[Option[Double]]])](
+      (Some(Seq(Some(1.0), Some(2.0))), Some(Seq(Some(3.0)))),
+      (Some(Seq(Some(1.0), None)), Some(Seq(Some(3.0), Some(4.0)))),
+      (None, Some(Seq(Some(1.0)))),
+      (Some(Nil), Some(Nil)),
+      (Some(Seq(Some(0.1), Some(0.2))), Some(Seq(Some(0.3), Some(0.7))))
+    ).toDF("a", "b")
+      .select(VectorFunctions.dot(col("a"), col("b")), foldDot(col("a"), col("b")))
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+    assert(edges.map(_._1) == edges.map(_._2))
+    assert(edges.map(_._1) == Seq(None, None, None, Some(0.0), Some(0.1 * 0.3 + 0.2 * 0.7)))
   }
 
   test("vec_q8 quantization: bounded error, exact edge cases, null semantics") {
-    GraftExtensions.register(spark)
     // literal path (constant folding exercises interpreted eval)
     val edge = spark.sql("""SELECT
         vec_q8(array(127.0d, -127.0d, 0.0d)) AS exact,
@@ -81,7 +99,7 @@ class NativeExpressionSpec extends SparkTestBase {
     val q = v.limit(1).select(col("e").as("qe"), col("z").as("qz"))
     val err = v.crossJoin(broadcast(q))
       .select(abs(VectorFunctions.dotQ8(col("z"), col("qz")) -
-        VectorFunctions.dotNative(col("e"), col("qe"))).as("err"))
+        VectorFunctions.dot(col("e"), col("qe"))).as("err"))
       .agg(max("err")).as[Double].collect().head
     // unit vectors, d=8: worst-case error ≈ d · (s_a·|b| + s_b·|a|)/2
     // with s ≤ 1/127 — comfortably inside 0.05
@@ -89,7 +107,6 @@ class NativeExpressionSpec extends SparkTestBase {
   }
 
   test("q8 brute-force top-10 recalls ≥0.9 of full-precision top-10") {
-    GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val v = ViewingData.table(spark, dir, "embeddings")
       .repartition(spark.sparkContext.defaultParallelism)
@@ -102,7 +119,7 @@ class NativeExpressionSpec extends SparkTestBase {
       .orderBy(col("s").desc, col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSet
     val full = top(v.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
-      .select(col("vec_id"), VectorFunctions.dotNative(col("e"), col("qe")).as("s")))
+      .select(col("vec_id"), VectorFunctions.dot(col("e"), col("qe")).as("s")))
     val q8 = top(v.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
       .select(col("vec_id"), VectorFunctions.dotQ8(col("z"), col("qz")).as("s")))
     val recall = (full & q8).size / 10.0
@@ -110,7 +127,6 @@ class NativeExpressionSpec extends SparkTestBase {
   }
 
   test("vec_sum matches the posexplode mean pipeline and skips nulls") {
-    GraftExtensions.register(spark)
     val v = ViewingData.table(spark, Sf, "embeddings")
       .select(col("label"), VectorFunctions.toDouble(col("embedding")).as("e"))
       .repartition(8) // partial buffers must merge across partitions
@@ -135,7 +151,6 @@ class NativeExpressionSpec extends SparkTestBase {
   }
 
   test("vec_argmax_dot matches a driver-side argmax and breaks ties low") {
-    GraftExtensions.register(spark)
     val v = ViewingData.table(spark, Sf, "embeddings")
       .select(col("vec_id"), VectorFunctions.toDouble(col("embedding")).as("e"))
     val cands = v.orderBy("vec_id").limit(5)
@@ -160,9 +175,7 @@ class NativeExpressionSpec extends SparkTestBase {
     assert(tied == 0, "ties must resolve to the first (lowest) index")
   }
 
-  test("registration is idempotent and works via SQL too") {
-    GraftExtensions.register(spark)
-    GraftExtensions.register(spark)
+  test("the service-loaded session extension serves vec_dot to SQL") {
     assert(spark.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .as[Double].collect().head == 11.0)
   }

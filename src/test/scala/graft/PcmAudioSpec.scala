@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.PcmAudio
-import graft.plans.GraftExtensions
 import graft.sources.ViewingData
 
 class PcmAudioSpec extends SparkTestBase {
@@ -44,7 +43,6 @@ class PcmAudioSpec extends SparkTestBase {
   }
 
   test("pcm_frames runs inside WholeStageCodegen over a parquet scan") {
-    GraftExtensions.register(spark)
     val df = ViewingData.table(spark, Sf, "documents")
       .select(size(call_function(
         "pcm_frames", col("text").cast("binary"), lit(32))).as("n"))

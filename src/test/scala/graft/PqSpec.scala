@@ -9,7 +9,6 @@ class PqSpec extends SparkTestBase {
   import spark.implicits._
 
   test("PQ: train/encode/ADC — valid codes, recall vs exact dot, 32x narrower rows") {
-    graft.plans.GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val m = 16; val k = 16
     val v = graft.sources.ViewingData.table(spark, dir, "embeddings")
@@ -29,7 +28,7 @@ class PqSpec extends SparkTestBase {
     val q = v.filter(col("vec_id") === 0).select("e").as[Seq[Double]].head()
     val exact = v.filter(col("vec_id") =!= 0)
       .select(col("vec_id"),
-        dotNative(col("e"), lit(q.toArray)).as("s"))
+        dot(col("e"), lit(q.toArray)).as("s"))
       .orderBy(col("s").desc, col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSet
     val adc = Pq.adcTopK(spark, codes.filter(col("vec_id") =!= 0), books,
@@ -47,7 +46,7 @@ class PqSpec extends SparkTestBase {
     val shortlist = Pq.adcTopK(spark, codes.filter(col("vec_id") =!= 0), books,
       q, "vec_id", m, 100).select("vec_id")
     val reranked = v.join(shortlist, "vec_id")
-      .select(col("vec_id"), dotNative(col("e"), lit(q.toArray)).as("s"))
+      .select(col("vec_id"), dot(col("e"), lit(q.toArray)).as("s"))
       .orderBy(col("s").desc, col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSet
     val rerankRecall = (exact & reranked).size / 10.0

@@ -83,7 +83,6 @@ class RagOpsSpec extends SparkTestBase {
   }
 
   test("weighted k-sample: selection is exactly the k smallest -ln(u)/w keys (window twin)") {
-    graft.plans.GraftExtensions.register(spark)
     // heavy-tailed weights so selection really depends on w
     val rows = (1 to 200).map(i => ("g" + (i % 3), i.toLong,
       if (i % 17 == 0) 5000L else 1L + i % 7))
@@ -119,7 +118,6 @@ class RagOpsSpec extends SparkTestBase {
   }
 
   test("weighted k-sample honors FRACTIONAL weights (no silent floor to uniform)") {
-    graft.plans.GraftExtensions.register(spark)
     // 100 light ids at w=0.01, 10 heavy at w=0.9 — a 0.01-vs-0.9 split
     // a floor-at-1.0 clamp would erase entirely (the first cut did)
     val rows = (1 to 110).map(i =>

@@ -23,7 +23,6 @@ class RagPipelineSpec extends SparkTestBase {
         QueriesLLM.hashEmbed(col("chunk_text"), dim).as("e"))
 
   test("q_hybrid_search_indexed: the exact probe path engages and matches the brute row") {
-    graft.plans.GraftExtensions.register(spark)
     def rows(name: String) =
       SparkEntry.queries(name)(spark, Sf).collect().map(_.toString).sorted.toSeq
     // engine-side equality with the brute-force row (both claim the
@@ -43,7 +42,6 @@ class RagPipelineSpec extends SparkTestBase {
   }
 
   test("chunk → embed → IVF index → probe: every unique chunk self-retrieves; appended docs retrievable without retrain") {
-    graft.plans.GraftExtensions.register(spark)
     val path = java.nio.file.Files.createTempDirectory("rag-ivf").toString
     val docs = ViewingData.table(spark, Sf, "documents").select("doc_id", "text")
     val chunks = embedChunks(docs).localCheckpoint()
@@ -93,7 +91,6 @@ class RagPipelineSpec extends SparkTestBase {
 
   test("always-on RAG ingestion: foreachBatch chunk→embed→append keeps the index serving") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    graft.plans.GraftExtensions.register(spark)
     implicit val sqlCtx = spark.sqlContext
     val path = java.nio.file.Files.createTempDirectory("rag-stream").toString
     val docs = ViewingData.table(spark, Sf, "documents").select("doc_id", "text")

@@ -45,7 +45,6 @@ class SketchSpec extends SparkTestBase {
   }
 
   test("bitmap_distinct == exact COUNT(DISTINCT); daily bitmap rollup == direct") {
-    graft.plans.GraftExtensions.register(spark)
     val ev = graft.sources.ViewingData.table(spark, Sf, "events")
       .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
     val exact = ev.groupBy("event_type")
@@ -67,7 +66,6 @@ class SketchSpec extends SparkTestBase {
 
   test("bitmap_and_count: exact overlap, unequal buffer widths, empty intersection") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val df = Seq(
       ("a", 1L), ("a", 2L), ("a", 1000000L),          // wide buffer
       ("b", 2L), ("b", 3L),                           // narrow buffer
@@ -85,7 +83,6 @@ class SketchSpec extends SparkTestBase {
 
   test("bitmap buffer grows and serializes across sparse id ranges") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     // ids spanning five orders of magnitude force buffer growth,
     // serialization of uneven word lengths, and merge of unequal sizes
     val ids = Seq(0L, 1L, 63L, 64L, 1000L, 100000L, 1000000L, 1000000L)
@@ -95,7 +92,6 @@ class SketchSpec extends SparkTestBase {
   }
 
   test("quantile sketches: GK rank bound holds for direct AND daily-merged digests") {
-    graft.plans.GraftExtensions.register(spark)
     val ev = graft.sources.ViewingData.table(spark, Sf, "events")
       .select(col("event_type"), to_date(col("ts")).as("day"),
         col("value").cast("double").as("v"))
@@ -125,7 +121,6 @@ class SketchSpec extends SparkTestBase {
     // ONE select. A literal local name in QSketchEstimate.doGenCode
     // makes janino reject the whole stage (caught in a verify log as a
     // silent interpreted fallback) — strict mode turns that into a throw.
-    graft.plans.GraftExtensions.register(spark)
     val ev = graft.sources.ViewingData.table(spark, Sf, "events")
       .select(col("event_type"), col("value").cast("double").as("v"))
     withStrictCodegen {

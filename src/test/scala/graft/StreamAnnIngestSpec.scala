@@ -36,7 +36,7 @@ class StreamAnnIngestSpec extends SparkTestBase {
     val ref = all.as("x").join(all.as("y"),
         expr("x.bucket = y.bucket AND x.vec_id < y.vec_id"))
       .select(col("x.vec_id").as("id_std"), col("y.vec_id").as("id_new"),
-        round(graft.functions.VectorFunctions.dotNative(col("x.e"), col("y.e")), 6)
+        round(graft.functions.VectorFunctions.dot(col("x.e"), col("y.e")), 6)
           .as("cos_sim"))
       .filter(col("cos_sim") >= AnnBuckets.Tau &&
         (col("id_new") % 4 === 0 || col("id_std") % 4 === 0))

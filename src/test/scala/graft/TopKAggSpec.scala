@@ -4,7 +4,7 @@ import scala.util.Random
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.{GraftExtensions, TopKBuffer}
+import graft.plans.TopKBuffer
 import graft.sources.ViewingData
 
 /** [[plans.TopKByAgg]]: kernel properties of the k-bounded heap,
@@ -39,7 +39,6 @@ class TopKAggSpec extends SparkTestBase {
   }
 
   test("matches exact window ranking on orders (the q_topk_agg shape)") {
-    GraftExtensions.register(spark)
     val got = SparkEntry.queries("q_topk_agg")(spark, Sf)
       .orderBy("o_orderpriority", "rnk")
       .collect()
@@ -59,7 +58,6 @@ class TopKAggSpec extends SparkTestBase {
   }
 
   test("plan pre-aggregates: partial topk_by on the map side, no window sort of all rows") {
-    GraftExtensions.register(spark)
     val plan = ViewingData.table(spark, Sf, "orders")
       .groupBy("o_orderpriority")
       .agg(expr("topk_by(o_totalprice, o_orderkey, 3)").as("top"))
@@ -74,7 +72,6 @@ class TopKAggSpec extends SparkTestBase {
 
   test("NaN and null handling: nulls skipped, NaN ranks above +Inf (Spark DESC order)") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val df = Seq(
       (Some(Double.NaN), Some(1L)),
       (Some(Double.PositiveInfinity), Some(2L)),

@@ -151,7 +151,6 @@ class WinnowSpec extends SparkTestBase {
   }
 
   test("winnow_fps native expression runs under strict codegen") {
-    graft.plans.GraftExtensions.register(spark)
     withStrictCodegen {
       val docs = Seq((1L, "the quick brown fox jumps over the lazy dog body"))
         .toDF("doc_id", "text")
@@ -162,7 +161,6 @@ class WinnowSpec extends SparkTestBase {
   }
 
   test("fast (rolling) flavor finds every strong md5-flavor pair") {
-    graft.plans.GraftExtensions.register(spark)
     val docs = spark.read.parquet(s"$Sf/documents.parquet")
       .select("doc_id", "text")
     val md5Strong = Winnow.candidatePairs(
@@ -180,7 +178,6 @@ class WinnowSpec extends SparkTestBase {
   }
 
   test("Structured Streaming foreachBatch loop over a persisted index converges") {
-    graft.plans.GraftExtensions.register(spark)
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("winstream").toString
     val idxPath = s"$base/idx"
@@ -234,7 +231,6 @@ class WinnowSpec extends SparkTestBase {
   }
 
   test("in-loop compaction keeps n_shared exact across the replay crash window") {
-    graft.plans.GraftExtensions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("winloop").toString
     val (idxPath, pairsPath) = (s"$base/idx", s"$base/pairs")
     val docs = spark.read.parquet(s"$Sf/documents.parquet")
