@@ -165,7 +165,7 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
       } finally {
-        // Queries that localCheckpoint() intermediate tables (minhash
+        // Queries that materialize intermediate tables (minhash
         // signatures, decontamination grams, affected-rebuild weighted)
         // never drop those blocks themselves; across 86 queries × 2
         // passes they pile up in the block manager and squeeze

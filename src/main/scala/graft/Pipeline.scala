@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AudienceMetrics, IncrementalMerge, PanelAsOf, Sessionize}
+import graft.operators.{AudienceMetrics, Barrier, IncrementalMerge, PanelAsOf, Sessionize}
 import graft.sources.ViewingData
 
 /** The reference's full ETL DAG (etl-ddl-backfill.sql), composed from
@@ -123,7 +123,7 @@ object Pipeline {
     // union subtree is instantiated at EVERY reference — target, batch,
     // and the anti-join's key-distinct side — 12 scans of the feed in
     // one plan (Prof `scans` sweep).
-    val ve = viewingEvents(spark, dir).localCheckpoint()
+    val ve = Barrier.materialize(viewingEvents(spark, dir))._1
     val maxD = broadcast(ingestWatermark(spark, dir))
     val target = ve.crossJoin(maxD)
       .filter(col("metadata_date") <= date_sub(col("max_d"), 7)).drop("max_d")
@@ -142,7 +142,7 @@ object Pipeline {
     * backfill's keys would blow the driver. */
   def upsertMerge(spark: SparkSession, dir: String): DataFrame = {
     // materialized-table mirror — see incrementalMerge
-    val ve = viewingEvents(spark, dir).localCheckpoint()
+    val ve = Barrier.materialize(viewingEvents(spark, dir))._1
     val maxD = broadcast(ingestWatermark(spark, dir))
     val target = ve.crossJoin(maxD)
       .filter(col("metadata_date") <= date_sub(col("max_d"), 7)).drop("max_d")
@@ -162,7 +162,7 @@ object Pipeline {
     // the cast-heavy union+join pipeline is instantiated twice (fresh
     // slice + full history) since the two subtrees differ and share no
     // exchange.
-    val weighted = weightedEvents(spark, dir).localCheckpoint()
+    val weighted = Barrier.materialize(weightedEvents(spark, dir))._1
     val maxD = broadcast(ingestWatermark(spark, dir))
     // Only the fresh slice's (tiny, distinct) group keys feed the
     // broadcast semi join, so the full-history side is scanned once.
@@ -195,15 +195,16 @@ object Pipeline {
     // the windows table is referenced three times (existing, target
     // slice, overlapping batch) — materialize the tiny frame once
     // instead of re-deriving distinct Mondays from the feed per
-    // reference (6 feed scans → 1; Prof `scans` sweep)
-    val windows = panelWindows(spark, dir).localCheckpoint()
-    val cutoff = broadcast(windows.agg(date_sub(max("panel_monday"), 14).as("cut")))
-    val target = windows.crossJoin(cutoff)
-      .filter(col("panel_monday") <= col("cut")).drop("cut")
+    // reference (6 feed scans → 1; Prof `scans` sweep). The latest
+    // Monday is observed on the barrier's own job and applied as a
+    // literal: no aggregate job, no cross joins
+    val (windows, latest) = Barrier.materialize(panelWindows(spark, dir),
+      max("panel_monday"))
+    val cut = date_sub(lit(latest.get(0)).cast("date"), 14)
+    val target = windows.filter(col("panel_monday") <= cut)
     // the batch overlaps the target on purpose: MERGE must ignore
     // already-present Mondays
-    val batch = windows.crossJoin(cutoff)
-      .filter(col("panel_monday") > date_sub(col("cut"), 21)).drop("cut")
+    val batch = windows.filter(col("panel_monday") > date_sub(cut, 21))
     IncrementalMerge.insertOnly(target, batch, Seq("panel_monday"))
   }
 

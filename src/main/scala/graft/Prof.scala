@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * library surface).
   *
   *  - `runMain graft.Prof scans` — every registry query's file-scan
-  *    count per table (flags avoidable re-reads; localCheckpoint
+  *    count per table (flags avoidable re-reads; Barrier
   *    barriers legitimately hide their upstream scan).
   *  - `runMain graft.Prof time <variants>` — noop-sink timings.
   */

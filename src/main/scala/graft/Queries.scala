@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Barrier
 import graft.sources.ViewingData
 
 /** One registry row per SURVEY.md §2 operator: the Spark implementation
@@ -364,15 +365,18 @@ FROM scd"""))
     * the corrected members is what the hash check proves. Shape: the
     * valid-interval filter reduces to the covering week first; both
     * argmax-by-tx picks are windows over that already-small slice
-    * sharing one smba_id partitioning; the as-of date is a broadcast
-    * one-row frame (derived from the data — no wall clock). */
+    * sharing one smba_id partitioning; the as-of date is observed on
+    * the snapshots' barrier job and applied as a literal (derived
+    * from the data — no wall clock). */
   private val bitemporal = Q(
     "q_bitemporal",
     (s, dir) => {
       // control-plane-sized (|members| × |weeks|); checkpoint once —
       // base/correction/as-of branches otherwise re-instantiate the
       // customer × mondays build (Prof showed 6 scans of each table)
-      val snaps = ViewingData.geoWeights(s, dir).localCheckpoint()
+      val (snaps, firstWeek) = Barrier.materialize(ViewingData.geoWeights(s, dir),
+        min("metadata_date"))
+      val vDate = date_add(lit(firstWeek.get(0)).cast("date"), 9)
       val base = snaps.select(
         col("smba_id"),
         col("metadata_date").as("valid_from"),
@@ -387,9 +391,9 @@ FROM scd"""))
           date_add(col("metadata_date"), 3).as("tx_from"),
           (col("geo_weight") + 10).as("geo_weight"))
       val versions = base.unionByName(corr)
-      val vd = snaps.agg(date_add(min("metadata_date"), 9).as("v_date"))
-      val covering = versions.join(broadcast(vd),
-          col("valid_from") <= col("v_date") && col("v_date") < col("valid_to"))
+      val covering = versions
+        .filter(col("valid_from") <= vDate && vDate < col("valid_to"))
+        .withColumn("v_date", vDate)
       val byTx = Window.partitionBy("smba_id").orderBy(col("tx_from").desc)
       val thenV = covering.filter(col("tx_from") <= col("v_date"))
         .withColumn("rn", row_number().over(byTx)).filter(col("rn") === 1)
@@ -1036,7 +1040,7 @@ FROM b JOIN f USING (event_id)"""))
       // + upserts) and a real CDC batch arrives materialized anyway —
       // without it the demo re-derives the changes from events per
       // consumer (Prof census: 5 events scans -> 2)
-      val changes = c1.unionByName(c2).localCheckpoint()
+      val changes = Barrier.materialize(c1.unionByName(c2))._1
       operators.IncrementalMerge.applyCdc(
           base, changes, Seq("event_id"), Seq("version"), "op")
         .select(col("event_id"), round(col("value"), 6).as("value"))
@@ -1078,14 +1082,12 @@ SELECT event_id, round(value, 6) AS value FROM winner WHERE op <> 'delete'"""))
     "q_ivm_agg",
     (s, dir) => {
       val ev = t(s, dir, "events")
-      val base = ev.filter(col("event_id") % 7 =!= 0)
+      val base = Barrier.materialize(ev.filter(col("event_id") % 7 =!= 0)
         .select(col("event_id"),
           (col("event_id") % 100).as("grp"),
-          floor(col("value")).cast("long").as("v"))
-        .localCheckpoint()
-      val view = base.groupBy("grp")
-        .agg(count(lit(1)).as("cnt"), sum("v").as("total"))
-        .localCheckpoint()
+          floor(col("value")).cast("long").as("v")))._1
+      val view = Barrier.materialize(base.groupBy("grp")
+        .agg(count(lit(1)).as("cnt"), sum("v").as("total")))._1
       val c1 = ev.filter(col("event_id") % 5 === 0).select(
         col("event_id"), floor(col("value") * 2).cast("long").as("v"),
         lit(1).as("version"),
@@ -1096,12 +1098,11 @@ SELECT event_id, round(value, 6) AS value FROM winner WHERE op <> 'delete'"""))
         lit(2).as("version"),
         when(col("event_id") % 4 === 0, lit("delete")).otherwise(lit("upsert"))
           .as("op"))
-      val winner = c1.unionByName(c2)
+      val winner = Barrier.materialize(c1.unionByName(c2)
         .groupBy("event_id")
         .agg(max_by(struct(col("v"), col("op")), col("version")).as("w"))
         .select(col("event_id"), (col("event_id") % 100).as("grp"),
-          col("w.v").as("new_v"), col("w.op").as("op"))
-        .localCheckpoint()
+          col("w.v").as("new_v"), col("w.op").as("op")))._1
       // pre-image lookup: the ONLY base touch — the |changes| key set
       // broadcasts into a semi-join point-read, and the bounded result
       // broadcasts back onto the change batch

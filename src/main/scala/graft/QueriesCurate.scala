@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.operators.Barrier
 import graft.sources.ViewingData
 
 /** Corpus-curation operators beyond the dedup/mixing families already
@@ -184,13 +185,12 @@ HAVING COUNT(*) >= 2$havingExtra"""
       // the token table is built ONCE (checkpoint) for both consumers
       // — the bucket-mass aggregate and the per-doc score join — the
       // text_unigram_logprob discipline
-      val toks = docs.select(col("doc_id"), col("lang"),
+      val toks = Barrier.materialize(docs.select(col("doc_id"), col("lang"),
         explode(TextFunctions.tokens(col("text"))).as("tok"))
         .withColumn("b",
           conv(substring(md5(col("tok").cast("binary")), 1, 4), 16, 10)
             .cast("long") % 64)
-        .drop("tok")
-        .localCheckpoint()
+        .drop("tok"))._1
       val bt = toks.groupBy("b").agg(
         count(lit(1)).as("r"),
         count(when(col("lang") === "en", 1)).as("t"))
@@ -238,8 +238,7 @@ ORDER BY score DESC, doc_id LIMIT 50"""))
         .select(col("doc_id"), col("lang"))
       // |langs|-row fold checkpoints so the n_min derivation doesn't
       // re-aggregate the corpus
-      val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_lang"))
-        .localCheckpoint()
+      val counts = Barrier.materialize(docs.groupBy("lang").agg(count(lit(1)).as("n_lang")))._1
       val nmin = counts.agg(min("n_lang").as("n_min"))
       val withP = docs
         .join(broadcast(counts), "lang")
@@ -318,13 +317,13 @@ SELECT id_a, id_b, round(jx, 6) AS jaccard FROM j WHERE jx >= 0.5"""))
     "text_segment_dedup",
     (s, dir) => {
       val maxSegDf = 2
-      val segs = ViewingData.table(s, dir, "documents")
+      // feeds the df fold AND the rebuild join
+      val segs = Barrier.materialize(ViewingData.table(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
         .select(col("doc_id"), expr(
           """transform(sequence(0, cast(ceil(size(ws) / 10.0) as int) - 1),
              i -> array_join(slice(ws, i * 10 + 1, 10), ' '))""").as("segs"))
-        .select(col("doc_id"), posexplode(col("segs")).as(Seq("idx", "seg")))
-        .localCheckpoint() // feeds the df fold AND the rebuild join
+        .select(col("doc_id"), posexplode(col("segs")).as(Seq("idx", "seg"))))._1
       val dfTab = segs.groupBy("seg")
         .agg(countDistinct("doc_id").as("sdf"))
       segs.join(dfTab, "seg")

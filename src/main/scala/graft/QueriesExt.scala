@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Components, DocPack}
+import graft.operators.{Barrier, Components, DocPack}
 import graft.sources.ViewingData
 
 /** Round-2 breadth: the Snowflake-surface capabilities the reference's
@@ -204,7 +204,7 @@ QUALIFY draw_rank <= 100"""))
     (s, dir) => {
       // Exactly D2's pairs (shared helper), materialized once — the
       // symmetrize union in Components consumes them twice.
-      val pairs = QueriesML.ngramJaccardPairsCached(s, dir).localCheckpoint()
+      val pairs = Barrier.materialize(QueriesML.ngramJaccardPairsCached(s, dir))._1
       Components.connectedComponents(pairs, "id_a", "id_b")
         .select(col("id").as("doc_id"), col("comp").as("canonical_id"))
     },
@@ -223,7 +223,7 @@ SELECT s AS doc_id, MIN(n) AS canonical_id FROM reach GROUP BY s"""))
   private val dedupKeepCanonical = Q(
     "dedup_keep_canonical",
     (s, dir) => {
-      val pairs = QueriesML.ngramJaccardPairsCached(s, dir).localCheckpoint()
+      val pairs = Barrier.materialize(QueriesML.ngramJaccardPairsCached(s, dir))._1
       val dupes = Components.connectedComponents(pairs, "id_a", "id_b")
         .filter(col("id") =!= col("comp"))
         .select(col("id").as("doc_id"))
@@ -251,7 +251,7 @@ FROM documents d ANTI JOIN dupes USING (doc_id)"""))
   private val dedupClusterStats = Q(
     "dedup_cluster_stats",
     (s, dir) => {
-      val pairs = QueriesML.ngramJaccardPairsCached(s, dir).localCheckpoint()
+      val pairs = Barrier.materialize(QueriesML.ngramJaccardPairsCached(s, dir))._1
       val sizes = Components.connectedComponents(pairs, "id_a", "id_b")
         .groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
       val total = ViewingData.table(s, dir, "documents")
@@ -291,7 +291,7 @@ FROM hist"""))
   private val dedupSurvivorship = Q(
     "dedup_survivorship",
     (s, dir) => {
-      val pairs = QueriesML.ngramJaccardPairsCached(s, dir).localCheckpoint()
+      val pairs = Barrier.materialize(QueriesML.ngramJaccardPairsCached(s, dir))._1
       val comp = Components.connectedComponents(pairs, "id_a", "id_b")
         .select(col("id").as("doc_id"), col("comp").as("canonical_id"))
       val members = comp.join(
@@ -621,13 +621,12 @@ FROM events GROUP BY event_type"""))
   private val audienceOverlap = Q(
     "q_audience_overlap",
     (s, dir) => {
-      // localCheckpoint: both crossJoin sides read the SAME 5-row
+      // materialized: both crossJoin sides read the SAME 5-row
       // bitmap table — without it each side re-scans events (Prof
       // census catches the double read)
-      val bm = ViewingData.table(s, dir, "events")
+      val bm = Barrier.materialize(ViewingData.table(s, dir, "events")
         .groupBy("event_type")
-        .agg(expr("bitmap_agg(user_id)").as("bm"))
-        .localCheckpoint()
+        .agg(expr("bitmap_agg(user_id)").as("bm")))._1
       val a = bm.select(col("event_type").as("type_a"), col("bm").as("bm_a"))
       val b = bm.select(col("event_type").as("type_b"), col("bm").as("bm_b"))
       a.crossJoin(broadcast(b))
@@ -1186,10 +1185,9 @@ GROUP BY c.cohort_week, (a.week - c.cohort_week) // 7"""))
   private val minhashSimilarity = Q(
     "q_minhash_similarity",
     (s, dir) => {
-      val users = ViewingData.table(s, dir, "events")
+      val users = Barrier.materialize(ViewingData.table(s, dir, "events")
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
-        .distinct()
-        .localCheckpoint() // feeds signatures AND the exact twin
+        .distinct())._1 // feeds signatures AND the exact twin
       val sigs = users.groupBy("event_type")
         .agg(count(lit(1)).as("nu"),
           (0 until 16).map(i =>

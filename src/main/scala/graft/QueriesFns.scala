@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Barrier
 import graft.sources.ViewingData
 
 /** Snowflake scalar/aggregate/window FUNCTION-surface parity rows the
@@ -747,7 +748,10 @@ FROM events GROUP BY 1, 2, 3"""))
   private val anonymityEnforce = Q(
     "q_anonymity_enforce",
     (s, dir) => {
-      val g = ViewingData.table(s, dir, "events")
+      // build-once: both release branches read the SAME group table —
+      // without the barrier each branch re-instantiates the audit
+      // aggregate and the fact table is scanned twice (plan-pinned)
+      val g = Barrier.materialize(ViewingData.table(s, dir, "events")
         .select(
           substring((col("user_id") % 90000 + 10000).cast("string"), 1, 3)
             .as("zip3"),
@@ -755,11 +759,7 @@ FROM events GROUP BY 1, 2, 3"""))
           hour(col("ts")).as("hh"),
           col("user_id"))
         .groupBy("zip3", "day", "hh")
-        .agg(count(lit(1)).as("n"), countDistinct("user_id").as("u"))
-        // build-once: both release branches read the SAME group table —
-        // without the barrier each branch re-instantiates the audit
-        // aggregate and the fact table is scanned twice (plan-pinned)
-        .localCheckpoint()
+        .agg(count(lit(1)).as("n"), countDistinct("user_id").as("u")))._1
       val pass = g.filter(col("u") >= 5)
         .select(col("zip3"), col("day"), col("hh"), col("n"))
       val gen = g.filter(col("u") < 5)
@@ -829,10 +829,9 @@ FROM g"""))
     (s, dir) => {
       // build-once: the universe aggregate and the broadcast join both
       // read the SAME panel-sized weight table (one customer scan)
-      val w = ViewingData.table(s, dir, "customer")
+      val w = Barrier.materialize(ViewingData.table(s, dir, "customer")
         .select(col("c_custkey").as("uid"),
-          floor(abs(col("c_acctbal"))).cast("long").as("wgt"))
-        .localCheckpoint()
+          floor(abs(col("c_acctbal"))).cast("long").as("wgt")))._1
       val universe = w.agg(sum("wgt").as("universe"))
       val f = ViewingData.table(s, dir, "events")
         .filter(col("event_type") === "view")
@@ -946,10 +945,9 @@ FROM per"""))
       // l_orderkey; a checkpoint preserves its plan's partitioning
       // (LogicalRDD), so pre-partitioning makes the self-join
       // exchange-free — one added exchange buys out two
-      val it = ViewingData.table(s, dir, "lineitem")
+      val it = Barrier.materialize(ViewingData.table(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
-        .repartition(col("l_orderkey"))
-        .localCheckpoint()
+        .repartition(col("l_orderkey")))._1
       val nOrders = it.select(countDistinct("l_orderkey").as("n_orders"))
       val itemSup = it.groupBy(col("l_partkey")).agg(count(lit(1)).as("s"))
       val a = it.select(col("l_orderkey"), col("l_partkey").as("part_a"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Geo
-import graft.operators.{Components, GeoJoin}
+import graft.operators.{Barrier, Components, GeoJoin}
 import graft.sources.ViewingData
 
 /** Geospatial analytics (reference capability: the viewing-data model
@@ -185,7 +185,7 @@ SELECT c_custkey, s_suppkey, dist_km FROM r WHERE rn = 1"""))
     * minPts=3 sits below the random-geometric percolation threshold
     * at this density, so the demo yields many small clusters rather
     * than one giant component. The ONE pair materialization
-    * (localCheckpoint) feeds counts, core edges, and border
+    * (a barrier) feeds counts, core edges, and border
     * assignment. Oracle: brute-force pairs + recursive-CTE reachable
     * -min components (the D6 discipline). */
   private val geoDbscan = Q(
@@ -200,12 +200,11 @@ SELECT c_custkey, s_suppkey, dist_km FROM r WHERE rn = 1"""))
         col("lat").as("blat"), col("lon").as("blon"))
       // self join: BOTH sides are the fact-sized point set — no forced
       // broadcast of the ×9 replica (AQE still picks one when it fits)
-      val pairs = GeoJoin.radiusJoin(a, "alat", "alon", b, "blat", "blon",
+      val pairs = Barrier.materialize(GeoJoin.radiusJoin(a, "alat", "alon", b, "blat", "blon",
           radiusKm = 60.0, cellDeg = 1.0, maxAbsLat = 10.0,
           broadcastRight = false)
         .filter(col("a_id") =!= col("b_id"))
-        .select("a_id", "b_id")
-        .localCheckpoint()
+        .select("a_id", "b_id"))._1
       val core = pairs.groupBy("a_id").agg((count(lit(1)) + 1).as("n"))
         .filter(col("n") >= 3).select(col("a_id").as("id"))
       val coreEdges = pairs
@@ -218,10 +217,10 @@ SELECT c_custkey, s_suppkey, dist_km FROM r WHERE rn = 1"""))
       // ComponentsSpec's route cases)
       val comps = Components.connectedComponents(coreEdges, "a_id", "b_id")
       // isolated cores never reach the edge set — they cluster alone
-      val coreClusters = core
+      // feeds border assignment AND the readout
+      val coreClusters = Barrier.materialize(core
         .join(comps.withColumnRenamed("id", "cid"), col("id") === col("cid"), "left")
-        .select(col("id"), coalesce(col("comp"), col("id")).as("cluster"))
-        .localCheckpoint() // feeds border assignment AND the readout
+        .select(col("id"), coalesce(col("comp"), col("id")).as("cluster")))._1
       val border = pairs
         .join(coreClusters.select(col("id").as("b_id"), col("cluster")), "b_id")
         .join(coreClusters.select(col("id").as("a_id")), Seq("a_id"), "left_anti")

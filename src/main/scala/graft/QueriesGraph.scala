@@ -87,19 +87,19 @@ und AS (
       // ring + doubling families densify the demo graph into one with
       // real triangle structure (456 triangles at sf0.01 vs 1 from
       // tree+cross alone)
-      val und = undirectedEdges(s, dir)
-        .localCheckpoint() // one edge materialization feeds degrees AND orientation
+      // one edge materialization feeds degrees AND orientation
+      val und = Barrier.materialize(undirectedEdges(s, dir))._1
       val deg = und.select(explode(array(col("u"), col("v"))).as("x"))
         .groupBy("x").agg(count(lit(1)).as("dg"))
       val fwd = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
-      val o = und
+      // consumed three times (two wedge sides + close)
+      val o = Barrier.materialize(und
         .join(deg.select(col("x").as("u"), col("dg").as("du")), "u")
         .join(deg.select(col("x").as("v"), col("dg").as("dv")), "v")
         .select(
           when(fwd, col("u")).otherwise(col("v")).as("src"),
           when(fwd, col("v")).otherwise(col("u")).as("dst"),
-          when(fwd, col("dv")).otherwise(col("du")).as("ddg"))
-        .localCheckpoint() // consumed three times (two wedge sides + close)
+          when(fwd, col("dv")).otherwise(col("du")).as("ddg")))._1
       val e1 = o.select(col("src").as("a"), col("dst").as("b"), col("ddg").as("db"))
       val e2 = o.select(col("src").as("a"), col("dst").as("c"), col("ddg").as("dc"))
       val close = o.select(col("src").as("b"), col("dst").as("c"))
@@ -210,8 +210,8 @@ FROM l3 GROUP BY 1"""))
   private val jaccard = Q(
     "graph_jaccard",
     (s, dir) => {
-      val und = undirectedEdges(s, dir).localCheckpoint()
-      val adj = adjacency(und).localCheckpoint()
+      val und = Barrier.materialize(undirectedEdges(s, dir))._1
+      val adj = Barrier.materialize(adjacency(und))._1
       val deg = adj.groupBy(col("a").as("x")).agg(count(lit(1)).as("dg"))
       // |V|-sized keep-list: no broadcast hint — AQE picks when it fits
       val mids = adj.join(
@@ -261,8 +261,8 @@ SELECT x, y, common, jaccard FROM j WHERE jaccard >= 0.2"""))
   private val bfs = Q(
     "graph_bfs",
     (s, dir) => {
-      val und = undirectedEdges(s, dir).localCheckpoint()
-      val adj = adjacency(und).localCheckpoint()
+      val und = Barrier.materialize(undirectedEdges(s, dir))._1
+      val adj = Barrier.materialize(adjacency(und))._1
       val nodes = adj.select(col("a").as("node")).distinct()
       // Every round is one Barrier: the checkpoint's own job counts the
       // new frontier, and that count gates the loop — no separate

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Multimodal, TextFunctions, VectorFunctions}
-import graft.operators.{Components, DocPack}
+import graft.operators.{Barrier, Components, DocPack}
 import graft.sources.ViewingData
 
 /** SURVEY.md §2 suite F9-F12: corpus-hygiene operators a training-data
@@ -128,9 +128,8 @@ FROM tg"""))
 
   private def gramTable(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    wordGramRows(ViewingData.table(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism))
-      .localCheckpoint()
+    Barrier.materialize(wordGramRows(ViewingData.table(s, dir, "documents")
+        .repartition(s.sparkContext.defaultParallelism)))._1
 
   /** One oracle for both decontamination implementations: the bloom
     * prefilter is false-positive-only and the exact join re-verifies,
@@ -168,9 +167,9 @@ WHERE g.doc_id % 97 <> 0"""
     "text_contamination_report",
     (s, dir) => {
       val grams = gramTable(s, dir)
-      val testG = grams.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), explode(array_distinct(col("grams"))).as("gram"))
-        .localCheckpoint() // consumed twice: probe set + per-doc fold
+      // consumed twice: probe set + per-doc fold
+      val testG = Barrier.materialize(grams.filter(col("doc_id") % 97 === 0)
+        .select(col("doc_id"), explode(array_distinct(col("grams"))).as("gram")))._1
       val testSet = testG.select("gram").distinct()
       // one train pass, broadcast probe; output ⊆ test grams (small)
       val matched = grams.filter(col("doc_id") % 97 =!= 0)
@@ -480,9 +479,8 @@ FROM thresholded WHERE samp_key < keep_below"""))
     * for both consumers. */
   private def unigramLogprobPerDoc(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val toks = tokenRows(ViewingData.table(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism))
-      .localCheckpoint()
+    val toks = Barrier.materialize(tokenRows(ViewingData.table(s, dir, "documents")
+        .repartition(s.sparkContext.defaultParallelism)))._1
     logprobOfToks(toks, unigramFreqOfToks(toks))
   }
 
@@ -644,10 +642,9 @@ FROM s"""))
       : Array[Double] = {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("logprob"), col("doc_id"))
-    val samp = pplCalibrationPool(lp, PplCalCap)
-      .withColumn("rn", row_number().over(w))
-      .localCheckpoint()
-    val cnt = samp.count()
+    val (samp, observed) = Barrier.materialize(pplCalibrationPool(lp, PplCalCap)
+      .withColumn("rn", row_number().over(w)), count(lit(1)))
+    val cnt = observed.getLong(0)
     val (k1, k2) = (math.max(1L, cnt / 3), math.max(1L, 2 * cnt / 3))
     samp.filter(col("rn") === k1 || col("rn") === k2)
       .orderBy("rn").select("logprob").collect().map(_.getDouble(0))
@@ -683,8 +680,8 @@ FROM s"""))
   private val corpusPplBuckets = Q(
     "corpus_ppl_buckets",
     (s, dir) => {
-      val lp = unigramLogprobPerDoc(s, dir)
-        .localCheckpoint() // consumed twice: threshold sample + bucketing
+      // consumed twice: threshold sample + bucketing
+      val lp = Barrier.materialize(unigramLogprobPerDoc(s, dir))._1
       lp.select(col("doc_id"), col("logprob"), col("n_tokens"),
         pplBucketCol(pplThresholds(lp)).as("bucket"))
     },
@@ -725,16 +722,15 @@ FROM lp CROSS JOIN th"""))
       val toks = ViewingData.table(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
-      val pairs = toks
+      // consumed by counts AND scoring
+      val pairs = Barrier.materialize(toks
         .select(col("doc_id"), explode(zip_with(
           slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0))),
           slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
           (a, b) => struct(a.as("prev"), b.as("cur")))).as("p"))
-        .select(col("doc_id"), col("p.prev").as("prev"), col("p.cur").as("cur"))
-        .localCheckpoint() // consumed by counts AND scoring
-      val uni = toks.select(explode(col("toks")).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).cast("double").as("uc"))
-        .localCheckpoint()
+        .select(col("doc_id"), col("p.prev").as("prev"), col("p.cur").as("cur")))._1
+      val uni = Barrier.materialize(toks.select(explode(col("toks")).as("tok"))
+        .groupBy("tok").agg(count(lit(1)).cast("double").as("uc")))._1
       val total = uni.agg(sum("uc").as("n"))
       val bi = pairs.groupBy("prev", "cur").agg(count(lit(1)).cast("double").as("bc"))
       // the transition score depends only on (prev, cur), so it is
@@ -1058,7 +1054,7 @@ FROM lbl"""))
     // elimination), re-running split() ~30x per row — measured 14s
     // vs 4s at sf0.1. A production pipeline materializes the signal
     // table between stages anyway.
-    val sized = gateSignals(kept).localCheckpoint()
+    val sized = Barrier.materialize(gateSignals(kept))._1
       .filter(col("n_tokens") >= 10 && col("n_tokens") <= 5000 &&
         col("dup_ratio") <= 0.2 && col("lang") === "en" && col("quality") >= 0.3)
       .select(col("doc_id"),
@@ -1073,8 +1069,8 @@ FROM lbl"""))
   private val corpusPrep = Q(
     "corpus_prep_e2e",
     (s, dir) => corpusPrepFrom(s, dir,
-      QueriesML.ngramJaccardPairs(s, dir)
-        .select("id_a", "id_b").localCheckpoint()),
+      Barrier.materialize(QueriesML.ngramJaccardPairs(s, dir)
+        .select("id_a", "id_b"))._1),
     Some(s"""WITH RECURSIVE ${QueriesML.ngramPairsCte},
 edges AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
 reach(s, n) AS (SELECT s, s FROM edges UNION
@@ -1129,9 +1125,8 @@ WINDOW w AS (PARTITION BY shard ORDER BY doc_id
   private val corpusPrepIncremental = Q(
     "corpus_prep_incremental",
     (s, dir) => {
-      val pairs = QueriesML.ngramJaccardPairsTouching(
-          s, dir, col("doc_id") % 4 === 0)
-        .localCheckpoint()
+      val pairs = Barrier.materialize(QueriesML.ngramJaccardPairsTouching(
+          s, dir, col("doc_id") % 4 === 0))._1
       val cc = Components.connectedComponents(pairs, "id_a", "id_b")
       // per component: does it touch the standing corpus, and which
       // delta member arrived first (min id — the intra-delta tie rule)
@@ -1249,11 +1244,11 @@ FROM s WHERE start = 0 OR len(toks) > start + 16"""))
     * text_tfidf and RagOpsSpec's crafted rare-vs-common ordering. */
   private[graft] def tfidfTopK(docs: org.apache.spark.sql.DataFrame, k: Int)
       : org.apache.spark.sql.DataFrame = {
-    val tf = docs
+    // reused by df AND the join — one tf build
+    val tf = Barrier.materialize(docs
       .select(col("doc_id"),
         explode(TextFunctions.tokens(col("text"))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // reused by df AND the join — one tf build
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))._1
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val scored = tf.join(df, "term")
@@ -1444,9 +1439,8 @@ FROM r WHERE rn <= 3"""))
     * whose rounding differs from the literal 2.2). */
   private[graft] def bm25(docs: org.apache.spark.sql.DataFrame,
       terms: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
-      .localCheckpoint()
+    val toks = Barrier.materialize(docs
+      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks")))._1
     val dl = toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
     val stats = dl.agg(avg(col("dl")).as("avgdl"), count(lit(1)).as("n"))
     val tf = toks.select(col("doc_id"), explode(col("toks")).as("term"))
@@ -1659,16 +1653,15 @@ FROM fused QUALIFY rank <= 10"""
         // (content-derived, so same-orthant vectors are genuinely
         // close); Ivf.assign then snaps members to nearest centroid.
         // Exactness never depends on this choice — only pruning does.
-        val v = docs
+        val v = Barrier.materialize(docs
           .select(col("doc_id"),
             normalize(hashEmbedRaw(col("text"), 8)).as("e"))
           .withColumn("cell",
             (when(element_at(col("e"), 1) >= 0, 8).otherwise(0) +
               when(element_at(col("e"), 2) >= 0, 4).otherwise(0) +
               when(element_at(col("e"), 3) >= 0, 2).otherwise(0) +
-              when(element_at(col("e"), 4) >= 0, 1).otherwise(0)).cast("int"))
-          .localCheckpoint()
-        val cents = operators.Ivf.centroids(v, "cell", "e").localCheckpoint()
+              when(element_at(col("e"), 4) >= 0, 1).otherwise(0)).cast("int")))._1
+        val cents = Barrier.materialize(operators.Ivf.centroids(v, "cell", "e"))._1
         operators.Ivf.writeIndex(
           operators.Ivf.assign(v, cents, "doc_id", "e", "cell"),
           cents, "cell", staged)
@@ -1713,7 +1706,7 @@ FROM fused QUALIFY rank <= 10"""
           .orderBy(col("cos").desc, col("doc_id").asc).limit(20)
         // ONE action on the 20-row result: the collected rows both
         // decide the guarantee check and BECOME the winning frame (a
-        // LocalRelation), where the old localCheckpoint+collect pair
+        // LocalRelation), where the old checkpoint+collect pair
         // paid two actions per rung for identical values
         val top = r.collect()
         // the probe returns EVERY doc with cos ≥ τ, so 20 rows above

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.{HashFunctions, Multimodal, TextFunctions, VectorFunctions}
+import graft.operators.Barrier
 import graft.sources.ViewingData
 
 /** SURVEY.md §2 suites D (dedup), E (similarity search), F (text
@@ -135,11 +136,10 @@ GROUP BY md5(text)"""))
     // build-once idiom (same as dedup_minhash): without the barrier the
     // join instantiates the interpreted shingle transform per side
     // — two full gram builds before the bucket-local pair loop
-    ViewingData.table(s, dir, "documents")
+    Barrier.materialize(ViewingData.table(s, dir, "documents")
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("lang"), col("n_chars"),
-        TextFunctions.shingles("text", NgramShingle).as("grams"))
-      .localCheckpoint()
+        TextFunctions.shingles("text", NgramShingle).as("grams")))._1
 
   /** (doc_id, lang, n_chars, grams) over an explicit docs frame — the
     * gram rows [[scoredPairs]] consumes; also the unit the streaming
@@ -292,9 +292,10 @@ FROM hist"""))
   private[graft] def weightedJaccardVerify(
       docs: org.apache.spark.sql.DataFrame, cand: org.apache.spark.sql.DataFrame,
       tau: Double): org.apache.spark.sql.DataFrame = {
-    val tf = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // feeds the shared-min join twice + totals
+    // feeds the shared-min join twice + totals
+    val tf = Barrier.materialize(
+      docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+        .groupBy("doc_id", "w").agg(count(lit(1)).as("tf")))._1
     val tot = tf.groupBy("doc_id").agg(sum("tf").as("t"))
     val shared = cand
       .join(tf.select(col("doc_id").as("id_a"), col("w"), col("tf").as("tfa")), "id_a")
@@ -321,10 +322,9 @@ FROM hist"""))
   private val dedupWeightedJaccard = Q(
     "dedup_weighted_jaccard",
     (s, dir) => {
-      val docs = ViewingData.table(s, dir, "documents")
+      val docs = Barrier.materialize(ViewingData.table(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-        .localCheckpoint()
+        .select(col("doc_id"), col("lang"), col("n_chars"), col("text")))._1
       val cand = docs.as("a").join(docs.as("b"),
           expr("a.lang = b.lang AND a.n_chars = b.n_chars AND a.doc_id < b.doc_id"))
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
@@ -369,13 +369,11 @@ SELECT id_a, id_b, round(jw, 6) AS weighted_jaccard FROM j WHERE jw >= 0.5"""))
   private val dedupIcws = Q(
     "dedup_icws",
     (s, dir) => {
-      val docs = ViewingData.table(s, dir, "documents")
+      val docs = Barrier.materialize(ViewingData.table(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-        .localCheckpoint()
+        .select(col("doc_id"), col("lang"), col("n_chars"), col("text")))._1
       val sigs = operators.Icws.signatures(docs, "doc_id", "text", h = 16)
         .join(docs.select(col("doc_id"), col("lang"), col("n_chars")), "doc_id")
-        .localCheckpoint()
       val cand = operators.Icws.candidates(sigs, "doc_id",
         bands = 8, rowsPerBand = 2, blockCols = Seq("lang", "n_chars"))
       // full-frame verify, DELIBERATELY: the restricted form
@@ -410,10 +408,9 @@ SELECT id_a, id_b, round(jw, 6) AS weighted_jaccard FROM j WHERE jw >= 0.5"""))
     "dedup_icws_incremental",
     (s, dir) => {
       import graft.operators.IcwsDelta
-      val docs = ViewingData.table(s, dir, "documents")
+      val docs = Barrier.materialize(ViewingData.table(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-        .localCheckpoint()
+        .select(col("doc_id"), col("lang"), col("n_chars"), col("text")))._1
       val path = stampedIndexPath(s, dir, "documents",
         s"icwsidx_h${IcwsDelta.H}b${IcwsDelta.Bands}r${IcwsDelta.RowsPerBand}v1")
       ensureArtifact(s, path, "batch=0/_SUCCESS") { staged =>
@@ -446,13 +443,13 @@ SELECT id_a, id_b, round(jw, 6) AS weighted_jaccard FROM j WHERE jw >= 0.5"""))
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("text"))
     // The signature table is the LSH index: build it ONCE
-    // (localCheckpoint — the self-join would otherwise instantiate
+    // (a barrier — the self-join would otherwise instantiate
     // the 32-min aggregation per side, AQE's broadcast conversion
     // defeating exchange reuse), then probe. Signatures ride through
     // the bucket join as payload so verification needs no join-back.
-    val docs = HashFunctions.minhashSignaturesText(base, "doc_id", "text", 5, 32)
-      .withColumn("bands", HashFunctions.lshBands(col("sig"), 4, 8))
-      .localCheckpoint()
+    val docs = Barrier.materialize(
+      HashFunctions.minhashSignaturesText(base, "doc_id", "text", 5, 32)
+        .withColumn("bands", HashFunctions.lshBands(col("sig"), 4, 8)))._1
     HashFunctions.bucketedPairs(docs, "doc_id", "bands", payload = Seq("sig"))
       .select(col("id_a"), col("id_b"),
         HashFunctions.signatureEstimate(col("sig_a"), col("sig_b"), 32)
@@ -529,13 +526,12 @@ est AS (
     * the checkpoint exists so the self-join WITHIN a query doesn't
     * instantiate the 16-min aggregation per side. */
   private def md5SigDocs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    HashFunctions.md5MinhashSignaturesText(
+    Barrier.materialize(HashFunctions.md5MinhashSignaturesText(
         ViewingData.table(s, dir, "documents")
           .repartition(s.sparkContext.defaultParallelism)
           .select(col("doc_id"), col("text")),
         "doc_id", "text", 5, 16)
-      .withColumn("bands", HashFunctions.md5Bands(col("sig"), 2, 8))
-      .localCheckpoint()
+      .withColumn("bands", HashFunctions.md5Bands(col("sig"), 2, 8)))._1
 
   private val dedupMinhashOracle = Q(
     "dedup_minhash_oracle",
@@ -632,28 +628,28 @@ WHERE jaccard_est >= 0.4 AND (id_a % 4 = 0 OR id_b % 4 = 0)"""))
   /** D21's docs frame + distinct-gram frame + capped sample, shared
     * with the plan audit; the docs frame rides along so the registry
     * row's signature build reuses the ONE table scan (r12 review).
-    * The gate's count() action materializes the checkpoint. */
+    * The gate's pool size is counted on the grams barrier's own job. */
   private[graft] def lshTuningGramsAndSample(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val docs = ViewingData.table(s, dir, "documents")
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("text"))
-    val grams = docs.select(col("doc_id"),
+    // consumed by the gate filter and the corpus side. Keeping the
+    // checkpoint is MEASURED, not assumed (r13 honest negative):
+    // dropping it regressed the row 4.3-5.3 → 6.8-8.1 s isolated
+    // (anchor query steady) — without the materialization the
+    // gram-array expression is re-evaluated per consumer, and
+    // CollapseProject additionally inlines it TWICE into the truth
+    // stage's `size(grams)` + `explode(grams)` projections, so the
+    // ~5×-corpus-bytes write it saves is far cheaper than the 4-5
+    // re-evaluations it prevents.
+    val (grams, observed) = Barrier.materialize(docs.select(col("doc_id"),
         array_distinct(transform(
           sequence(lit(1), greatest(lit(1), length(col("text")) - 4)),
-          i => call_function("substring", col("text"), i, lit(5)))).as("grams"))
-      // consumed by the gate filter and the corpus side. Keeping the
-      // checkpoint is MEASURED, not assumed (r13 honest negative):
-      // dropping it regressed the row 4.3-5.3 → 6.8-8.1 s isolated
-      // (anchor query steady) — without the materialization the
-      // gram-array expression is re-evaluated per consumer, and
-      // CollapseProject additionally inlines it TWICE into the truth
-      // stage's `size(grams)` + `explode(grams)` projections, so the
-      // ~5×-corpus-bytes write it saves is far cheaper than the 4-5
-      // re-evaluations it prevents.
-      .localCheckpoint()
-    val poolCnt = math.max(1L, grams.count())
+          i => call_function("substring", col("text"), i, lit(5)))).as("grams")),
+      count(lit(1)))
+    val poolCnt = math.max(1L, observed.getLong(0))
     val rate = math.min(1.0, LshTuneCap.toDouble / poolCnt)
     val thHex = HashFunctions.rateGateHex(rate)
     (docs, grams, grams.filter(substring(
@@ -671,10 +667,11 @@ WHERE jaccard_est >= 0.4 AND (id_a % 4 = 0 OR id_b % 4 = 0)"""))
       val (docs, grams, qs) = lshTuningGramsAndSample(s, dir)
       // exact directed truth pairs: (sampled query, corpus doc) with
       // distinct-gram Jaccard >= 0.5 ([[lshTuningTruth]])
-      val truth = lshTuningTruth(grams, qs)
-        .localCheckpoint() // consumed by the hits join and the count
-      val sig = HashFunctions.md5MinhashSignaturesText(docs, "doc_id", "text", 5, 16)
-        .localCheckpoint() // one signature build feeds all four configs
+      // consumed by the hits join and the count
+      val truth = Barrier.materialize(lshTuningTruth(grams, qs))._1
+      // one signature build feeds all four configs
+      val sig = Barrier.materialize(
+        HashFunctions.md5MinhashSignaturesText(docs, "doc_id", "text", 5, 16))._1
       val bandAll = Seq(16, 8, 4, 2).map { r =>
         sig.select(lit(r.toLong).as("rows_per_band"), col("doc_id"),
           explode(HashFunctions.md5Bands(col("sig"), 16 / r, r)).as("bk"))
@@ -692,13 +689,13 @@ WHERE jaccard_est >= 0.4 AND (id_a % 4 = 0 OR id_b % 4 = 0)"""))
           .select(lit(r.toLong).as("rows_per_band"), col("qid"),
             explode(HashFunctions.md5Bands(col("sig"), 16 / r, r)).as("bk"))
       }.reduce(_ unionAll _)
-      val cand = broadcast(qBand).as("a")
+      // consumed by the per-config count and the hits join
+      val cand = Barrier.materialize(broadcast(qBand).as("a")
         .join(bandAll.as("b"), expr(
           "a.rows_per_band = b.rows_per_band AND a.bk = b.bk AND a.qid <> b.doc_id"))
         .select(col("a.rows_per_band").as("rows_per_band"),
           col("a.qid").as("qid"), col("b.doc_id").as("cid"))
-        .distinct()
-        .localCheckpoint() // consumed by the per-config count and the hits join
+        .distinct())._1
       val nCand = cand.groupBy("rows_per_band").agg(count(lit(1)).as("n_cand"))
       val nHits = cand.join(truth, Seq("qid", "cid"))
         .groupBy("rows_per_band").agg(count(lit(1)).as("n_hits"))
@@ -775,9 +772,8 @@ LEFT JOIN nhits ON nhits.r = cfg.r"""))
         .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
       // Same build-once/probe-many shape as dedup_minhash: checkpoint
       // the hash index, carry the hash through the bucket join.
-      val docs = HashFunctions.simhashes(base, "doc_id", "toks")
-        .withColumn("chunks", HashFunctions.simhashChunks(col("simhash")))
-        .localCheckpoint()
+      val docs = Barrier.materialize(HashFunctions.simhashes(base, "doc_id", "toks")
+        .withColumn("chunks", HashFunctions.simhashChunks(col("simhash"))))._1
       // hamming <= 3 matches the 4-chunk pigeonhole guarantee: every
       // pair within the threshold shares a chunk and IS generated. A
       // looser filter (e.g. <=12) would emit a biased sample — pairs
@@ -806,9 +802,8 @@ LEFT JOIN nhits ON nhits.r = cfg.r"""))
       val base = ViewingData.table(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
-      val docs = HashFunctions.simhashesMd5(base, "doc_id", "toks")
-        .withColumn("chunks", HashFunctions.simhashChunks(col("simhash")))
-        .localCheckpoint()
+      val docs = Barrier.materialize(HashFunctions.simhashesMd5(base, "doc_id", "toks")
+        .withColumn("chunks", HashFunctions.simhashChunks(col("simhash"))))._1
       HashFunctions.bucketedPairs(docs, "doc_id", "chunks", payload = Seq("simhash"))
         .select(col("id_a"), col("id_b"),
           HashFunctions.hammingDistance(col("simhash_a"), col("simhash_b"))
@@ -902,11 +897,7 @@ WHERE round(list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * 
     (s, dir) => {
       // normalize ONCE; corpus and delta both derive from the
       // checkpoint so the broadcast side is not recomputed per branch
-      val v = ViewingData.table(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("label"),
-          normalize(toDouble(col("embedding"))).as("e"))
-        .localCheckpoint()
+      val v = embCorpus(s, dir)
       val corpus = v.filter(col("vec_id") % 4 =!= 0)
       val delta = v.filter(col("vec_id") % 4 === 0)
       val oldNew = corpus.as("i")
@@ -1041,14 +1032,7 @@ WHERE rk <= 10"""))
       // Scale path: 4 random-hyperplane bits → 16 buckets (sized to the
       // test corpus; planes scale with corpus size), probe = vec_id 0's
       // bucket, top-10 by cosine within it.
-      // Materialize the bucketed index once (localCheckpoint) — the
-      // ANN pattern is build-once/probe-many; without it the probe and
-      // index branches would each recompute the hyperplane projections.
-      val v = ViewingData.table(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
-        .withColumn("bucket", hyperplaneBucket(col("e"), 4))
-        .localCheckpoint()
+      val v = bucketedEmb(s, dir, hyperplaneBucket(_, 4))
       val q = v.filter(col("vec_id") === 0)
         .select(col("e").as("qe"), col("bucket").as("qbucket"))
       v.crossJoin(broadcast(q))
@@ -1070,11 +1054,7 @@ WHERE rk <= 10"""))
       // top-10) is pinned by the oracle, not just row counts. Same
       // plan shape as ann_bucketed: build-once index, one-bucket
       // probe, distributed top-k.
-      val v = ViewingData.table(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
-        .withColumn("bucket", hyperplaneBucketMd5(col("e"), 4))
-        .localCheckpoint()
+      val v = bucketedEmb(s, dir, hyperplaneBucketMd5(_, 4))
       val q = v.filter(col("vec_id") === 0)
         .select(col("e").as("qe"), col("bucket").as("qbucket"))
       v.crossJoin(broadcast(q))
@@ -1193,16 +1173,15 @@ FROM top"""))
   private val annQ8Error = Q(
     "ann_q8_error_report",
     (s, dir) => {
-      val v = ViewingData.table(s, dir, "embeddings")
+      // checkpoint BEFORE the HOF readout: CollapseProject would
+      // otherwise inline `quantize(e)` into every z.q / z.scale
+      // reference inside the lambdas — the O(d²) re-evaluation the
+      // kernel's scaladoc warns about
+      val v = Barrier.materialize(ViewingData.table(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("label"),
           normalize(toDouble(col("embedding"))).as("e"))
-        .withColumn("z", quantize(col("e")))
-        // checkpoint BEFORE the HOF readout: CollapseProject would
-        // otherwise inline `quantize(e)` into every z.q / z.scale
-        // reference inside the lambdas — the O(d²) re-evaluation the
-        // kernel's scaladoc warns about
-        .localCheckpoint()
+        .withColumn("z", quantize(col("e"))))._1
       val err = sqrt(aggregate(
         zip_with(col("e"), col("z.q"), (x, qi) =>
           (x - qi.cast("double") * col("z.scale")) *
@@ -1256,15 +1235,10 @@ FROM m GROUP BY label"""))
     (s, dir) => {
       // IVF-Flat multi-probe: cells seeded from the label column,
       // refined to true centroids, nprobe=3 of 10 cells. Index built
-      // once (localCheckpoint); probe touches ~30% of the corpus.
-      val v = ViewingData.table(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("label"),
-          normalize(toDouble(col("embedding"))).as("e"))
-        .localCheckpoint()
-      val cents = operators.Ivf.centroids(v, "label", "e").localCheckpoint()
-      val index = operators.Ivf.assign(v, cents, "vec_id", "e", "label")
-        .localCheckpoint()
+      // once (a barrier per frame); probe touches ~30% of the corpus.
+      val v = embCorpus(s, dir)
+      val cents = Barrier.materialize(operators.Ivf.centroids(v, "label", "e"))._1
+      val index = Barrier.materialize(operators.Ivf.assign(v, cents, "vec_id", "e", "label"))._1
       val query = v.filter(col("vec_id") === 0).select(col("e").as("q"))
       operators.Ivf.probe(index.filter(col("vec_id") =!= 0), cents, query,
           "vec_id", "e", "label", nprobe = 3, k = 10)
@@ -1273,14 +1247,22 @@ FROM m GROUP BY label"""))
     },
     None)
 
-  /** The normalized embeddings frame every persisted-index ANN row
-    * starts from. */
+  /** The normalized embeddings frame every IVF and label-cell ANN row
+    * starts from, materialized once. */
   private def embCorpus(s: SparkSession, dir: String) =
-    ViewingData.table(s, dir, "embeddings")
+    Barrier.materialize(ViewingData.table(s, dir, "embeddings")
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("vec_id"), col("label"),
-        normalize(toDouble(col("embedding"))).as("e"))
-      .localCheckpoint()
+        normalize(toDouble(col("embedding"))).as("e")))._1
+
+  /** The build-once hyperplane-bucketed index of the normalized
+    * embeddings: materialized so the probe and index branches read one
+    * projection instead of each recomputing it. */
+  private def bucketedEmb(s: SparkSession, dir: String, bucket: Column => Column) =
+    Barrier.materialize(ViewingData.table(s, dir, "embeddings")
+      .repartition(s.sparkContext.defaultParallelism)
+      .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
+      .withColumn("bucket", bucket(col("e"))))._1
 
   /** Control-plane fingerprint of a source parquet table (no data
     * scan) baked into a persisted index's path: a testdata
@@ -1521,14 +1503,9 @@ FROM m GROUP BY label"""))
   private val annRangeSearch = Q(
     "ann_range_search",
     (s, dir) => {
-      val v = ViewingData.table(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("label"),
-          normalize(toDouble(col("embedding"))).as("e"))
-        .localCheckpoint()
-      val cents = operators.Ivf.centroids(v, "label", "e").localCheckpoint()
-      val index = operators.Ivf.assign(v, cents, "vec_id", "e", "label")
-        .localCheckpoint()
+      val v = embCorpus(s, dir)
+      val cents = Barrier.materialize(operators.Ivf.centroids(v, "label", "e"))._1
+      val index = Barrier.materialize(operators.Ivf.assign(v, cents, "vec_id", "e", "label"))._1
       val query = v.filter(col("vec_id") === 0).select(col("e").as("q"))
       operators.Ivf.rangeProbe(index.filter(col("vec_id") =!= 0), cents,
         query, "vec_id", "e", "label", minCos = 0.2)
@@ -1570,7 +1547,7 @@ SELECT vec_id, round(c, 6) AS cos_sim FROM scored WHERE c >= 0.2"""))
       // (index + stats) build; the staged publish means a reader can
       // never see the index without its stats
       ensureArtifact(s, path, "cellstats/_SUCCESS") { staged =>
-        val cents = operators.Ivf.centroids(v, "label", "e").localCheckpoint()
+        val cents = Barrier.materialize(operators.Ivf.centroids(v, "label", "e"))._1
         operators.Ivf.writeIndex(
           operators.Ivf.assign(v, cents, "vec_id", "e", "label"),
           cents, "label", staged)
@@ -1609,10 +1586,7 @@ SELECT query_id, vec_id, round(c, 6) AS cos_sim FROM scored WHERE c >= 0.2"""))
   private val annKnnJoin = Q(
     "ann_knn_join",
     (s, dir) => {
-      val v = ViewingData.table(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("label"), normalize(toDouble(col("embedding"))).as("e"))
-        .localCheckpoint()
+      val v = embCorpus(s, dir)
       v.as("a").join(v.as("b"),
           expr("a.label = b.label AND a.vec_id <> b.vec_id"))
         .select(
@@ -1763,12 +1737,11 @@ FROM occ"""))
       scored: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val wq = Window.partitionBy("query_id")
-    val approxTop = scored
+    val approxTop = Barrier.materialize(scored
       .withColumn("n_candidates", count(lit(1)).over(wq))
       .withColumn("rank", row_number().over(
         wq.orderBy(col("cos_sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 10)
-      .localCheckpoint()
+      .filter(col("rank") <= 10))._1
     val nCand = approxTop.groupBy("query_id")
       .agg(max("n_candidates").as("n_candidates"))
     exact.select("query_id", "vec_id")
@@ -1798,11 +1771,7 @@ FROM occ"""))
   private val annMultiprobeRecall = Q(
     "ann_multiprobe_recall",
     (s, dir) => {
-      val v = ViewingData.table(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
-        .withColumn("bucket", hyperplaneBucketMd5(col("e"), 4))
-        .localCheckpoint()
+      val v = bucketedEmb(s, dir, hyperplaneBucketMd5(_, 4))
       val q = v.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("e").as("qe"),
           col("bucket").as("qbucket"))
@@ -1877,17 +1846,13 @@ GROUP BY 1, 2"""))
   private val annPlanesTuning = Q(
     "ann_planes_tuning",
     (s, dir) => {
-      val v = ViewingData.table(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
-        .withColumn("bucket", hyperplaneBucketMd5(col("e"), 4))
-        .localCheckpoint()
+      val v = bucketedEmb(s, dir, hyperplaneBucketMd5(_, 4))
       val q = v.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("e").as("qe"),
           col("bucket").as("qbucket"))
       // ground truth is p-invariant: compute the brute top-10 ONCE
       // and share it across the four probes (r12 review)
-      val exact = recallExact(v, q).localCheckpoint()
+      val exact = Barrier.materialize(recallExact(v, q))._1
       // the p-plane candidate set is the low-p-bits agreement set, so
       // the four sets are NESTED (cand(4) ⊆ cand(3) ⊆ … ⊆ cand(1)):
       // ONE broadcast join at the coarsest mask computes every pair's
@@ -1900,12 +1865,11 @@ GROUP BY 1, 2"""))
                              WHEN (bucket ^ qbucket) & 7 = 0 THEN 3
                              WHEN (bucket ^ qbucket) & 3 = 0 THEN 2
                              ELSE 1 END""")
-      val scoredAll = v.join(broadcast(q),
+      val scoredAll = Barrier.materialize(v.join(broadcast(q),
           expr("(bucket & 1) = (qbucket & 1)") &&
             col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"), lvl.as("lvl"),
-          round(dot(col("e"), col("qe")), 6).as("cos_sim"))
-        .localCheckpoint()
+          round(dot(col("e"), col("qe")), 6).as("cos_sim")))._1
       (1 to 4).map { p =>
         recallReadoutScored(exact,
             scoredAll.filter(col("lvl") >= p)
@@ -1968,11 +1932,8 @@ GROUP BY 1, 2, 3"""))
   private val annRecallReport = Q(
     "ann_recall_report",
     (s, dir) => {
-      val v = ViewingData.table(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), normalize(toDouble(col("embedding"))).as("e"))
-        .withColumn("bucket", hyperplaneBucketMd5(col("e"), 4))
-        .localCheckpoint() // build-once index: queries + both probe sides
+      // build-once index: queries + both probe sides
+      val v = bucketedEmb(s, dir, hyperplaneBucketMd5(_, 4))
       val q = v.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("e").as("qe"),
           col("bucket").as("qbucket"))
@@ -2217,11 +2178,10 @@ FROM g GROUP BY doc_id, active, grp"""))
       // the decode semantics).
       import s.implicits._
       val bin = col("text").cast("binary")
-      val base = ViewingData.table(s, dir, "documents")
+      val base = Barrier.materialize(ViewingData.table(s, dir, "documents")
         .select(col("doc_id").as("id"), bin.as("payload"),
           Multimodal.sniffMime(bin).as("mime"),
-          size(Multimodal.sampleFrames(bin, 64, 2)).cast("long").as("n_frames"))
-        .localCheckpoint()
+          size(Multimodal.sampleFrames(bin, 64, 2)).cast("long").as("n_frames")))._1
       val media = base.select("id", "payload", "mime").as[Multimodal.MediaRow]
       Multimodal.decodeFeatures(media).toDF()
         .join(base.select("id", "n_frames"), "id")
@@ -2509,8 +2469,8 @@ WHERE rk <= 5"""))
     (s, dir) => {
       val cents = fixedCentroids(s)
       val v = normalizedVecs(s, dir)
-      val index = graft.operators.Ivf.assign(v, cents, "vec_id", "e", "cell")
-        .localCheckpoint()
+      val index =
+        Barrier.materialize(graft.operators.Ivf.assign(v, cents, "vec_id", "e", "cell"))._1
       val a = index.select(col("cell"), col("vec_id").as("anchor"),
         col("e").as("ea"))
       val b = index.select(col("cell"), col("vec_id").as("cand"),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.RangeJoin
+import graft.operators.{Barrier, RangeJoin}
 import graft.sources.ViewingData
 
 /** Round-7 scale operators: the join/aggregate shapes whose naive
@@ -145,10 +145,9 @@ FROM events GROUP BY 1, 2"""))
   private val slidingReach = Q(
     "q_sliding_reach",
     (s, dir) => {
-      val daily = ViewingData.table(s, dir, "events")
+      val daily = Barrier.materialize(ViewingData.table(s, dir, "events")
         .groupBy(to_date(col("ts")).as("day"))
-        .agg(expr("bitmap_agg(user_id)").as("bm"))
-        .localCheckpoint() // tiny (one row/day); consumed twice below
+        .agg(expr("bitmap_agg(user_id)").as("bm")))._1 // tiny (one row/day); consumed twice below
       val contrib = daily
         .withColumn("off", explode(sequence(lit(0), lit(6))))
         .select(date_add(col("day"), col("off")).as("win_day"), col("bm"))
@@ -232,8 +231,7 @@ FROM documents"""))
         .select(col("user_id"), to_date(col("ts")).as("day"), col("value"))
       // ONE events scan: users and bounds derive from the (tiny)
       // daily aggregate, not from re-reads of the fact table
-      val daily = ev.groupBy("user_id", "day").agg(max("value").as("v"))
-        .localCheckpoint()
+      val daily = Barrier.materialize(ev.groupBy("user_id", "day").agg(max("value").as("v")))._1
       val bounds = daily.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
       val spine = daily.select("user_id").distinct()
         .crossJoin(bounds) // one-row frame — broadcast fan-out, no shuffle
@@ -482,10 +480,9 @@ FROM events GROUP BY 1"""))
     "q_reach_curve",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = ViewingData.table(s, dir, "events")
+      val daily = Barrier.materialize(ViewingData.table(s, dir, "events")
         .groupBy(to_date(col("ts")).as("day"))
-        .agg(expr("bitmap_agg(user_id)").as("bm"))
-        .localCheckpoint()
+        .agg(expr("bitmap_agg(user_id)").as("bm")))._1
       val targets = daily.select(col("day").as("as_of"))
       val cum = targets
         .join(daily, col("day") <= col("as_of"))

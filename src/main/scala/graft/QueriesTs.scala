@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Barrier
 import graft.sources.ViewingData
 
 /** Time-series / behavioral analytics over the event feed (reference
@@ -57,10 +58,9 @@ object QueriesTs {
       // ONE raw-feed scan: the folded daily table (groups × days,
       // control-plane-sized) is checkpointed so the median/MAD
       // branches don't each re-aggregate 100 TB of events
-      val daily = ViewingData.table(s, dir, "events")
+      val daily = Barrier.materialize(ViewingData.table(s, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("n")))._1
       val med = discQuantile(daily, "event_type", "n", "day", 0.5, "med")
       val dev = daily.join(broadcast(med), "event_type")
         .withColumn("dev", abs(col("n") - col("med")))
@@ -183,10 +183,9 @@ FROM t"""))
     (s, dir) => {
       // one raw scan; the folded series checkpoints before the lag
       // self-join re-reads it from both sides
-      val daily = ViewingData.table(s, dir, "events")
+      val daily = Barrier.materialize(ViewingData.table(s, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("n")))._1
       val a = daily.select(col("event_type").as("type_a"),
         col("day").as("day_a"), col("n").as("n_a"))
         .withColumn("lag", explode(sequence(lit(-2), lit(2))))
@@ -392,8 +391,7 @@ FROM j GROUP BY 1"""))
     (s, dir) => {
       val ev = ViewingData.table(s, dir, "events")
         .select(col("user_id"), to_date(col("ts")).as("day"), col("value"))
-      val daily = ev.groupBy("user_id", "day").agg(max("value").as("v"))
-        .localCheckpoint()
+      val daily = Barrier.materialize(ev.groupBy("user_id", "day").agg(max("value").as("v")))._1
       val bounds = daily.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
       val spine = daily.select("user_id").distinct()
         .crossJoin(bounds)

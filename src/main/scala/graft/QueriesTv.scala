@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Barrier
 import graft.sources.ViewingData
 
 /** TV-measurement analytics beyond the reference's rollup — the
@@ -94,12 +95,11 @@ FROM r GROUP BY 1, 2, 3 HAVING COUNT(*) >= 3"""))
       val weights = ViewingData.table(s, dir, "customer")
         .select(col("c_custkey").cast("string").as("smba_id"),
           floor(abs(col("c_acctbal"))).cast("long").as("w"))
-      val prog = ViewingData.acr(s, dir)
+      val prog = Barrier.materialize(ViewingData.acr(s, dir)
         .filter(col("content_type") === "program")
         .select(col("smba_id"), col("network"),
           col("duration"), col("exposure_start_ts"), col("exposure_end_ts"))
-        .join(broadcast(weights), "smba_id")
-        .localCheckpoint() // feeds the network fold AND the span frame
+        .join(broadcast(weights), "smba_id"))._1 // feeds the network fold AND the span frame
       val byNet = prog.groupBy("network")
         .agg(sum(col("duration") * col("w")).as("wdur"))
       val universe = broadcast(
@@ -197,12 +197,11 @@ FROM byq CROSS JOIN tot"""))
       // network-set fold subsumes the DISTINCT, and BOTH downstream
       // folds (pair overlap and per-network totals) derive from the
       // entity-sized sets frame — the fact is scanned once
-      val sets = ViewingData.acr(s, dir)
+      val sets = Barrier.materialize(ViewingData.acr(s, dir)
         .filter(col("content_type") === "program")
         .select(col("smba_id"), col("network"))
         .join(broadcast(weights), "smba_id")
-        .groupBy("smba_id", "w").agg(collect_set("network").as("ns"))
-        .localCheckpoint()
+        .groupBy("smba_id", "w").agg(collect_set("network").as("ns")))._1
       val both = sets
         .select(col("w"), explode(col("ns")).as("net_a"), col("ns"))
         .select(col("w"), col("net_a"), explode(col("ns")).as("net_b"))
@@ -362,11 +361,10 @@ FROM nxt GROUP BY 1, 2"""))
       val weights = ViewingData.table(s, dir, "customer")
         .select(col("c_custkey").cast("string").as("smba_id"),
           floor(abs(col("c_acctbal"))).cast("long").as("w"))
-      val ads = ViewingData.acr(s, dir)
+      val ads = Barrier.materialize(ViewingData.acr(s, dir)
         .filter(col("content_type") === "ad")
         .select(col("smba_id"), col("content_id"))
-        .join(broadcast(weights), "smba_id")
-        .localCheckpoint() // impressions fold AND reach fold
+        .join(broadcast(weights), "smba_id"))._1 // impressions fold AND reach fold
       val impressions = ads.groupBy("content_id")
         .agg(count(lit(1)).as("impressions"), sum("w").as("w_impressions"))
       val reach = ads.select("content_id", "smba_id", "w").distinct()

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Barrier
+
 /** Scale-sensitivity sweep harness (not part of the library surface).
   *
   * `runMain graft.Sweep <srcSfDir> <workDir> <factor> <q1,q2,...>`
@@ -162,12 +164,11 @@ object Sweep {
     names.foreach {
       case "ann_ivfpq_probe" =>
         import spark.implicits._
-        val v = graft.sources.ViewingData.table(spark, work, "embeddings")
+        val v = Barrier.materialize(graft.sources.ViewingData.table(spark, work, "embeddings")
           .repartition(spark.sparkContext.defaultParallelism)
           .select(col("vec_id"), col("label"),
             graft.functions.VectorFunctions.normalize(
-              graft.functions.VectorFunctions.toDouble(col("embedding"))).as("e"))
-          .localCheckpoint()
+              graft.functions.VectorFunctions.toDouble(col("embedding"))).as("e")))._1
         val path = s"$work/ivfpq_index"
         val q = v.filter(col("vec_id") === 0).select("e").as[Seq[Double]].head()
         probeCase(spark, "ann_ivfpq_probe", factor, path) {
@@ -183,18 +184,16 @@ object Sweep {
         // per-cell radius stats EXIST (built once, untimed); measured
         // = the batch radius probe only — surviving-cell union,
         // file-pruned scan, candidate join, exact filter
-        val v = graft.sources.ViewingData.table(spark, work, "embeddings")
+        val v = Barrier.materialize(graft.sources.ViewingData.table(spark, work, "embeddings")
           .repartition(spark.sparkContext.defaultParallelism)
           .select(col("vec_id"), col("label"),
             graft.functions.VectorFunctions.normalize(
-              graft.functions.VectorFunctions.toDouble(col("embedding"))).as("e"))
-          .localCheckpoint()
+              graft.functions.VectorFunctions.toDouble(col("embedding"))).as("e")))._1
         val path = s"$work/ivfrange_index"
-        val queries = v.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("query_id"), col("e").as("q"))
-          .localCheckpoint()
+        val queries = Barrier.materialize(v.filter(col("vec_id") < 5)
+          .select(col("vec_id").as("query_id"), col("e").as("q")))._1
         probeCase(spark, "ann_range_batch_probe", factor, path) {
-          val cents = operators.Ivf.centroids(v, "label", "e").localCheckpoint()
+          val cents = Barrier.materialize(operators.Ivf.centroids(v, "label", "e"))._1
           operators.Ivf.writeIndex(
             operators.Ivf.assign(v, cents, "vec_id", "e", "label"),
             cents, "label", path)
@@ -242,10 +241,9 @@ object Sweep {
         // measured = delta draw chain + index probe + exact verify
         // restricted to candidate docs — the registry row re-draws
         // the corpus signatures too, which a real increment never pays
-        val docs = graft.sources.ViewingData.table(spark, work, "documents")
+        val docs = Barrier.materialize(graft.sources.ViewingData.table(spark, work, "documents")
           .repartition(spark.sparkContext.defaultParallelism)
-          .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-          .localCheckpoint()
+          .select(col("doc_id"), col("lang"), col("n_chars"), col("text")))._1
         val path = s"$work/icws_index"
         probeCase(spark, "dedup_icws_probe", factor, path) {
           operators.IcwsDelta.writeBatch(
@@ -296,7 +294,7 @@ object Sweep {
         // cached build) — the delta is the only difference.
         val docs = sweepDocs(spark, work)
         val path = compactIndexPath(work)
-        val one = docs.orderBy("doc_id").limit(1).localCheckpoint()
+        val one = Barrier.materialize(docs.orderBy("doc_id").limit(1))._1
         probeCase(spark, "dedup_point_full", factor, path) {
           buildCompactIndex(spark, work, docs)
         } {
@@ -319,8 +317,8 @@ object Sweep {
         // with corpus_prep_e2e at the same factor
         val sec = minOfTwo {
           QueriesLLM.corpusPrepFrom(spark, work,
-              QueriesML.minhashPairs(spark, work)
-                .select("id_a", "id_b").localCheckpoint())
+              Barrier.materialize(QueriesML.minhashPairs(spark, work)
+                .select("id_a", "id_b"))._1)
             .write.format("noop").mode("overwrite").save()
         }
         println(f"SWEEP corpus_prep_minhash        x$factor%-3d $sec%8.3f s")
@@ -364,7 +362,7 @@ object Sweep {
         // from the same geometry.
         import graft.functions.VectorFunctions.dot
         val emb = operators.CostedEmbedder(8, spinPerDoc = 2000000)
-        val docs = sweepDocs(spark, work).localCheckpoint()
+        val docs = Barrier.materialize(sweepDocs(spark, work))._1
         val qv = emb.embed(Seq("table stream merge")).head.toSeq
         def denseTop20(d: DataFrame): DataFrame =
           operators.Embed.withEmbeddings(d, "text", "e", emb)
@@ -378,16 +376,15 @@ object Sweep {
         probeCase(spark, "hybrid_dense_indexed_costed", factor, hybPath) {
           // orthant-seeded cells over the contract-embedded corpus —
           // the F28b build, driven through Embed.withEmbeddings
-          val v = operators.Embed.withEmbeddings(
+          val v = Barrier.materialize(operators.Embed.withEmbeddings(
               docs, "text", "e0", operators.HashEmbedder(8))
             .select(col("doc_id"), col("e0").as("e"))
             .withColumn("cell",
               (when(element_at(col("e"), 1) >= 0, 8).otherwise(0) +
                 when(element_at(col("e"), 2) >= 0, 4).otherwise(0) +
                 when(element_at(col("e"), 3) >= 0, 2).otherwise(0) +
-                when(element_at(col("e"), 4) >= 0, 1).otherwise(0)).cast("int"))
-            .localCheckpoint()
-          val cents = operators.Ivf.centroids(v, "cell", "e").localCheckpoint()
+                when(element_at(col("e"), 4) >= 0, 1).otherwise(0)).cast("int")))._1
+          val cents = Barrier.materialize(operators.Ivf.centroids(v, "cell", "e"))._1
           operators.Ivf.writeIndex(
             operators.Ivf.assign(v, cents, "doc_id", "e", "cell"),
             cents, "cell", hybPath)
@@ -396,15 +393,16 @@ object Sweep {
           // descending τ ladder (the F28b cost knob): tightest radius
           // whose candidate set can hold a top-20 wins; candidates
           // are then re-embedded through the COSTED embedder — the
-          // only per-document charge on this path
+          // only per-document charge on this path. Each rung counts its
+          // candidates on its own barrier job
           val qdf = spark.range(1).select(typedLit(qv).as("q"))
           val cand = Seq(0.8, 0.5, 0.2).view.map { tau =>
-            operators.Ivf.rangeProbeIndexed(spark, hybPath, qdf,
+            Barrier.materialize(operators.Ivf.rangeProbeIndexed(spark, hybPath, qdf,
                 "doc_id", "e", "cell", minCos = tau)
-              .select("doc_id").localCheckpoint()
-          }.find(_.count() >= 20)
+              .select("doc_id"), count(lit(1)))
+          }.find(_._2.getLong(0) >= 20)
           val base = cand match {
-            case Some(ids) =>
+            case Some((ids, _)) =>
               docs.join(broadcast(ids), Seq("doc_id"), "left_semi")
             case None => docs
           }

@@ -32,7 +32,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally // drop leaked localCheckpoint blocks between queries
+      finally // drop leaked barrier blocks between queries
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
     }

@@ -10,19 +10,26 @@ import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.StructType
 
 /** The one materialization primitive: an eager `localCheckpoint` that
-  * also reports aggregates over the rows it wrote.
+  * also reports aggregates over the rows it wrote. Every operator,
+  * registry row, sink and tool cuts lineage through here; no other
+  * file calls `localCheckpoint` (`LocalCheckpointRatchetSpec`), so how
+  * a frame is materialized and what statistics it carries is decided
+  * in this one place.
   *
-  * Iterative operators (tree levels, BFS rounds, supersteps) cut their
-  * lineage with a checkpoint per round and then decide whether to go on
-  * from a count. Run as a separate `count()`, that decision is a second
-  * Spark job per round over the frame the checkpoint just wrote, and on
-  * small levels the fixed cost of a job is most of the round. Here the
-  * metrics ride the checkpoint's own job through `Dataset.observe`: a new
+  * Callers that decide something from the frame they materialize (go
+  * on to another round, check a length, pick a threshold) would
+  * otherwise run a separate `count()` or aggregate: a second Spark job
+  * over the frame the checkpoint just wrote, and on small frames the
+  * fixed cost of a job is most of the work. Here the metrics ride the
+  * checkpoint's own job through `Dataset.observe`: a new
   * [[Observation]] per call collects them as the rows stream into the
-  * checkpoint's blocks, so a barrier is exactly one action.
+  * checkpoint's blocks, so a barrier is exactly one action. Callers
+  * that observe nothing take `._1`.
   *
-  * The frame's statistics are the exact number of rows written, so a
-  * join against it is planned from its real size.
+  * The frame's statistics are what the checkpoint stored: the exact
+  * number of rows written and the bytes its blocks hold, so a join
+  * against it is planned from its real size, arrays and long strings
+  * included.
   *
   * Local mode only. A reliable `checkpoint()` computes its plan a second
   * time to write the files, so an observed count could include the rows
@@ -44,6 +51,6 @@ object Barrier {
     // the checkpoint's query completes the observation once its job ends
     val all = Await.result(observation.future, Duration.Inf)
     val observed = new GenericRowWithSchema(all.toSeq.tail.toArray, StructType(all.schema.tail))
-    (PlanBridge.withRowCount(ck, all.getLong(0)), observed)
+    (PlanBridge.withStoredStats(ck, all.getLong(0)), observed)
   }
 }

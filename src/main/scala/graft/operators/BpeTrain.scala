@@ -60,13 +60,12 @@ object BpeTrain {
     call_function("substring", w, i, lit(1))
 
   /** The (word, count, symbols) working vocabulary — one corpus
-    * shuffle, then `localCheckpoint` so the merge rounds iterate a
+    * shuffle, then a [[Barrier]] so the merge rounds iterate a
     * materialized frame instead of re-deriving the corpus scan. */
   def vocabulary(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(TextFunctions.tokens(col(textCol))).as("w"))
+    Barrier.materialize(docs.select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(col("w"), col("cnt"), chars(col("w")).as("syms"))
-      .localCheckpoint()
+      .select(col("w"), col("cnt"), chars(col("w")).as("syms")))._1
 
   /** Learns up to `nMerges` merges. Stops early when no adjacent
     * pair remains (fully merged vocabulary). */
@@ -124,7 +123,7 @@ object BpeTrain {
         vocab = vocab.withColumn("syms", applyMerge(col("syms"), l, r))
         // the fold deepens lineage linearly; rematerialize every few
         // rounds so round k's plan never replays rounds 1..k-1
-        if ((round + 1) % 4 == 0) vocab = vocab.localCheckpoint()
+        if ((round + 1) % 4 == 0) vocab = Barrier.materialize(vocab)._1
         round += 1
       }
     }
@@ -267,10 +266,9 @@ object BpeTrain {
     * join it to any exploded token stream. */
   def segmentVocabulary(docs: DataFrame, textCol: String,
       merges: Seq[Merge], localMaxVocab: Long = 1L << 16): DataFrame = {
-    val start = docs.select(explode(TextFunctions.tokens(col(textCol))).as("w"))
+    val start = Barrier.materialize(docs.select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .distinct()
-      .select(col("w"), chars(col("w")).as("segments"))
-      .localCheckpoint()
+      .select(col("w"), chars(col("w")).as("segments")))._1
     // bounded driver-local fast path, mirroring [[trainAndSegment]]:
     // a collectable vocabulary (bounded on BOTH word count and total
     // symbols — fitsOnDriver) replays the merge fold as a driver loop
@@ -293,7 +291,7 @@ object BpeTrain {
         // distributed path was paying one extra full materialization);
         // the first segment's lineage runs 8 merges, the cadence-4
         // depth elsewhere was conservative
-        if ((i + 1) % 4 == 0 && i > 3) next.localCheckpoint() else next
+        if ((i + 1) % 4 == 0 && i > 3) Barrier.materialize(next)._1 else next
       }
   }
 }

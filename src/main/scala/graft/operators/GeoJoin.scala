@@ -268,10 +268,12 @@ object GeoJoin {
     // matches (pooling inflates the match count past k and duplicates
     // neighbors in the ranked output)
     val l0 = left.withColumn("_lrow", monotonically_increasing_id())
-    var unresolved = l0.localCheckpoint()
+    // each ring's unresolved frame counts its rows on its own barrier
+    // job, so the loop test costs no extra job
+    var (unresolved, pending) = Barrier.materialize(l0, count(lit(1)))
     var acc: DataFrame = null
     var r = r0
-    while (!unresolved.isEmpty) {
+    while (pending.getLong(0) > 0) {
       val globalRing = r >= MaxDistKm
       val matches = radiusJoinBanded(unresolved, latL, lonL, right, latR, lonR,
           radiusKm = math.min(r, MaxDistKm), cellLat = pickCellLat(r),
@@ -291,17 +293,17 @@ object GeoJoin {
       // by id in the (rounded, id) order the oracle uses — such
       // boundary rows simply resolve one doubling later, when both
       // candidates are in-ring. The global ring resolves everything.
-      val done = ranked
+      val done = Barrier.materialize(ranked
         .filter(lit(globalRing) ||
           (col("_nm") >= k && col("_kd") < lit(r - 1e-4)))
         .filter(col("rank") <= k)
-        .drop("_nm", "_kd")
-        .localCheckpoint()
+        .drop("_nm", "_kd"))._1
       acc = if (acc == null) done else acc.unionByName(done)
-      unresolved = unresolved
-        .join(done.select("_lrow").distinct(), Seq("_lrow"), "left_anti")
-        .localCheckpoint()
-      if (globalRing && !unresolved.isEmpty) {
+      val (next, nextPending) = Barrier.materialize(unresolved
+        .join(done.select("_lrow").distinct(), Seq("_lrow"), "left_anti"), count(lit(1)))
+      unresolved = next
+      pending = nextPending
+      if (globalRing && pending.getLong(0) > 0) {
         // right side empty (or smaller than k): emit what exists —
         // rows with no match at the full ring simply have none
         return acc.drop("_lrow")

@@ -37,14 +37,13 @@ object GlobalIndex {
       partitions: Int): DataFrame = {
     require(partitions > 0, s"partitions must be positive, got $partitions")
     val spark = df.sparkSession
-    val arranged = df
+    // count + number are two jobs over this exchange's output; the
+    // barrier makes the source scanned once and the arrangement
+    // identical in both (it also severs the nondeterministic
+    // sample-based range boundaries from re-computation)
+    val arranged = Barrier.materialize(df
       .repartitionByRange(partitions, col(orderCol))
-      .sortWithinPartitions(orderCol)
-      // count + number are two jobs over this exchange's output; cache
-      // so the source is scanned once and the arrangement is identical
-      // in both (localCheckpoint also severs the nondeterministic
-      // sample-based range boundaries from re-computation)
-      .localCheckpoint()
+      .sortWithinPartitions(orderCol))._1
     // count on the INTERNAL row iterator (queryExecution.toRdd): no
     // Catalyst->Row deserialization just to count — the numbering pass
     // below pays that conversion once, where it's genuinely needed to

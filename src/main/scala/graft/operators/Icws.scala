@@ -95,46 +95,33 @@ object Icws {
     * exactly. Oversized products make every trailing band slice past
     * the array → empty key for EVERY doc → a silent within-block
     * quadratic pairing explosion; undersized silently ignores tail
-    * samples. One control-plane aggregate pins min AND max length
-    * against the data itself (r9 advice: a first-row-only peek let a
-    * heterogeneous union — frames built with different h — slip
-    * through and silently slice wrong for the other rows, the exact
-    * failure the guard exists to prevent). */
+    * samples. The min AND max length, observed on the barrier that
+    * materializes the signatures, pin it against the data itself (r9
+    * advice: a first-row-only peek let a heterogeneous union — frames
+    * built with different h — slip through and silently slice wrong
+    * for the other rows, the exact failure the guard exists to
+    * prevent). */
   def bandRows(sigs: DataFrame, idCol: String,
       bands: Int, rowsPerBand: Int,
       blockCols: Seq[String] = Nil): DataFrame = {
-    // The guard below is an AGGREGATE ACTION: on an unmaterialized
-    // frame it would evaluate the whole ICWS draw chain once for the
-    // guard and AGAIN for the banding (r10 advice: a silent 2-3×
-    // regression for any caller that forgot to checkpoint).
-    // LIFETIME: the checkpoint taken here is never explicitly
-    // unpersisted — the returned band frame references it lazily, so
-    // an eager unpersist would kill blocks a not-yet-run consumer
-    // cannot recompute (localCheckpoint truncates lineage). Its
-    // blocks are freed by the ContextCleaner when the frame becomes
-    // unreachable; long-running processes that band many corpora
-    // should materialize sigs themselves (the root-is-checkpoint test
-    // below then skips this internal copy) and manage that lifetime.
-    // Materialize unless the frame ITSELF is a checkpoint (root is a
-    // LogicalRDD) — a leaves-only test would misread signatures built
-    // ON TOP of a checkpointed source as already computed (r11
-    // review) and skip the checkpoint for exactly the caller the
-    // guard defends. The false-negative direction (re-checkpointing
-    // a projection over a checkpoint) only costs a cheap copy.
-    val sigsM =
-      if (sigs.queryExecution.analyzed
-        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) sigs
-      else sigs.localCheckpoint()
-    sigsM.agg(min(size(col("sig"))), max(size(col("sig")))).head(1)
-      .filterNot(_.isNullAt(0)).foreach { r =>
-        val (lo, hi) = (r.getInt(0), r.getInt(1))
-        require(lo == hi,
-          s"heterogeneous signature lengths ($lo..$hi) — all rows must " +
-            s"come from one signatures() call with a single h")
-        require(bands * rowsPerBand == lo,
-          s"bands ($bands) × rowsPerBand ($rowsPerBand) must equal the " +
-            s"signature length ($lo)")
-      }
+    // The signatures are materialized here and the guard's min and max
+    // length ride that barrier's own job: the ICWS draw chain runs once
+    // for the guard and the banding together, with no separate
+    // aggregate action. LIFETIME: the returned band frame reads the
+    // barrier's blocks lazily, so they are never explicitly
+    // unpersisted; the ContextCleaner frees them when the frame
+    // becomes unreachable.
+    val (sigsM, len) = Barrier.materialize(sigs,
+      min(size(col("sig"))), max(size(col("sig"))))
+    if (!len.isNullAt(0)) {
+      val (lo, hi) = (len.getInt(0), len.getInt(1))
+      require(lo == hi,
+        s"heterogeneous signature lengths ($lo..$hi) — all rows must " +
+          s"come from one signatures() call with a single h")
+      require(bands * rowsPerBand == lo,
+        s"bands ($bands) × rowsPerBand ($rowsPerBand) must equal the " +
+          s"signature length ($lo)")
+    }
     val blockIn = blockCols.map(c => s", x.$c").mkString
     sigsM.as("x").select(
       col(idCol),

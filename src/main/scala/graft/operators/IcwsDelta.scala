@@ -55,14 +55,8 @@ object IcwsDelta extends CompactableIndex {
   /** One row per (document, band): the index unit. `docs` must carry
     * idCol, textCol, and [[BlockCols]]. */
   def bandRows(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // checkpoint BEFORE Icws.bandRows: its geometry guard runs an
-    // aggregate action over the sig frame, which would otherwise
-    // evaluate the whole ICWS draw chain twice (once for the guard,
-    // once for the consumer) — measured 4.9 s → 2.3 s on the sweep
-    // probe at sf0.1
     val sigs = Icws.signatures(docs, idCol, textCol, H)
       .join(docs.select(col(idCol) +: BlockCols.map(col): _*), idCol)
-      .localCheckpoint()
     Icws.bandRows(sigs, idCol, Bands, RowsPerBand, BlockCols)
       .select(col(idCol).as("doc_id"),
         struct(col("band").cast("int").as("band_id"),
@@ -97,8 +91,8 @@ object IcwsDelta extends CompactableIndex {
     * STREAMED and column-prunes to (doc_id, lsh_key): the stored sigs
     * are never read on this path. No forced broadcast by default (r10
     * advice, mirroring the Ivf.rangeProbeIndexedBatch fix): the delta
-    * band rows are localCheckpointed, so AQE broadcasts a genuinely
-    * small delta from its exact size stats, while a bulk backfill
+    * band rows are materialized through Barrier, so AQE broadcasts a
+    * genuinely small delta from its stored size, while a bulk backfill
     * degrades to a shuffled equi-join instead of hitting the
     * broadcast ceiling; broadcastDelta=true remains the opt-in hint
     * for the tiny daily-increment case. Pairs are (id_a < id_b);
@@ -108,7 +102,7 @@ object IcwsDelta extends CompactableIndex {
       textCol: String, index: DataFrame,
       broadcastDelta: Boolean = false): DataFrame =
     candFromBands(
-      bandRows(delta, idCol, textCol).localCheckpoint(), index,
+      Barrier.materialize(bandRows(delta, idCol, textCol))._1, index,
       broadcastDelta)
 
   /** [[incrementalCandidates]] over PREBUILT delta band rows — the
@@ -142,7 +136,7 @@ object IcwsDelta extends CompactableIndex {
   def incrementalCandidatesPruned(spark: SparkSession, path: String,
       delta: DataFrame, idCol: String, textCol: String,
       broadcastDelta: Boolean = false): DataFrame = {
-    val d = bandRows(delta, idCol, textCol).localCheckpoint()
+    val d = Barrier.materialize(bandRows(delta, idCol, textCol))._1
     candFromBands(d, MinhashDelta.prunedIndexFrame(spark, path, d),
       broadcastDelta)
   }
@@ -161,7 +155,7 @@ object IcwsDelta extends CompactableIndex {
     * itself hardcodes. Rename before calling from a differently-keyed
     * pipeline. */
   def verifyExact(docs: DataFrame, cand: DataFrame, tau: Double): DataFrame = {
-    val c = cand.localCheckpoint() // feeds the id restriction + verify
+    val c = Barrier.materialize(cand)._1 // feeds the id restriction + verify
     val ids = c.select(col("id_a").as("doc_id"))
       .unionAll(c.select(col("id_b").as("doc_id"))).distinct()
     graft.QueriesML.weightedJaccardVerify(

@@ -75,10 +75,10 @@ object Ivf {
     var cents = centroids(index, cellCol, vecCol)
     for (i <- 0 until rounds) {
       index = assign(v, cents, idCol, vecCol, cellCol)
-      if (i == rounds - 1) index = index.localCheckpoint()
+      if (i == rounds - 1) index = Barrier.materialize(index)._1
       cents = centroids(index, cellCol, vecCol)
     }
-    (index, cents.localCheckpoint())
+    (index, Barrier.materialize(cents)._1)
   }
 
   /** Persists a built index CELL-PARTITIONED (`cells/<cellCol>=…`
@@ -167,7 +167,7 @@ object Ivf {
       delta: DataFrame, idCol: String, vecCol: String, cellCol: String,
       threshold: Double): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
-    val d = assign(delta, cents, idCol, vecCol, cellCol).localCheckpoint()
+    val d = Barrier.materialize(assign(delta, cents, idCol, vecCol, cellCol))._1
     val cells = d.select(col(cellCol)).distinct().collect().map(_.get(0))
     val oldNew = spark.read.parquet(s"$path/cells").as("i")
       .filter(col(cellCol).isin(cells.toIndexedSeq: _*))
@@ -349,12 +349,12 @@ object Ivf {
     val stats = requireFreshStats(spark, path)
     val cents = spark.read.parquet(s"$path/centroids")
     val t = math.sqrt(math.max(0.0, 2.0 - 2.0 * minCos))
-    val qCells = queries.crossJoin(broadcast(cents.join(stats, cellCol)))
+    // consumed twice: cell-id union + candidate join
+    val qCells = Barrier.materialize(queries.crossJoin(broadcast(cents.join(stats, cellCol)))
       .filter(sqrt(greatest(lit(0.0),
         lit(2.0) - lit(2.0) * dot(col("centroid"), col(qCol)))) -
         col("r") <= lit(t + 1e-9))
-      .select(col(qIdCol), col(qCol), col(cellCol))
-      .localCheckpoint() // consumed twice: cell-id union + candidate join
+      .select(col(qIdCol), col(qCol), col(cellCol)))._1
     val survivingCells = qCells.select(cellCol).distinct().collect().map(_.get(0))
     // No forced broadcast() on the candidate join: qCells holds up to
     // |queries| × |surviving cells| rows EACH carrying the full query
@@ -413,13 +413,13 @@ object Ivf {
       qCol: String = "q"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cents = spark.read.parquet(s"$path/centroids")
-    val qCells = queries.crossJoin(broadcast(cents))
+    // consumed twice: cell-id union + candidate join
+    val qCells = Barrier.materialize(queries.crossJoin(broadcast(cents))
       .withColumn("__sim", dot(col(qCol), col("centroid")))
       .withColumn("__r", row_number().over(
         Window.partitionBy(qIdCol).orderBy(col("__sim").desc, col(cellCol))))
       .filter(col("__r") <= nprobe)
-      .select(col(qIdCol), col(qCol), col(cellCol))
-      .localCheckpoint() // consumed twice: cell-id union + candidate join
+      .select(col(qIdCol), col(qCol), col(cellCol)))._1
     val probedCells = qCells.select(cellCol).distinct().collect().map(_.get(0))
     // Same no-forced-broadcast reasoning as [[rangeProbeIndexedBatch]]:
     // qCells is |queries| × nprobe rows of full query vectors — AQE

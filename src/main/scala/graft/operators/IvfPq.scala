@@ -129,8 +129,7 @@ object IvfPq {
       cellCol: String, path: String, m: Int, k: Int,
       ivfRounds: Int = 2, pqRounds: Int = 3): Unit = {
     val (index, cents) = Ivf.refine(v, idCol, vecCol, cellCol, ivfRounds)
-    val resid = residuals(index, cents, idCol, vecCol, cellCol)
-      .localCheckpoint()
+    val resid = Barrier.materialize(residuals(index, cents, idCol, vecCol, cellCol))._1
     try writeFrom(resid, cents, idCol, cellCol, path, m, k, pqRounds)
     finally resid.unpersist(blocking = false)
   }
@@ -148,8 +147,8 @@ object IvfPq {
     // carry the residual through the encode projection so the error
     // stats need no corpus-wide re-join; the stored cells keep only
     // (id, codes) — the narrow layout is the point of PQ
-    val encoded = Pq.encode(resid, books, idCol, "resid", m,
-      carry = Seq(cellCol, "resid")).localCheckpoint()
+    val encoded = Barrier.materialize(Pq.encode(resid, books, idCol, "resid", m,
+      carry = Seq(cellCol, "resid")))._1
     try {
       // invalidate the PREVIOUS build's completion marker BEFORE the
       // first overwrite: errstats lands last and build-if-missing
@@ -201,8 +200,8 @@ object IvfPq {
     val m = books.agg(max(col("seg"))).head().getInt(0) + 1
     val assigned = Ivf.assign(delta, cents, idCol, vecCol, cellCol)
     val resid = residuals(assigned, cents, idCol, vecCol, cellCol)
-    val encoded = Pq.encode(resid, books, idCol, "resid", m,
-      carry = Seq(cellCol, "resid")).localCheckpoint()
+    val encoded = Barrier.materialize(Pq.encode(resid, books, idCol, "resid", m,
+      carry = Seq(cellCol, "resid")))._1
     try {
       encoded.drop("resid")
         .withColumn("batch", lit(batchId))
@@ -316,7 +315,7 @@ object IvfPq {
     val cents = spark.read.parquet(s"$path/centroids")
     val books = collectBooks(spark.read.parquet(s"$path/codebooks"))
     val m = books.map(_._1).max + 1
-    val d = Ivf.assign(delta, cents, idCol, vecCol, cellCol).localCheckpoint()
+    val d = Barrier.materialize(Ivf.assign(delta, cents, idCol, vecCol, cellCol))._1
     val cells = d.select(col(cellCol)).distinct().collect().map(_.get(0))
     // x̂ segment lookup: per segment, a literal array<array<double>>
     // indexed by the stored code id (dense, train's contract)
@@ -379,13 +378,13 @@ object IvfPq {
     val cents = spark.read.parquet(s"$path/centroids")
     val books = collectBooks(spark.read.parquet(s"$path/codebooks"))
     val m = books.map(_._1).max + 1
-    val qCells = queries.crossJoin(broadcast(cents))
+    // consumed twice: cell-id union + ADC join
+    val qCells = Barrier.materialize(queries.crossJoin(broadcast(cents))
       .withColumn("__sim", dot(col(qCol), col("centroid")))
       .withColumn("__r", row_number().over(
         Window.partitionBy(qIdCol).orderBy(col("__sim").desc, col(cellCol))))
       .filter(col("__r") <= nprobe)
-      .select(col(qIdCol), col(qCol), col(cellCol), col("centroid"))
-      .localCheckpoint() // consumed twice: cell-id union + ADC join
+      .select(col(qIdCol), col(qCol), col(cellCol), col("centroid")))._1
     val probedCells = qCells.select(cellCol).distinct().collect().map(_.get(0))
     val short = spark.read.parquet(s"$path/cells")
       .filter(col(cellCol).isin(probedCells.toIndexedSeq: _*))

@@ -85,7 +85,7 @@ object MinhashDelta extends CompactableIndex {
       delta: DataFrame, idCol: String, textCol: String,
       index: DataFrame, broadcastDelta: Boolean = false): DataFrame =
     pairsFromBands(
-      bandRows(delta, idCol, textCol).localCheckpoint(),
+      Barrier.materialize(bandRows(delta, idCol, textCol))._1,
       index, broadcastDelta)
 
   /** The probe kernel over PREBUILT delta band rows — shared by the
@@ -95,8 +95,8 @@ object MinhashDelta extends CompactableIndex {
       d: DataFrame, index: DataFrame, broadcastDelta: Boolean): DataFrame = {
     // No FORCED broadcast by default (r10 advice — the same ceiling
     // the r9 fix removed from Ivf.rangeProbeIndexedBatch): the delta
-    // band rows are localCheckpointed by every caller, so AQE has
-    // exact size stats and broadcasts a genuinely small delta on its
+    // band rows are materialized through Barrier by every caller, so
+    // AQE has their stored size and broadcasts a genuinely small delta on its
     // own, while a bulk backfill degrades gracefully to a shuffled
     // equi-join on lsh_key instead of OOMing the driver.
     // broadcastDelta=true stays as an opt-in HINT for the tiny
@@ -118,7 +118,7 @@ object MinhashDelta extends CompactableIndex {
   /** Full self-join recompute over one frame — the parity yardstick
     * (and the batch-mode path when there IS no index yet). */
   def allPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    selfPairs(bandRows(docs, idCol, textCol).localCheckpoint())
+    selfPairs(Barrier.materialize(bandRows(docs, idCol, textCol))._1)
       .filter(col("jaccard_est") >= Threshold)
       .distinct()
 
@@ -189,7 +189,7 @@ object MinhashDelta extends CompactableIndex {
   def incrementalPairsPruned(spark: SparkSession, path: String,
       delta: DataFrame, idCol: String, textCol: String,
       broadcastDelta: Boolean = false): DataFrame = {
-    val d = bandRows(delta, idCol, textCol).localCheckpoint()
+    val d = Barrier.materialize(bandRows(delta, idCol, textCol))._1
     pairsFromBands(d, prunedIndexFrame(spark, path, d), broadcastDelta)
   }
 

@@ -75,7 +75,7 @@ object PrefixFilter {
       shingle: Int, tau: Double, maxDf: Int = Int.MaxValue): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau in (0, 1], got $tau")
     require(maxDf >= 2, s"maxDf must allow at least one pair, got $maxDf")
-    val sets = shingleSets(docs, idCol, textCol, shingle).localCheckpoint()
+    val sets = Barrier.materialize(shingleSets(docs, idCol, textCol, shingle))._1
     val dfTab = sets.select(explode(col("grams")).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("df"))
     // per doc: RETAINED (df <= maxDf) elements sorted rarest-first,
@@ -97,7 +97,16 @@ object PrefixFilter {
     val retainExpr =
       if (maxDf == Int.MaxValue) "transform(ordered, x -> x.gram)"
       else s"transform(filter(ordered, x -> x.df <= ${maxDf}L), x -> x.gram)"
-    val ranked = universe
+    // materialized: BOTH sides of the candidate self-join below
+    // derive from this frame, and without the checkpoint the planner
+    // compiles the whole universe-shuffle + rarest-first
+    // ObjectHashAggregate chain TWICE (the broadcast side is a
+    // BroadcastExchange, so ReuseExchange never fires — plan audit
+    // r13, plans/r13/dedup_prefix_filter_before.txt ops 10-18 vs
+    // 34-42). One |docs|-row write with hashed-prefix arrays buys
+    // out a full second aggregation pass — the q_market_basket
+    // discipline.
+    val ranked = Barrier.materialize(universe
       .groupBy(idCol)
       .agg(sort_array(collect_list(struct(col("df"), col("gram"))))
         .as("ordered"),
@@ -128,17 +137,7 @@ object PrefixFilter {
       // compares longs. The rarest-first ORDER is untouched — it was
       // fixed upstream by sort_array over (df, gram).
       .select(col(idCol), col("n"),
-        expr("transform(prefix, g -> xxhash64(g))").as("prefix"))
-      // materialized: BOTH sides of the candidate self-join below
-      // derive from this frame, and without the checkpoint the planner
-      // compiles the whole universe-shuffle + rarest-first
-      // ObjectHashAggregate chain TWICE (the broadcast side is a
-      // BroadcastExchange, so ReuseExchange never fires — plan audit
-      // r13, plans/r13/dedup_prefix_filter_before.txt ops 10-18 vs
-      // 34-42). One |docs|-row write with hashed-prefix arrays buys
-      // out a full second aggregation pass — the q_market_basket
-      // discipline.
-      .localCheckpoint()
+        expr("transform(prefix, g -> xxhash64(g))").as("prefix")))._1
     val pref = ranked.select(col(idCol), col("n"),
       posexplode(col("prefix")).as(Seq("pos", "gram")))
     // LENGTH FILTER (AllPairs, exactness-preserving): J >= tau forces

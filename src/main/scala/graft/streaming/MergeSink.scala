@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.operators.IncrementalMerge
+import graft.operators.{Barrier, IncrementalMerge}
 
 /** Streaming form of the reference's incremental MERGE (etl-dag.sql):
   * each micro-batch is insert-only-merged into a parquet target via
@@ -427,10 +427,9 @@ object MergeSink {
     require(fullCols.contains(generalizeCol),
       s"$generalizeCol must be one of $fullCols")
     val residual = fullCols.filterNot(_ == generalizeCol)
-    val g = spark.read.parquet(statePath)
+    val g = Barrier.materialize(spark.read.parquet(statePath)
       .groupBy(fullCols.map(col): _*)
-      .agg(sum("n").as("n"), expr("bitmap_or_count(bm)").as("u"))
-      .localCheckpoint()
+      .agg(sum("n").as("n"), expr("bitmap_or_count(bm)").as("u")))._1
     val pass = g.filter(col("u") >= k)
       .select(fullCols.map(col) :+ col("n"): _*)
     val gen = g.filter(col("u") < k)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.AnnBuckets
+import graft.operators.{AnnBuckets, Barrier}
 
 /** Always-on vector ingest (H26): each micro-batch of embeddings is
   * bucketed once, probed against the persisted hyperplane index ("is
@@ -39,7 +39,7 @@ object StreamAnnIngest {
       tau: Double = AnnBuckets.Tau, compactEvery: Int = 16)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val d = AnnBuckets.bucketRows(batch, idCol, vecCol).localCheckpoint()
+    val d = Barrier.materialize(AnnBuckets.bucketRows(batch, idCol, vecCol))._1
     try {
       AnnBuckets.matches(d, AnnBuckets.readIndex(spark, indexPath), tau)
         .write.mode("overwrite").parquet(s"$matchesPath/batch=$batchId")

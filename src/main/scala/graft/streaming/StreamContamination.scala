@@ -41,7 +41,7 @@ object StreamContamination extends graft.operators.CompactableIndex {
   override protected def clusterCols: Seq[String] = Seq("gram")
 
   /** The fixed held-out set's distinct (doc_id, gram) rows — build
-    * once with [[QueriesLLM.wordGramRows]] and localCheckpoint; the
+    * once with [[QueriesLLM.wordGramRows]] and a Barrier; the
     * monitor broadcasts the gram column per batch. */
   def testGramRows(testDocs: DataFrame): DataFrame =
     QueriesLLM.wordGramRows(testDocs)

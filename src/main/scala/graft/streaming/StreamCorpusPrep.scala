@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Components
+import graft.operators.{Barrier, Components}
 import graft.{QueriesLLM, QueriesML}
 
 /** Always-on corpus prep — F14b (`corpus_prep_incremental`) as a
@@ -70,7 +70,7 @@ object StreamCorpusPrep extends graft.operators.CompactableIndex {
         greatest(col("id_a"), col("id_b")).as("id_b"))
     val selfP = QueriesML.scoredPairs(deltaGrams, deltaGrams,
       "a.doc_id < b.doc_id").select("id_a", "id_b")
-    val pairs = oldNew.unionByName(selfP).distinct().localCheckpoint()
+    val pairs = Barrier.materialize(oldNew.unionByName(selfP).distinct())._1
     val cc = Components.connectedComponents(pairs, "id_a", "id_b")
     val dset = deltaGrams.select(col("doc_id").as("id"), lit(true).as("__d"))
     val tagged = cc.join(broadcast(dset), Seq("id"), "left")
@@ -93,13 +93,13 @@ object StreamCorpusPrep extends graft.operators.CompactableIndex {
       compactEvery: Int = 16)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val g = gramRows(batch).localCheckpoint()
+    val g = Barrier.materialize(gramRows(batch))._1
     try {
       // absorb replays: the batch's own rows may already stand (its
       // first delivery appended, the commit never landed)
       val standing = readIndex(spark, indexPath)
         .join(broadcast(g.select("doc_id").distinct()), Seq("doc_id"), "left_anti")
-      val dupes = dupeIds(standing, g).localCheckpoint()
+      val dupes = Barrier.materialize(dupeIds(standing, g))._1
       QueriesLLM.prepKept(batch.join(dupes, Seq("doc_id"), "left_anti"))
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       // SURVIVORS ONLY join the standing set — a dropped dup is not in

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Barrier
+
 /** Always-on ARRIVAL-ORDER NOVELTY scoring (the streaming twin of the
   * oracled F37 `text_novelty` row — the crawl-monitoring loop that
   * watches novelty decay across snapshots): each micro-batch of
@@ -60,9 +62,8 @@ object StreamNovelty extends graft.operators.CompactableIndex {
     // double the report's n_grams and land duplicate gram rows —
     // breaking the set invariant the anti join alone cannot protect
     // on its LEFT side
-    val ex = graft.QueriesLLM.wordGramRows(batch.dropDuplicates("doc_id"))
-      .select(col("doc_id"), explode(array_distinct(col("grams"))).as("gram"))
-      .localCheckpoint()
+    val ex = Barrier.materialize(graft.QueriesLLM.wordGramRows(batch.dropDuplicates("doc_id"))
+      .select(col("doc_id"), explode(array_distinct(col("grams"))).as("gram")))._1
     // a gram is novel for the batch's LOWEST doc carrying it (one row
     // per gram after the filter), and only if the standing corpus has
     // never seen it. LEFT_ANTI, not left-join-and-null-check (r12
@@ -76,11 +77,10 @@ object StreamNovelty extends graft.operators.CompactableIndex {
       // window + anti join run here), and a failure during it must
       // still free ex's blocks in the finally
       val w = org.apache.spark.sql.expressions.Window.partitionBy("gram")
-      novelRows = ex.withColumn("first_in_batch", min("doc_id").over(w))
+      novelRows = Barrier.materialize(ex.withColumn("first_in_batch", min("doc_id").over(w))
         .filter(col("doc_id") === col("first_in_batch"))
         .join(standingExcept(spark, indexPath, batchId), Seq("gram"), "left_anti")
-        .select(col("doc_id"), col("gram"))
-        .localCheckpoint() // consumed by the report join and the append
+        .select(col("doc_id"), col("gram")))._1 // consumed by the report join and the append
       ex.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
         .join(novelRows.groupBy("doc_id").agg(count(lit(1)).as("n_novel")),
           Seq("doc_id"), "left")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueriesLLM
+import graft.operators.Barrier
 
 /** Always-on LM-quality bucketing — F35 (`corpus_ppl_buckets`) as a
   * foreachBatch loop: documents keep arriving, each must be routed
@@ -83,16 +84,14 @@ object StreamPplBuckets {
     * with identical content. */
   def calibrate(spark: SparkSession, statePath: String, poolPath: String,
       artifactPath: String, excludeBatchId: Option[Long] = None): Unit = {
-    val freq = readState(spark, statePath, excludeBatchId)
-      .groupBy("tok").agg(sum("c").as("c"))
-      .localCheckpoint() // consumed by the pool scoring AND the write
+    val freq = Barrier.materialize(readState(spark, statePath, excludeBatchId)
+      .groupBy("tok").agg(sum("c").as("c")))._1 // consumed by the pool scoring AND the write
     // materialize BEFORE pplThresholds: its rate gate runs a count()
     // action and the rank stage re-reads the frame — unmaterialized,
     // the pool×freq LM join (the recalibration's dominant scan) would
     // evaluate twice (gotcha #4; the batch caller checkpoints too)
-    val lp = QueriesLLM.logprobOfToks(
-        readState(spark, poolPath, excludeBatchId), freq)
-      .localCheckpoint()
+    val lp = Barrier.materialize(QueriesLLM.logprobOfToks(
+        readState(spark, poolPath, excludeBatchId), freq))._1
     val th = QueriesLLM.pplThresholds(lp)
     val staged = graft.sources.LakeWriter.stagingPath(artifactPath)
     val fs = new org.apache.hadoop.fs.Path(staged)
@@ -111,7 +110,7 @@ object StreamPplBuckets {
   def seed(docs: DataFrame, statePath: String, poolPath: String,
       artifactPath: String): Unit = {
     val spark = docs.sparkSession
-    val toks = QueriesLLM.tokenRows(docs).localCheckpoint()
+    val toks = Barrier.materialize(QueriesLLM.tokenRows(docs))._1
     try {
       TokState.seed(tokCounts(toks), statePath)
       PoolState.seed(poolRows(toks), poolPath)
@@ -153,7 +152,7 @@ object StreamPplBuckets {
       // exactly what its first delivery saw, not its own state rows
       calibrate(spark, statePath, poolPath, artifactPath,
         excludeBatchId = Some(batchId))
-    val toks = QueriesLLM.tokenRows(batch).localCheckpoint()
+    val toks = Barrier.materialize(QueriesLLM.tokenRows(batch))._1
     try {
       bucketToks(spark, artifactPath, toks)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")

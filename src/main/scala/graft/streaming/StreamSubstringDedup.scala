@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.Winnow
+import graft.operators.{Barrier, Winnow}
 
 /** Always-on substring-level dedup: each micro-batch of new documents
   * probes the persisted winnowing fingerprint index ("did anything
@@ -36,8 +36,7 @@ object StreamSubstringDedup {
       compactEvery: Int = 16)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val fd = Winnow.fingerprintsFast(batch, idCol, textCol, k, w)
-      .localCheckpoint()
+    val fd = Barrier.materialize(Winnow.fingerprintsFast(batch, idCol, textCol, k, w))._1
     try {
       Winnow.incrementalPairs(
           Winnow.readIndex(spark, indexPath), fd, idCol, minShared, maxDf)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.IcwsDelta
+import graft.operators.{Barrier, IcwsDelta}
 
 /** Always-on WEIGHTED (tf-aware) near-dup detection: each micro-batch
   * of new documents draws its ICWS signatures once, probes the
@@ -43,7 +43,7 @@ object StreamWeightedDedup {
       compactEvery: Int = 16)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val d = IcwsDelta.bandRows(batch, idCol, textCol).localCheckpoint()
+    val d = Barrier.materialize(IcwsDelta.bandRows(batch, idCol, textCol))._1
     try {
       IcwsDelta.candidatesFromBands(d, IcwsDelta.readIndex(spark, indexPath))
         .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")

@@ -72,4 +72,17 @@ class BarrierSpec extends SparkTestBase {
     }
     assert(chain.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(300)))
   }
+
+  test("the returned frame's size is the bytes it stored, arrays included") {
+    val n = 2000
+    val embeddings = spark.range(0, n, 1, 4)
+      .select(col("id"), expr("transform(sequence(1, 64), i -> cast(id * i as double))").as("e"))
+    val (ck, m) = Barrier.materialize(embeddings, count(lit(1)))
+    assert(m.getLong(0) == n)
+    val stats = ck.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(n)))
+    // a per-row width from the schema counts one element per array
+    assert(stats.sizeInBytes >= BigInt(n) * 64 * 8,
+      s"${stats.sizeInBytes} bytes for $n rows of 64 doubles")
+  }
 }

@@ -8,6 +8,8 @@ import graft.operators.GeoJoin
 class GeoSpec extends SparkTestBase {
   import spark.implicits._
 
+  val KnnJobBudget = 35
+
   /** Classic geohash reference: successive interval bisection, the
     * textbook algorithm — independent of Geo's floor/mod arithmetic. */
   private def refGeohash(lat: Double, lon: Double, nChars: Int): String = {
@@ -238,6 +240,20 @@ class GeoSpec extends SparkTestBase {
       rightId = "rid", k = 1, r0 = 50.0).collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[Long]("rid") == 10L)
+  }
+
+  test("knn job budget: each ring counts its unresolved rows on its own barrier") {
+    // row 2 resolves in the first ring, row 1 after ~8 doublings
+    val l = Seq((1L, -89.0, 0.0), (2L, 0.0, 0.0)).toDF("lid", "llat", "llon")
+    val r = Seq((10L, 89.0, 0.0), (20L, 0.1, 0.0)).toDF("rid", "rlat", "rlon")
+    def run() = GeoJoin.knn(l, "llat", "llon", r, "rlat", "rlon",
+      rightId = "rid", k = 1, r0 = 50.0).select("lid", "rid").as[(Long, Long)].collect()
+    run()
+    var got = Array.empty[(Long, Long)]
+    val jobs = jobsOf("geo-knn") { got = run() }
+    info(s"$jobs jobs")
+    assert(got.toSet == Set((1L, 20L), (2L, 20L)))
+    assert(jobs <= KnnJobBudget, s"knn launched $jobs jobs, over its budget of $KnnJobBudget")
   }
 
   test("knn: duplicate left rows each get their own full top-k (no pooling)") {
