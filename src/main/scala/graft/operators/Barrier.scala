@@ -5,6 +5,7 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.StructType
@@ -52,5 +53,15 @@ object Barrier {
     val all = Await.result(observation.future, Duration.Inf)
     val observed = new GenericRowWithSchema(all.toSeq.tail.toArray, StructType(all.schema.tail))
     (PlanBridge.withStoredStats(ck, all.getLong(0)), observed)
+  }
+
+  /** Frees the blocks behind a frame [[materialize]] returned. They
+    * belong to the checkpoint's RDD, not to a cached plan, so
+    * `Dataset.unpersist` would leave them until the ContextCleaner
+    * collects the RDD. The frame cannot be read after this. */
+  def release(frame: DataFrame): Unit = frame.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case other => throw new IllegalArgumentException(
+      s"Barrier.release takes a frame Barrier.materialize returned, got ${other.nodeName}")
   }
 }

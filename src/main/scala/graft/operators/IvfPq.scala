@@ -131,7 +131,7 @@ object IvfPq {
     val (index, cents) = Ivf.refine(v, idCol, vecCol, cellCol, ivfRounds)
     val resid = Barrier.materialize(residuals(index, cents, idCol, vecCol, cellCol))._1
     try writeFrom(resid, cents, idCol, cellCol, path, m, k, pqRounds)
-    finally resid.unpersist(blocking = false)
+    finally Barrier.release(resid)
   }
 
   private def writeFrom(resid: DataFrame, cents: DataFrame, idCol: String,
@@ -174,7 +174,7 @@ object IvfPq {
       // the checkpoint carries full residual vectors (corpus-sized);
       // a repeated build or a streaming append loop must not pile
       // those blocks up in executor storage for the session's life
-      encoded.unpersist(blocking = false)
+      Barrier.release(encoded)
   }
 
   /** Grows a persisted IVF-PQ index WITHOUT re-training either
@@ -220,7 +220,7 @@ object IvfPq {
     } finally
       // per-batch checkpoints in a foreachBatch loop must not
       // accumulate in executor storage
-      encoded.unpersist(blocking = false)
+      Barrier.release(encoded)
   }
 
   /** ADC shortlist from a persisted index for a single query vector

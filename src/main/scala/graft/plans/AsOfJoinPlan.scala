@@ -63,6 +63,10 @@ object GraftStrategy extends SparkStrategy {
       BroadcastAsOfJoinExec(j.leftKeys, j.leftTime, j.rightKeys, j.rightTime,
         j.carry.map(_.withNullability(true)), j.forward,
         planLater(j.left), planLater(j.right)) :: Nil
+    case f: SessionFold =>
+      SessionFoldExec(f.keys, f.groupCols, f.start, f.end, f.duration, f.tieBreakers,
+        f.gapSeconds, f.minSessionSeconds, f.sessionOutput,
+        org.apache.spark.sql.internal.SQLConf.get.ansiEnabled, planLater(f.child)) :: Nil
     case _ => Nil
   }
 }

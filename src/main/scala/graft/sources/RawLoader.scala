@@ -122,6 +122,12 @@ object RawLoader {
     .add("loaded_at", org.apache.spark.sql.types.TimestampType, nullable = false)
     .add("run_rows", org.apache.spark.sql.types.LongType, nullable = false)
 
+  /** The ledger is only ever written by [[copyInto]], so its schema is
+    * known: reading with it skips the footer-reading job that schema
+    * inference launches on every read. */
+  private def readLedger(spark: SparkSession, ledgerPath: String): DataFrame =
+    spark.read.schema(LedgerSchema).parquet(ledgerPath)
+
   /** Snowflake `COPY INTO`'s idempotence unit is the FILE: every load
     * is recorded in load-history, and re-running the COPY (ingest
     * re-triggers, the one-shot backfill of ingest-backfill.sql replayed
@@ -160,9 +166,12 @@ object RawLoader {
     import scala.jdk.CollectionConverters._
     val feedPath = new org.apache.hadoop.fs.Path(s"$root/$feed")
     val fs = feedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val candidates = fs.listFiles(feedPath, /*recursive=*/ true)
-    val files = Iterator.continually(candidates)
-      .takeWhile(_.hasNext).map(_.next())
+    // listStatus, not listFiles: a LocatedFileStatus reads each file's
+    // permission, which the local file system without the native
+    // Hadoop library gets by forking `ls -ld` once per file
+    def walk(p: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).iterator.flatMap(s => if (s.isDirectory) walk(s.getPath) else Iterator(s))
+    val files = walk(feedPath)
       .map(_.getPath.toUri.toString)
       .filter(_.endsWith(".parquet")).toSeq.sorted
     val ledgerExists = fs.exists(new org.apache.hadoop.fs.Path(ledgerPath))
@@ -175,7 +184,7 @@ object RawLoader {
       files.map(org.apache.spark.sql.Row(_)).asJava, FileNameSchema)
     val freshDf =
       if (!ledgerExists) candDf
-      else candDf.join(spark.read.parquet(ledgerPath).select("file_name"),
+      else candDf.join(readLedger(spark, ledgerPath).select("file_name"),
         Seq("file_name"), "left_anti")
     val fresh = freshDf.collect().map(_.getString(0)).toSeq.sorted
     if (fresh.isEmpty) return CopyResult(0, files.size, 0)
@@ -211,7 +220,7 @@ object RawLoader {
   def compactLedger(spark: SparkSession, ledgerPath: String,
       numFiles: Int = 1): Unit = {
     val staged = LakeWriter.stagingPath(ledgerPath)
-    spark.read.parquet(ledgerPath).repartition(numFiles)
+    readLedger(spark, ledgerPath).repartition(numFiles)
       .write.mode("overwrite").parquet(staged)
     LakeWriter.publish(spark, staged, ledgerPath)
   }
@@ -222,7 +231,7 @@ object RawLoader {
     * partition-pruned read, not a row filter. */
   def readCommitted(spark: SparkSession, targetPath: String,
       ledgerPath: String): DataFrame = {
-    val runs = spark.read.parquet(ledgerPath)
+    val runs = readLedger(spark, ledgerPath)
       .select("run_id").distinct().collect().map(_.getString(0))
     require(runs.nonEmpty, s"no committed runs in $ledgerPath")
     spark.read.parquet(runs.toIndexedSeq.map(r => s"$targetPath/run=$r"): _*)
@@ -235,7 +244,7 @@ object RawLoader {
     val tp = new org.apache.hadoop.fs.Path(targetPath)
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(tp)) return Seq.empty
-    val committed = spark.read.parquet(ledgerPath)
+    val committed = readLedger(spark, ledgerPath)
       .select("run_id").distinct().collect().map(_.getString(0)).toSet
     val orphans = fs.listStatus(tp).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("run="))

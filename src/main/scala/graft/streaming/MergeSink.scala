@@ -30,8 +30,11 @@ object MergeSink {
     * column); the anti join probes the target's raw key column(s) —
     * it only tests existence, so a `distinct()` there would add an
     * aggregate and exchange over the whole target per batch. The
-    * target read keeps schema inference: a pinned schema would turn a
-    * missing key column into silent nulls. */
+    * target's keys are read with the batch's key schema, which skips
+    * the footer-reading job of schema inference: the target is this
+    * sink's own output, so it holds those columns. A target written
+    * without them would read NULL keys, match nothing and take every
+    * batch row again. */
   def insertOnlyParquet(targetPath: String, keys: Seq[String])(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
@@ -41,8 +44,8 @@ object MergeSink {
     val fresh =
       if (!fs.exists(path)) deduped
       else {
-        val target = spark.read.parquet(targetPath)
-        deduped.join(target.select(keys.map(target.col): _*), keys, "left_anti")
+        val keySchema = deduped.select(keys.map(deduped.col): _*).schema
+        deduped.join(spark.read.schema(keySchema).parquet(targetPath), keys, "left_anti")
       }
     fresh.write.mode(SaveMode.Append).parquet(targetPath)
   }

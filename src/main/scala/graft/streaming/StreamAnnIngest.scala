@@ -46,6 +46,6 @@ object StreamAnnIngest {
       AnnBuckets.writeBatch(d, indexPath, batchId)
       AnnBuckets.compactIfNeeded(spark, indexPath,
         maxBatches = compactEvery, preserveBatchIds = Set(batchId))
-    } finally d.unpersist(blocking = false)
+    } finally Barrier.release(d)
   }
 }

@@ -109,6 +109,6 @@ object StreamCorpusPrep extends graft.operators.CompactableIndex {
         indexPath, batchId)
       compactIfNeeded(spark, indexPath,
         maxBatches = compactEvery, preserveBatchIds = Set(batchId))
-    } finally g.unpersist(blocking = false)
+    } finally Barrier.release(g)
   }
 }

@@ -93,8 +93,8 @@ object StreamNovelty extends graft.operators.CompactableIndex {
       compactIfNeeded(spark, indexPath,
         maxBatches = compactEvery, preserveBatchIds = Set(batchId))
     } finally {
-      ex.unpersist(blocking = false)
-      if (novelRows != null) novelRows.unpersist(blocking = false)
+      Barrier.release(ex)
+      if (novelRows != null) Barrier.release(novelRows)
     }
   }
 }

@@ -115,7 +115,7 @@ object StreamPplBuckets {
       TokState.seed(tokCounts(toks), statePath)
       PoolState.seed(poolRows(toks), poolPath)
       calibrate(spark, statePath, poolPath, artifactPath)
-    } finally toks.unpersist(blocking = false)
+    } finally Barrier.release(toks)
   }
 
   /** Buckets a batch's docs under the CURRENT artifact — the F35
@@ -164,6 +164,6 @@ object StreamPplBuckets {
       PoolState.compactIfNeeded(spark, poolPath,
         maxBatches = compactEvery, numFiles = 8,
         preserveBatchIds = Set(batchId))
-    } finally toks.unpersist(blocking = false)
+    } finally Barrier.release(toks)
   }
 }

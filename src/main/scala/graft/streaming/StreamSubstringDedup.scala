@@ -49,6 +49,6 @@ object StreamSubstringDedup {
       // n_shared counts rows (see Winnow.compactIndex).
       Winnow.compactIfNeeded(spark, indexPath,
         maxBatches = compactEvery, preserveBatchIds = Set(batchId))
-    } finally fd.unpersist(blocking = false)
+    } finally Barrier.release(fd)
   }
 }

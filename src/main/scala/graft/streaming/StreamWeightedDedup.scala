@@ -57,6 +57,6 @@ object StreamWeightedDedup {
       // overwrites its own dir, byte-for-byte idempotent.
       IcwsDelta.compactIfNeeded(spark, indexPath,
         maxBatches = compactEvery, preserveBatchIds = Set(batchId))
-    } finally d.unpersist(blocking = false)
+    } finally Barrier.release(d)
   }
 }

@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkEnv
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -41,4 +43,8 @@ object PlanBridge {
     val stats = Statistics(BigInt(bytes), Some(BigInt(rows)))
     dataFrame(session, r.copy()(session, Some(stats), Some(r.constraints)))
   }
+
+  /** `e` with floating-point values normalized (-0.0 to 0.0, one NaN),
+    * as GROUP BY and PARTITION BY compare them; other types unchanged. */
+  def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 }

@@ -85,4 +85,17 @@ class BarrierSpec extends SparkTestBase {
     assert(stats.sizeInBytes >= BigInt(n) * 64 * 8,
       s"${stats.sizeInBytes} bytes for $n rows of 64 doubles")
   }
+
+  test("release frees the checkpoint's blocks, which unpersist leaves") {
+    val (ck, _) = Barrier.materialize(spark.range(0, 1000, 1, 4).toDF())
+    val rddId = ck.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    def persisted = spark.sparkContext.getPersistentRDDs.contains(rddId)
+    assert(persisted, "the barrier's RDD is not persisted")
+    ck.unpersist(blocking = true)
+    assert(persisted, "Dataset.unpersist reached the checkpoint's RDD")
+    Barrier.release(ck)
+    assert(!persisted, "the barrier's RDD is still persisted after release")
+    intercept[IllegalArgumentException](Barrier.release(ck.filter(col("id") > 5)))
+  }
 }

@@ -83,11 +83,39 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("q_sessionize shuffles the fact side exactly once") {
     val p = plan("q_sessionize")
-    // fact-side hash exchanges: LAG window + cumsum window + final
-    // group-by must all reuse hashpartitioning(hh_id, title, content_id);
-    // the only other exchanges sit under tiny broadcast/dim subtrees
+    // the one fact shuffle is the sessions fold's
+    // hashpartitioning(hh_id, title, content_id); the only other
+    // exchanges sit under tiny broadcast/dim subtrees
     val factExchanges = "Exchange hashpartitioning\\(hh_id".r.findAllIn(p).size
     assert(factExchanges == 1, s"expected ONE fact shuffle, got $factExchanges:\n$p")
+  }
+
+  test("Pipeline.sessions folds in one pass: no Window, no aggregate, one exchange on the session keys") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val root = Pipeline.sessions(spark, Sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    // the fact side: every node outside the small broadcast subtrees
+    def factSide(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: BroadcastExchangeExec => Nil
+      case _ => p.children.flatMap(factSide)
+    })
+    val nodes = factSide(root)
+    assert(nodes.exists(_.isInstanceOf[graft.plans.SessionFoldExec]), root.toString)
+    assert(!nodes.exists(n => n.isInstanceOf[WindowExec] || n.isInstanceOf[BaseAggregateExec]),
+      s"the sessions fold must replace the windows and the aggregate:\n$root")
+    val shuffled = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    val keyed = shuffled.collect { case h: HashPartitioning =>
+      h.expressions.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute].name)
+    }
+    assert(shuffled.size == 1 && keyed == Seq(Pipeline.SessionKeys),
+      s"expected one exchange on ${Pipeline.SessionKeys}, got $shuffled:\n$root")
   }
 
   test("q_topk_window plans WindowGroupLimit (map-side top-k pruning)") {

@@ -54,4 +54,22 @@ class SessionizeSpec extends SparkTestBase {
     )).collect()
     assert(out.length == 1)
   }
+
+  test("non-integral start, end or duration is refused when the frame is built") {
+    val rows = Seq(("a", 1000L, 1100L, 100L)).toDF("key", "start", "end", "dur")
+    for ((c, t) <- Seq("start" -> "timestamp", "end" -> "double", "dur" -> "decimal(10,0)")) {
+      val e = intercept[IllegalArgumentException](Sessionize.sessions(
+        rows.withColumn(c, col(c).cast(t)), keys = Seq("key"),
+        startCol = "start", endCol = "end", durationCol = "dur", tieBreakers = Seq("end")))
+      assert(e.getMessage.contains("integral") && e.getMessage.contains(s"$c "), e.getMessage)
+    }
+  }
+
+  test("a sessions frame joins itself") {
+    val s = sessions(Seq(("a", 1000L, 1100L, 200L), ("b", 10L, 20L, 300L), ("b", 900L, 990L, 400L)))
+    val pairs = s.as("x").join(s.as("y"), $"x.session_id" === $"y.session_id" && $"x.key" < $"y.key")
+      .select($"x.key", $"y.key", $"y.total_duration").as[(String, String, Long)].collect()
+    assert(pairs.toSeq == Seq(("a", "b", 300L)))
+    assert(s.join(s, Seq("key", "session_id")).count() == 3)
+  }
 }
