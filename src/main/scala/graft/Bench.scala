@@ -10,8 +10,10 @@ import org.apache.spark.sql.SparkSession
   *     (`sec` is null when the query failed — never a -1 sentinel)
   *   - a second `__calib__` line (same query, run after the whole suite),
   *   - then ONE final line: {"metric":"total","value":N,"unit":"sec",
-  *     "queries":{"name":sec,...},"sf":"...","passes":2,"n_queries":N,
-  *     "calib_sec":[a,b]}
+  *     "queries":{"name":sec,...},"passes_sec":[p1,p2],"sf":"...",
+  *     "passes":2,"n_queries":N,"calib_sec":[a,b]}
+  *     (`passes_sec`: the summed seconds of each pass over the suite;
+  *     suspect retries are in neither)
   *
   * Calibration: per-query wall times on the driver VM swing ~2× run to
   * run for reasons unrelated to the plans (noisy-neighbor VM drift, GC).
@@ -115,7 +117,8 @@ object Bench {
     * 32-vs-8-cpu scaling comparisons read — restored r13, see the object
     * scaladoc for the r01 misdiagnosis. Sorted names so runs diff
     * cleanly; a failed query renders `null`, matching its per-query
-    * line. Pure so BenchHistorySpec can pin the shape. */
+    * line. `passesSec` is each pass's summed seconds. Pure so
+    * BenchHistorySpec can pin the shape. */
   private[graft] def totalLine(
       total: Double,
       sfDir: String,
@@ -123,12 +126,14 @@ object Bench {
       results: Seq[(String, Option[Double], Int)],
       calibBefore: Double,
       calibAfter: Double,
-      flagged: Boolean): String = {
+      flagged: Boolean,
+      passesSec: Seq[Double]): String = {
     val flagField = if (flagged) ""","calib_flagged":true""" else ""
     val qMap = results.sortBy(_._1).map { case (n, best, _) =>
       s""""$n":${best.map(v => f"$v%.4f").getOrElse("null")}"""
     }.mkString(",")
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":{$qMap},"sf":"$sfDir","passes":$minPasses,"n_queries":${results.size},"calib_sec":[$calibBefore,$calibAfter]$flagField}"""
+    val passes = passesSec.map(v => f"$v%.4f").mkString(",")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":{$qMap},"passes_sec":[$passes],"sf":"$sfDir","passes":$minPasses,"n_queries":${results.size},"calib_sec":[$calibBefore,$calibAfter]$flagField}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -248,14 +253,17 @@ object Bench {
     val budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "900").toDouble
     val started = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - started) / 1e9
-    val results = names.map { n =>
+    val passes = names.map { n =>
       val t1 = exec(n)
       // the second attempt also runs when pass 1 FAILED — a transient
       // error should cost one pass, not the whole query's number
       val t2 = if (elapsed < budget) exec(n) else None
-      val best = (t1.toSeq ++ t2.toSeq).minOption
-      (n, best, t1.size + t2.size)
+      (n, t1, t2)
     }
+    val results = passes.map { case (n, t1, t2) =>
+      (n, (t1.toSeq ++ t2.toSeq).minOption, t1.size + t2.size)
+    }
+    val passesSec = Seq(passes.flatMap(_._2).sum, passes.flatMap(_._3).sum)
     // LOAD-BURST DEFENSE (driver-round-8 forensics: a VM burst minted
     // a 15.4× vs_prev row for dedup_embedding that cost a round to
     // disprove). Before a full run enters the committed history, any
@@ -326,7 +334,7 @@ object Bench {
     if (flagged) System.err.println(
       f"[bench] calib_flagged: bracket mean ${(calibBefore + calibAfter) / 2.0}%.3f exceeds ${CalibFlagRatio}x the recent min ${minRecentCalib.getOrElse(0.0)}%.3f — loaded VM, totals are not comparable raw")
     println(totalLine(total, sfDir, minPasses, retried, calibBefore,
-      calibAfter, flagged))
+      calibAfter, flagged, passesSec))
     // Narrowed iteration runs stay out of the committed history: a
     // 3-query line would become the next full run's vs_prev baseline
     // and blind the per-query deltas for everything it omits.

@@ -4,24 +4,21 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{
   ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
+import GapFold.Run
+
 /** Streaming form of the C113 binge-run row (q_binge_sessions,
   * QueriesTv.scala): per (viewer, title), program exposures ordered by
   * start form a RUN that breaks when the gap from the previous
   * exposure's END exceeds the binge gap (4 h); runs of ≥ `minViews`
   * exposures are reported with span and total duration. Same
-  * `transformWithState` + event-time-timer discipline as
-  * [[StreamSessionizeV2]] (H1's gap sessionizer — reference
-  * semantics etl-ddl-backfill.sql:119-186 at binge granularity), with
-  * two deltas that mirror the batch row exactly:
-  *
-  *  - the state carries `runIdx`, the per-key count of runs STARTED,
-  *    so emitted binge_ids equal the batch cumsum-of-breaks run_id
-  *    (short runs consume an id without emitting — batch numbering
-  *    has the same holes);
-  *  - the state tracks `prevEnd` (last exposure's end — the LAG the
-  *    gap compares against) and `maxEnd` (the run's max end — what
-  *    the batch MAX aggregate reports) separately: an exposure that
-  *    outlasts its successors must not shrink the reported span.
+  * [[GapFold]] step as [[StreamSessionize]] (H1's gap sessionizer —
+  * reference semantics etl-ddl-backfill.sql:119-186 at binge
+  * granularity), on `transformWithState` with one event-time timer per
+  * open run, plus the per-key count of runs STARTED (`last_idx`), so emitted
+  * binge_ids equal the batch cumsum-of-breaks run_id (short runs
+  * consume an id without emitting — batch numbering has the same
+  * holes). The open run is always the last one started, so its id is
+  * `last_idx`.
   *
   * Scale shape: state is one small fixed-size row per OPEN
   * (viewer, title) run in RocksDB, timers close runs as the watermark
@@ -54,10 +51,6 @@ object StreamBinge {
         new java.sql.Timestamp(startTs * 1000L))
   }
 
-  /** Open-run state. `runIdx` = batch run_id of THIS run. */
-  case class OpenRun(runIdx: Long, start: Long, maxEnd: Long,
-      prevEnd: Long, dur: Long, n: Long)
-
   /** Column names match the batch row so parity compares directly. */
   case class BingeRun(smba_id: String, title: String, binge_id: Long,
       n_views: Long, binge_start_ts: Long, binge_end_ts: Long,
@@ -66,7 +59,7 @@ object StreamBinge {
   class BingeProcessor(gapSeconds: Long, minViews: Long)
       extends StatefulProcessor[(String, String), BingeExposure, BingeRun] {
 
-    @transient private var open: ValueState[OpenRun] = _
+    @transient private var open: ValueState[Run] = _
     // run counter surviving timer closes, so binge_ids keep matching
     // the batch cumsum-of-breaks numbering across runs of silence
     // (one long per key; a production deploy bounds it with a TTL
@@ -74,60 +67,49 @@ object StreamBinge {
     @transient private var lastIdx: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getValueState[OpenRun](
-        "open", Encoders.product[OpenRun], TTLConfig.NONE)
+      open = getHandle.getValueState[Run]("open", Encoders.product[Run], TTLConfig.NONE)
       lastIdx = getHandle.getValueState[Long](
         "last_idx", Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    private def deadlineMs(s: OpenRun): Long = (s.prevEnd + gapSeconds) * 1000L
-
-    private def close(key: (String, String), s: OpenRun): Option[BingeRun] =
+    private def close(key: (String, String), idx: Long, s: Run): Option[BingeRun] =
       if (s.n >= minViews)
-        Some(BingeRun(key._1, key._2, s.runIdx, s.n, s.start, s.maxEnd, s.dur))
+        Some(BingeRun(key._1, key._2, idx, s.n, s.start, s.maxEnd, s.total))
       else None
 
     override def handleInputRows(
         key: (String, String),
         rows: Iterator[BingeExposure],
         timerValues: TimerValues): Iterator[BingeRun] = {
+      val prev = if (open.exists) Some(open.get) else None
       // the batch window's total order within the key
-      val sorted = rows.toSeq.sortBy(e => (e.startTs, e.endTs, e.eventId))
-      var cur = if (open.exists) Option(open.get) else None
-      val prevDeadline = cur.map(deadlineMs)
-      val closed = Seq.newBuilder[BingeRun]
-      sorted.foreach { e =>
-        cur match {
-          case Some(s) if e.startTs - s.prevEnd <= gapSeconds =>
-            cur = Some(s.copy(
-              maxEnd = math.max(s.maxEnd, e.endTs),
-              prevEnd = e.endTs,
-              dur = s.dur + e.duration,
-              n = s.n + 1))
-          case maybePrev =>
-            maybePrev.foreach { s => close(key, s).foreach(closed += _) }
-            val idx = maybePrev.map(_.runIdx)
-              .getOrElse(if (lastIdx.exists) lastIdx.get else 0L) + 1
-            lastIdx.update(idx)
-            cur = Some(OpenRun(idx, e.startTs, e.endTs, e.endTs, e.duration, 1))
-        }
-      }
-      cur.foreach { s =>
+      val step = GapFold.step(prev,
+        rows.toSeq.sortBy(e => (e.startTs, e.endTs, e.eventId)).iterator
+          .map(e => (e.startTs, e.endTs, e.duration)),
+        gapSeconds)
+      // the closed runs are the ones numbered just below the open run
+      val openIdx = (if (lastIdx.exists) lastIdx.get else 0L) + step.opened
+      if (step.opened > 0) lastIdx.update(openIdx)
+      step.open.foreach { s =>
         open.update(s)
-        if (!prevDeadline.contains(deadlineMs(s))) {
+        val prevDeadline = prev.map(GapFold.deadlineMs(_, gapSeconds))
+        val deadline = GapFold.deadlineMs(s, gapSeconds)
+        if (!prevDeadline.contains(deadline)) {
           prevDeadline.foreach(getHandle.deleteTimer)
-          getHandle.registerTimer(deadlineMs(s))
+          getHandle.registerTimer(deadline)
         }
       }
-      closed.result().iterator
+      val firstIdx = openIdx - step.closed.size
+      step.closed.iterator.zipWithIndex.flatMap { case (s, i) => close(key, firstIdx + i, s) }
     }
 
     override def handleExpiredTimer(
         key: (String, String),
         timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[BingeRun] =
-      if (open.exists && deadlineMs(open.get) <= expiredTimerInfo.getExpiryTimeInMs) {
-        val out = close(key, open.get)
+      if (open.exists &&
+          GapFold.deadlineMs(open.get, gapSeconds) <= expiredTimerInfo.getExpiryTimeInMs) {
+        val out = close(key, lastIdx.get, open.get)
         open.clear() // lastIdx survives, so the next run keeps the
         // batch-matching numbering
         out.iterator

@@ -86,6 +86,17 @@ class BarrierSpec extends SparkTestBase {
       s"${stats.sizeInBytes} bytes for $n rows of 64 doubles")
   }
 
+  test("a fixed-width frame's size is its rows times the schema's row width") {
+    val n = 5000
+    val (ck, _) = Barrier.materialize(spark.range(0, n, 1, 4).toDF())
+    val stats = ck.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(n)))
+    // the block manager holds ~76 bytes a row for one long
+    assert(stats.sizeInBytes <= BigInt(n) * 8 * 2,
+      s"${stats.sizeInBytes} bytes for $n rows of one long")
+    assert(stats.sizeInBytes >= BigInt(n) * 8)
+  }
+
   test("release frees the checkpoint's blocks, which unpersist leaves") {
     val (ck, _) = Barrier.materialize(spark.range(0, 1000, 1, 4).toDF())
     val rddId = ck.queryExecution.logical

@@ -225,7 +225,7 @@ class BenchHistorySpec extends SparkTestBase {
     // the final stdout line had no "queries" key — the driver's
     // per-query and 32-vs-8-cpu scaling comparisons read THIS map.
     val line = Bench.totalLine(1.73456, "/sf/x", 2, results, 0.4, 0.6,
-      flagged = false)
+      flagged = false, passesSec = Seq(1.0, 0.73456))
     assert(line.startsWith("""{"metric":"total","value":1.73456,"unit":"sec","queries":{"""),
       line)
     assert(line.contains(""""q_a":0.5000""") &&
@@ -236,8 +236,19 @@ class BenchHistorySpec extends SparkTestBase {
       line)
     assert(!line.contains("\n") && line.count(_ == '{') == line.count(_ == '}'))
     val flagged = Bench.totalLine(1.0, "/sf/x", 1, results, 0.9, 0.9,
-      flagged = true)
+      flagged = true, passesSec = Seq(1.0))
     assert(flagged.endsWith(""","calib_flagged":true}"""), flagged)
+  }
+
+  test("totalLine: per-pass seconds ride between the query map and sf") {
+    val line = Bench.totalLine(1.73456, "/sf/x", 2, results, 0.4, 0.6,
+      flagged = false, passesSec = Seq(1.9, 1.73456))
+    assert(line.contains("""},"passes_sec":[1.9000,1.7346],"sf":"/sf/x","""), line)
+    // a run whose budget ran out before pass 2 reports 0 s for it
+    val single = Bench.totalLine(1.0, "/sf/x", 1, results, 0.4, 0.6,
+      flagged = false, passesSec = Seq(1.0, 0.0))
+    assert(single.contains(""""passes_sec":[1.0000,0.0000]"""), single)
+    assert(line.count(_ == '{') == line.count(_ == '}'))
   }
 
   test("gitHead resolves this repo's HEAD to a 12-char sha") {

@@ -41,6 +41,12 @@ abstract class SparkTestBase extends AnyFunSuite {
     }
   }
 
+  /** Run `f` on the RocksDB state store, which `transformWithState`
+    * (every stateful stream operator in graft) requires. */
+  def withRocksDbState[T](f: => T): T =
+    withConfs("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
+
   /** Run `f` with janino fallback disabled: a whole-stage-codegen
     * compile error THROWS instead of silently dropping to interpreted
     * execution (the plan string still shows the starred span on

@@ -31,8 +31,7 @@ class StreamConcurrencySpec extends SparkTestBase {
 
   test("streamed current/peak across batches match the batch sweep line") {
     implicit val sqlCtx = spark.sqlContext
-    withConfs("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+    withRocksDbState {
       val input = MemoryStream[Delta]
       val q = StreamConcurrency.peaks(input.toDS()).writeStream
         .format("memory").queryName("conc_out")
@@ -61,8 +60,7 @@ class StreamConcurrencySpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     def iv(c: String, s0: Long, e0: Long) =
       Interval(c, new java.sql.Timestamp(s0 * 1000L), s0, e0)
-    withConfs("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+    withRocksDbState {
       val input = MemoryStream[Interval]
       val q = StreamConcurrency.peaksFromIntervals(input.toDS(),
           watermarkDelay = "2 minutes")
@@ -94,8 +92,7 @@ class StreamConcurrencySpec extends SparkTestBase {
 
   test("half-open ends-before-starts: back-to-back sessions never double-count") {
     implicit val sqlCtx = spark.sqlContext
-    withConfs("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+    withRocksDbState {
       val input = MemoryStream[Delta]
       val q = StreamConcurrency.peaks(input.toDS()).writeStream
         .format("memory").queryName("conc_b2b")

@@ -35,8 +35,7 @@ class StreamGeofenceSpec extends SparkTestBase {
 
   test("streamed enter/exit events across batches match hand-trace and batch twin") {
     implicit val sqlCtx = spark.sqlContext
-    withConfs("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+    withRocksDbState {
       val input = MemoryStream[Ping]
       val q = StreamGeofence.fenceEvents(
           input.toDS(), fences, radiusKm = 10.0, cellDeg = 1.0, maxAbsLat = 10.0)

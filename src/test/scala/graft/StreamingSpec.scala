@@ -39,106 +39,87 @@ class StreamingSpec extends SparkTestBase {
     } finally query.stop()
   }
 
-  test("stream sessionize matches batch sessionize on the same events") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val events = Seq(
-      Exposure.at("k1", 1000L, 1100L, 200L),
-      Exposure.at("k1", 1250L, 1350L, 100L),
-      Exposure.at("k1", 5000L, 5100L, 300L),
-      Exposure.at("k2", 1000L, 1080L, 400L),
-      // overlapping shape: a long early event must NOT keep later
-      // events mergeable (gap is from the PREVIOUS event's end — the
-      // batch LAG rule — not the running max end). Timestamps sit well
-      // above 0: epoch-adjacent event times trip Spark's stateful-op
-      // late-row boundary when the initial watermark is 0.
-      Exposure.at("k3", 100000L, 102000L, 200L),
-      Exposure.at("k3", 100010L, 100020L, 50L),
-      Exposure.at("k3", 100400L, 100500L, 300L))
-    val input = MemoryStream[Exposure]
-    val q = StreamSessionize.sessions(input.toDS()).writeStream
-      .format("memory").queryName("parity_out").outputMode(OutputMode.Append).start()
-    try {
-      input.addData(events: _*)
-      q.processAllAvailable()
-      input.addData(Exposure.at("zz", 999999L, 999999L, 1L)) // push watermark
-      q.processAllAvailable()
-      val streamed = spark.table("parity_out")
-        .as[StreamSessionize.ClosedSession].collect()
-        .filter(_.key != "zz")
-        .map(s => (s.key, s.sessionStart, s.sessionEnd, s.totalDuration)).toSet
-      val batch = graft.operators.Sessionize.sessions(
-        events.toDF(), keys = Seq("key"),
-        startCol = "startTs", endCol = "endTs", durationCol = "duration",
-        gapSeconds = 300L, minSessionSeconds = 180L, tieBreakers = Seq("endTs"))
-        .select("key", "session_start_ts", "session_end_ts", "total_duration")
-        .as[(String, Long, Long, Long)].collect().toSet
-      assert(streamed == batch, s"stream $streamed vs batch $batch")
-    } finally q.stop()
-  }
+  private val parityEvents = Seq(
+    Exposure.at("k1", 1000L, 1100L, 200L),
+    Exposure.at("k1", 1250L, 1350L, 100L),   // joins (gap 150)
+    Exposure.at("k1", 5000L, 5100L, 300L),   // breaks (gap 3650)
+    Exposure.at("k2", 1000L, 1080L, 400L),
+    // overlapping shape: a long early event must NOT keep later
+    // events mergeable (gap is from the PREVIOUS event's end — the
+    // batch LAG rule — not the running max end). Timestamps sit well
+    // above 0: epoch-adjacent event times trip Spark's stateful-op
+    // late-row boundary when the initial watermark is 0.
+    Exposure.at("k3", 100000L, 102000L, 200L),
+    Exposure.at("k3", 100010L, 100020L, 50L),
+    Exposure.at("k3", 100400L, 100500L, 300L))
 
-  test("transformWithState sessionizer matches flatMapGroupsWithState output") {
-    implicit val sqlCtx = spark.sqlContext
+  private def batchSessions(events: Seq[Exposure]): Set[(String, Long, Long, Long)] = {
     import spark.implicits._
-    // transformWithState requires the RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val events = Seq(
-        Exposure.at("k1", 1000L, 1100L, 200L),
-        Exposure.at("k1", 1250L, 1350L, 100L),   // joins (gap 150)
-        Exposure.at("k1", 5000L, 5100L, 300L),   // breaks (gap 3650)
-        Exposure.at("k2", 1000L, 1080L, 400L),
-        Exposure.at("k3", 100000L, 102000L, 200L),
-        Exposure.at("k3", 100010L, 100020L, 50L),
-        Exposure.at("k3", 100400L, 100500L, 300L))
-      val input = MemoryStream[Exposure]
-      val q = graft.streaming.StreamSessionizeV2.sessions(input.toDS()).writeStream
-        .format("memory").queryName("tws_out").outputMode(OutputMode.Append).start()
-      try {
-        input.addData(events: _*)
-        q.processAllAvailable()
-        input.addData(Exposure.at("zz", 999999L, 999999L, 1L)) // push watermark
-        q.processAllAvailable()
-        input.addData(Exposure.at("zz", 9999999L, 9999999L, 1L)) // flush zz itself
-        q.processAllAvailable()
-        val v2 = spark.table("tws_out")
-          .as[StreamSessionize.ClosedSession].collect()
-          .filter(_.key != "zz")
-          .map(s => (s.key, s.sessionStart, s.sessionEnd, s.totalDuration)).toSet
-        val batch = graft.operators.Sessionize.sessions(
-          events.toDF(), keys = Seq("key"),
-          startCol = "startTs", endCol = "endTs", durationCol = "duration",
-          gapSeconds = 300L, minSessionSeconds = 180L, tieBreakers = Seq("endTs"))
-          .select("key", "session_start_ts", "session_end_ts", "total_duration")
-          .as[(String, Long, Long, Long)].collect().toSet
-        assert(v2 == batch, s"transformWithState $v2 vs batch $batch")
-      } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("batch execution flushes the trailing open session of every key") {
-    import spark.implicits._
-    // In batch flatMapGroupsWithState timeouts never fire — without the
-    // final flush the open session of each key would vanish.
-    val events = Seq(
-      Exposure.at("k1", 1000L, 1100L, 200L),
-      Exposure.at("k1", 1250L, 1350L, 100L),  // same session (gap 150)
-      Exposure.at("k1", 5000L, 5100L, 300L),  // trailing open session
-      Exposure.at("k2", 1000L, 1080L, 400L))  // single-event trailing session
-    val got = StreamSessionize.sessions(events.toDS())
-      .collect()
-      .map(s => (s.key, s.sessionStart, s.sessionEnd, s.totalDuration)).toSet
-    val batch = graft.operators.Sessionize.sessions(
+    graft.operators.Sessionize.sessions(
       events.toDF(), keys = Seq("key"),
       startCol = "startTs", endCol = "endTs", durationCol = "duration",
       gapSeconds = 300L, minSessionSeconds = 180L, tieBreakers = Seq("endTs"))
       .select("key", "session_start_ts", "session_end_ts", "total_duration")
       .as[(String, Long, Long, Long)].collect().toSet
-    assert(got == batch, s"batch-mode $got vs Sessionize $batch")
+  }
+
+  /** Streams `batches` through the sessionizer, then two sentinel
+    * batches (the first moves the watermark past every deadline, the
+    * second times the open sessions out under it); the closed sessions. */
+  private def streamSessions(name: String, batches: Seq[Exposure]*): Set[(String, Long, Long, Long)] = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Exposure]
+    val q = StreamSessionize.sessions(input.toDS()).writeStream
+      .format("memory").queryName(name).outputMode(OutputMode.Append).start()
+    try {
+      batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      Seq(999999L, 9999999L).foreach { t =>
+        input.addData(Exposure.at("zz", t, t, 1L)); q.processAllAvailable()
+      }
+      spark.table(name).as[StreamSessionize.ClosedSession].collect()
+        .filter(_.key != "zz")
+        .map(s => (s.key, s.sessionStart, s.sessionEnd, s.totalDuration)).toSet
+    } finally q.stop()
+  }
+
+  test("stream sessionize matches batch sessionize on the same events") {
+    val streamed = streamSessions("parity_out", parityEvents)
+    val batch = batchSessions(parityEvents)
+    assert(streamed == batch, s"stream $streamed vs batch $batch")
+  }
+
+  test("stream sessionize matches batch sessionize when sessions span micro-batches") {
+    // cuts in global start order (no row behind the watermark) inside
+    // k1's first session and inside k3's overlapping one: each open
+    // session must carry across the batch boundary in state
+    val (b1, rest) = parityEvents.sortBy(e => (e.startTs, e.endTs)).splitAt(2)
+    val (b2, b3) = rest.splitAt(3)
+    assert(b1.map(_.key).toSet == Set("k1", "k2") && b2.last.key == "k3" && b3.map(_.key) == Seq("k3", "k3"))
+    val streamed = streamSessions("split_out", b1, b2, b3)
+    val batch = batchSessions(parityEvents)
+    assert(streamed == batch, s"stream $streamed vs batch $batch")
+  }
+
+  test("the watermark flushes the trailing open session of every key") {
+    // no later event closes these sessions: only their timeouts can
+    val events = Seq(
+      Exposure.at("k1", 1000L, 1100L, 200L),
+      Exposure.at("k1", 1250L, 1350L, 100L),  // same session (gap 150)
+      Exposure.at("k1", 5000L, 5100L, 300L),  // trailing open session
+      Exposure.at("k2", 1000L, 1080L, 400L))  // single-event trailing session
+    val got = streamSessions("trailing_out", events)
+    val batch = batchSessions(events)
+    assert(got == batch, s"streamed $got vs Sessionize $batch")
     assert(got.contains(("k1", 5000L, 5100L, 300L)), "trailing session must flush")
     assert(got.contains(("k2", 1000L, 1080L, 400L)), "trailing session must flush")
+  }
+
+  test("a batch Dataset is refused with a message naming Sessionize.sessions") {
+    import spark.implicits._
+    val err = intercept[IllegalArgumentException](
+      StreamSessionize.sessions(parityEvents.toDS()))
+    assert(err.getMessage.contains("Sessionize.sessions"), err.getMessage)
   }
 
   test("streaming dedup drops re-delivered rows within the watermark") {
@@ -237,9 +218,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     import graft.streaming.StreamChangeEvents
     import graft.streaming.StreamChangeEvents.{ChangeCounts, ChangeEvent}
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       // real events, including a null-type first row per the LAG
       // NULL-safe-DISTINCT edge (user 1's first event type is null)
       val events = Seq(
@@ -282,8 +261,7 @@ class StreamingSpec extends SparkTestBase {
         assert(streamed.exists { case (u, sw, _, _) => u == 2L && sw == 2L },
           "view->null->null must count exactly one switch at the null boundary")
       } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("StreamEwma: recursive smoothing across micro-batches equals the serial fold") {
@@ -291,9 +269,7 @@ class StreamingSpec extends SparkTestBase {
     import graft.streaming.StreamEwma.{Obs, Smoothed}
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val alpha = 0.3
       val events = Seq(
         Obs(1L, 10L, 1L, 10.0), Obs(1L, 20L, 2L, 20.0),
@@ -329,8 +305,7 @@ class StreamingSpec extends SparkTestBase {
         val expectThird = alpha * 0.0 + (1 - alpha) * (alpha * 20.0 + (1 - alpha) * 10.0)
         assert(math.abs(third - expectThird) < 1e-12)
       } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("streaming binge runs match the batch C113 row across a mid-run micro-batch split") {
@@ -379,8 +354,7 @@ class StreamingSpec extends SparkTestBase {
       b2.exists(e => e.smbaId == big._1 && e.title == big._2),
       "the chosen run must actually straddle the split")
     val maxEnd = events.map(_.endTs).max
-    withConfs("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+    withRocksDbState {
       val input = MemoryStream[BingeExposure]
       val q = StreamBinge.runs(input.toDS(), gapSeconds = testGap).writeStream
         .format("memory").queryName("binge_out")
