@@ -694,7 +694,9 @@ GROUP BY c_mktsegment"""))
     "q_semi_anti",
     (s, dir) => {
       val customer = t(s, dir, "customer")
-      val nation = broadcast(t(s, dir, "nation"))
+      // nation is the preserved side of both left joins, so Spark cannot
+      // build it; the per-nation counts on the right are what it broadcasts
+      val nation = t(s, dir, "nation")
       val orderKeys = t(s, dir, "orders").select("o_custkey")
       val withO = customer.join(orderKeys, col("c_custkey") === col("o_custkey"), "left_semi")
         .groupBy("c_nationkey").agg(count(lit(1)).as("with_orders"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Geo
@@ -18,8 +19,9 @@ import graft.sources.ViewingData
   *
   * Scale shapes: distance scoring and geohash encoding are pure
   * scan-speed projections (zero shuffle before the final small agg);
-  * the radius join is `GeoJoin.radiusJoin` — grid-cell equi-join with
-  * a ×9 replicated broadcast dim side, never a cross join (the
+  * the radius join is `GeoJoin.radiusJoin` — an equi-join on a
+  * latitude-banded grid sized from the radius, with the dim side
+  * replicated to ≤9 cells and broadcast, never a cross join (the
   * RangeJoin argument, in two dimensions).
   */
 object QueriesGeo {
@@ -28,6 +30,18 @@ object QueriesGeo {
   private val custLon = Geo.synthLonSql("c_custkey", 73)
   private val suppLat = Geo.synthLatSql("s_suppkey", 91)
   private val suppLon = Geo.synthLonSql("s_suppkey", 57)
+
+  /** A table's points at their synthetic coordinates: customers as
+    * (c_custkey, clat, clon), suppliers as (s_suppkey, slat, slon). */
+  private def points(s: SparkSession, dir: String, table: String): DataFrame = {
+    val (key, lat, lon) = table match {
+      case "customer" => ("c_custkey", custLat, custLon)
+      case "supplier" => ("s_suppkey", suppLat, suppLon)
+    }
+    val p = key.take(1)
+    ViewingData.table(s, dir, table)
+      .select(col(key), expr(lat).as(s"${p}lat"), expr(lon).as(s"${p}lon"))
+  }
 
   /** Distance-band report: every customer's great-circle distance to
     * one anchor point, folded into 200 km bands — the "audience
@@ -56,26 +70,19 @@ FROM (SELECT ${Geo.haversineSql(custLat, custLon, "0.0", "0.0")} AS dist_km
       FROM customer) d
 GROUP BY 1"""))
 
-  /** Radius join: (customer, supplier) pairs within 60 km, via the
-    * grid-bucketed `GeoJoin.radiusJoin` (|lat| ≤ 10 in the synthetic
-    * domain, so a 1° cell step covers the radius everywhere — the
-    * operator `require`s exactly that contract). The DuckDB oracle is
-    * the BRUTE-FORCE cross join + filter, so the hash match is also
-    * the bucketing-completeness proof on this data (GeoSpec proves it
-    * adversarially, including antimeridian wrap, at the operator
-    * level). */
+  /** Radius join: (customer, supplier) pairs within 60 km, via
+    * `GeoJoin.radiusJoin` (a banded grid sized from the radius alone;
+    * at the synthetic domain's |lat| ≤ 10 its cells are 1° × 0.703°).
+    * The DuckDB oracle is the BRUTE-FORCE cross join + filter, so the
+    * hash match is also the bucketing-completeness proof on this data
+    * (GeoSpec proves it adversarially, including antimeridian wrap,
+    * high latitudes and the pole cap, at the operator level). */
   private val geoRadiusJoin = Q(
     "q_geo_radius_join",
     (s, dir) => {
-      val cust = ViewingData.table(s, dir, "customer")
-        .select(col("c_custkey"),
-          expr(custLat).as("clat"), expr(custLon).as("clon"))
-      val supp = ViewingData.table(s, dir, "supplier")
-        .select(col("s_suppkey"),
-          expr(suppLat).as("slat"), expr(suppLon).as("slon"))
-      GeoJoin.radiusJoin(
-          cust, "clat", "clon", supp, "slat", "slon",
-          radiusKm = 60.0, cellDeg = 1.0, maxAbsLat = 10.0)
+      val cust = points(s, dir, "customer")
+      val supp = points(s, dir, "supplier")
+      GeoJoin.radiusJoin(cust, "clat", "clon", supp, "slat", "slon", radiusKm = 60.0)
         .select(col("c_custkey"), col("s_suppkey"),
           round(col("dist_km"), 4).as("dist_km"))
     },
@@ -140,15 +147,10 @@ GROUP BY 1"""
     "q_geo_nearest",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val cust = ViewingData.table(s, dir, "customer")
-        .select(col("c_custkey"),
-          expr(custLat).as("clat"), expr(custLon).as("clon"))
-      val supp = ViewingData.table(s, dir, "supplier")
-        .select(col("s_suppkey"),
-          expr(suppLat).as("slat"), expr(suppLon).as("slon"))
-      val pairs = GeoJoin.radiusJoin(
-          cust, "clat", "clon", supp, "slat", "slon",
-          radiusKm = 60.0, cellDeg = 1.0, maxAbsLat = 10.0)
+      val cust = points(s, dir, "customer")
+      val supp = points(s, dir, "supplier")
+      val pairs = GeoJoin.radiusJoin(cust, "clat", "clon", supp, "slat", "slon",
+          radiusKm = 60.0)
         .withColumn("dist_km", round(col("dist_km"), 4))
       val w = Window.partitionBy("c_custkey")
         .orderBy(col("dist_km").asc, col("s_suppkey").asc)
@@ -191,18 +193,15 @@ SELECT c_custkey, s_suppkey, dist_km FROM r WHERE rn = 1"""))
   private val geoDbscan = Q(
     "q_geo_dbscan",
     (s, dir) => {
-      val pts = ViewingData.table(s, dir, "customer")
-        .select(col("c_custkey").as("id"),
-          expr(custLat).as("lat"), expr(custLon).as("lon"))
+      val pts = points(s, dir, "customer").toDF("id", "lat", "lon")
       val a = pts.select(col("id").as("a_id"),
         col("lat").as("alat"), col("lon").as("alon"))
       val b = pts.select(col("id").as("b_id"),
         col("lat").as("blat"), col("lon").as("blon"))
       // self join: BOTH sides are the fact-sized point set — no forced
-      // broadcast of the ×9 replica (AQE still picks one when it fits)
+      // broadcast of the replicated side (AQE still picks one when it fits)
       val pairs = Barrier.materialize(GeoJoin.radiusJoin(a, "alat", "alon", b, "blat", "blon",
-          radiusKm = 60.0, cellDeg = 1.0, maxAbsLat = 10.0,
-          broadcastRight = false)
+          radiusKm = 60.0, broadcastRight = false)
         .filter(col("a_id") =!= col("b_id"))
         .select("a_id", "b_id"))._1
       val core = pairs.groupBy("a_id").agg((count(lit(1)) + 1).as("n"))
@@ -359,11 +358,8 @@ FROM tripped GROUP BY 1, 2"""
           expr(pingLat).as("lat"), expr(pingLon).as("lon"))
         .withColumnRenamed("user_id", "userId")
         .withColumnRenamed("event_id", "pingId")
-      val fences = ViewingData.table(s, dir, "supplier")
-        .select(col("s_suppkey").as("fenceId"),
-          expr(suppLat).as("flat"), expr(suppLon).as("flon"))
-      graft.streaming.StreamGeofence.fenceEventsBatch(
-        pings, fences, radiusKm = 60.0, cellDeg = 1.0, maxAbsLat = 10.0)
+      val fences = points(s, dir, "supplier").toDF("fenceId", "flat", "flon")
+      graft.streaming.StreamGeofence.fenceEventsBatch(pings, fences, radiusKm = 60.0)
     },
     Some(s"""WITH pings AS (
   SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
@@ -410,12 +406,8 @@ SELECT user_id, ts_sec, CAST(fence_id AS BIGINT) AS fence_id, event FROM exits""
   private val geoKnn = Q(
     "q_geo_knn",
     (s, dir) => {
-      val cust = ViewingData.table(s, dir, "customer")
-        .select(col("c_custkey"),
-          expr(custLat).as("clat"), expr(custLon).as("clon"))
-      val supp = ViewingData.table(s, dir, "supplier")
-        .select(col("s_suppkey"),
-          expr(suppLat).as("slat"), expr(suppLon).as("slon"))
+      val cust = points(s, dir, "customer")
+      val supp = points(s, dir, "supplier")
       GeoJoin.knn(cust, "clat", "clon", supp, "slat", "slon",
           rightId = "s_suppkey", k = 2, r0 = 50.0)
         .select(col("c_custkey"), col("s_suppkey"), col("dist_km"), col("rank"))

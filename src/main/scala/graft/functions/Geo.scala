@@ -32,10 +32,9 @@ object Geo {
   /** Deterministic synthetic coordinates for a key column — spreads
     * entities over lat ∈ [-10, 10), lon ∈ [-20, 20) (a ~2200 ×
     * 4360 km region; |lat| ≤ 10 keeps degree-of-longitude length
-    * within 1.5% of the equator's, which the radius-join cell
-    * contract below uses). Multipliers coprime to the moduli so the
-    * key space cycles the full grid. Same text runs in both engines:
-    * int64 `%` then exact double arithmetic. */
+    * within 1.5% of the equator's). Multipliers coprime to the
+    * moduli so the key space cycles the full grid. Same text runs in
+    * both engines: int64 `%` then exact double arithmetic. */
   def synthLatSql(key: String, mult: Int): String =
     s"(CAST((((${key}) * $mult) % 2000) AS DOUBLE) / 100.0 - 10.0)"
   def synthLonSql(key: String, mult: Int): String =

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
-import graft.functions.Geo
 import graft.operators.GeoJoin
 
 /** Streaming GEOFENCE enter/exit detection (H18): position pings
@@ -17,12 +16,13 @@ import graft.operators.GeoJoin
   *
   * Composition of two shapes the engine already proves separately:
   *
-  *  1. the grid-bucketed radius join (GeoJoin's cell keys, fence side
-  *     ×9-replicated and broadcast) as a STATELESS stream-static
-  *     join — per micro-batch it's the same equi-join plan as C98,
-  *     with one twist: LEFT OUTER, because an "exit" is only visible
-  *     on a ping that matches NO fence (an inner join would silently
-  *     swallow the evidence of leaving);
+  *  1. the banded-grid radius join (`GeoJoin.gridJoin`, sized from
+  *     the radius, fence side replicated to ≤9 cell keys and
+  *     broadcast) as a STATELESS stream-static join — per micro-batch
+  *     it's the same equi-join plan as C98, complete at every
+  *     latitude, with one twist: LEFT OUTER, because an "exit" is only
+  *     visible on a ping that matches NO fence (an inner join would
+  *     silently swallow the evidence of leaving);
   *  2. per-user `transformWithState` presence diffing (the H13
   *     change-counter discipline): state is the sorted fence-id set
   *     of the LAST ping; each ping's set is diffed against it —
@@ -80,28 +80,23 @@ object StreamGeofence {
     }
   }
 
+  /** Each ping with each fence it stands in, or once with a null
+    * `fenceId` when it stands in none — the left-outer grid join both
+    * forms run. */
+  private def fencePings(pings: DataFrame, fences: DataFrame, radiusKm: Double): DataFrame =
+    GeoJoin.gridJoin(pings, "lat", "lon", fences, "flat", "flon", radiusKm,
+        "left_outer", broadcastRight = true)
+      .select(col("userId"), col("tsSec"), col("pingId"), col("fenceId"))
+
   /** @param fences static (fenceId, flat, flon) dim table
     * @param pings  streaming Dataset of position pings */
   def fenceEvents(
       pings: Dataset[Ping],
       fences: DataFrame,
-      radiusKm: Double,
-      cellDeg: Double = 1.0,
-      maxAbsLat: Double = 90.0): Dataset[FenceEvent] = {
-    GeoJoin.requireContract(radiusKm, cellDeg, maxAbsLat)
-    val p = pings.toDF()
-      .withColumn("_cy", GeoJoin.cellY("lat", cellDeg))
-      .withColumn("_cx", GeoJoin.cellX("lon", cellDeg))
-    val f9 = broadcast(
-      GeoJoin.replicate9(fences, "flat", "flon", cellDeg, "_fcy", "_fcx"))
-    val joined = p.join(f9,
-        p("_cy") === f9("_fcy") && p("_cx") === f9("_fcx") &&
-          expr(Geo.haversineSql("lat", "lon", "flat", "flon")) <= radiusKm,
-        "left_outer")
-      .select(col("userId"), col("tsSec"), col("pingId"), col("fenceId"))
+      radiusKm: Double): Dataset[FenceEvent] = {
     implicit val outEnc = Encoders.product[FenceEvent]
     implicit val keyEnc = Encoders.scalaLong
-    joined.as[FencePing](Encoders.product[FencePing])
+    fencePings(pings.toDF(), fences, radiusKm).as[FencePing](Encoders.product[FencePing])
       .groupByKey(_.userId)
       .transformWithState(
         new GeofenceProcessor, TimeMode.None(), OutputMode.Update())
@@ -113,20 +108,9 @@ object StreamGeofence {
   def fenceEventsBatch(
       pings: DataFrame,
       fences: DataFrame,
-      radiusKm: Double,
-      cellDeg: Double = 1.0,
-      maxAbsLat: Double = 90.0): DataFrame = {
+      radiusKm: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GeoJoin.requireContract(radiusKm, cellDeg, maxAbsLat)
-    val p = pings
-      .withColumn("_cy", GeoJoin.cellY("lat", cellDeg))
-      .withColumn("_cx", GeoJoin.cellX("lon", cellDeg))
-    val f9 = broadcast(
-      GeoJoin.replicate9(fences, "flat", "flon", cellDeg, "_fcy", "_fcx"))
-    val sets = p.join(f9,
-        p("_cy") === f9("_fcy") && p("_cx") === f9("_fcx") &&
-          expr(Geo.haversineSql("lat", "lon", "flat", "flon")) <= radiusKm,
-        "left_outer")
+    val sets = fencePings(pings, fences, radiusKm)
       .groupBy("userId", "tsSec", "pingId")
       .agg(sort_array(collect_set(col("fenceId"))).as("now"))
     val w = Window.partitionBy("userId").orderBy("tsSec", "pingId")

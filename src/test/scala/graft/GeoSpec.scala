@@ -81,8 +81,7 @@ class GeoSpec extends SparkTestBase {
         expr(Geo.synthLatSql("s_suppkey", 91)).as("slat"),
         expr(Geo.synthLonSql("s_suppkey", 57)).as("slon"))
     val bucketed = GeoJoin.radiusJoin(
-        cust, "clat", "clon", supp, "slat", "slon",
-        radiusKm = 120.0, cellDeg = 2.0, maxAbsLat = 10.0)
+        cust, "clat", "clon", supp, "slat", "slon", radiusKm = 120.0)
       .select("c_custkey", "s_suppkey").as[(Long, Long)].collect().toSet
     val brute = cust.crossJoin(supp)
       .withColumn("d", expr(Geo.haversineSql("clat", "clon", "slat", "slon")))
@@ -96,9 +95,31 @@ class GeoSpec extends SparkTestBase {
     val l = Seq((1L, 0.5, 179.995), (2L, 0.0, 10.0)).toDF("lid", "llat", "llon")
     val r = Seq((10L, 0.5, -179.995), (20L, 50.0, 10.0)).toDF("rid", "rlat", "rlon")
     val pairs = GeoJoin.radiusJoin(l, "llat", "llon", r, "rlat", "rlon",
-        radiusKm = 50.0, cellDeg = 1.0, maxAbsLat = 60.0)
+        radiusKm = 50.0)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 10L))) // ~1.1 km apart, but 359.99 apart in raw lon
+  }
+
+  test("radiusJoin with only a radius equals brute force on global points") {
+    // high latitudes on both caps, pairs across the antimeridian, and
+    // a pair that meets only through the pole
+    val l = Seq(
+      (1L, 81.0, 10.0), (2L, -85.0, -120.0), (3L, 89.8, 0.0),
+      (4L, 0.2, 179.8), (5L, -83.5, 179.9), (6L, 45.0, 7.0))
+      .toDF("lid", "llat", "llon")
+    val r = Seq(
+      (10L, 81.3, 11.5), (20L, -85.2, -118.0), (30L, 89.8, 180.0),
+      (40L, 0.0, -179.9), (50L, -83.4, -179.6), (60L, 45.3, 7.2),
+      (70L, 87.0, 90.0), (80L, 60.0, 10.0))
+      .toDF("rid", "rlat", "rlon")
+    val joined = GeoJoin.radiusJoin(l, "llat", "llon", r, "rlat", "rlon", radiusKm = 60.0)
+      .select("lid", "rid").as[(Long, Long)].collect().toSet
+    val brute = l.crossJoin(r)
+      .filter(expr(Geo.haversineSql("llat", "llon", "rlat", "rlon")) <= 60.0)
+      .select("lid", "rid").as[(Long, Long)].collect().toSet
+    assert(brute.contains((3L, 30L)), "the through-the-pole pair must be in range")
+    assert(brute.contains((4L, 40L)) && brute.contains((5L, 50L)))
+    assert(joined == brute)
   }
 
   test("radiusJoin never meets a pair twice (replication is one-cell)") {
@@ -107,31 +128,20 @@ class GeoSpec extends SparkTestBase {
     val l = Seq((1L, 0.01, 0.01)).toDF("lid", "llat", "llon")
     val r = Seq((10L, 0.02, 0.02)).toDF("rid", "rlat", "rlon")
     val rows = GeoJoin.radiusJoin(l, "llat", "llon", r, "rlat", "rlon",
-      radiusKm = 60.0, cellDeg = 1.0, maxAbsLat = 10.0).collect()
+      radiusKm = 60.0).collect()
     assert(rows.length == 1)
   }
 
-  test("radiusJoin contract: oversize radius for the cell is rejected") {
-    val df = Seq((1L, 0.0, 0.0)).toDF("id", "la", "lo")
-    val e = intercept[IllegalArgumentException] {
-      GeoJoin.radiusJoin(df, "la", "lo",
-        df.toDF("id2", "la2", "lo2"), "la2", "lo2",
-        radiusKm = 200.0, cellDeg = 1.0, maxAbsLat = 10.0)
-    }
-    assert(e.getMessage.contains("exceeds"))
-  }
-
   test("banded radiusJoin equals brute force on GLOBAL points incl. high latitudes") {
-    // deterministic points over the whole globe — the domain the
-    // fixed-width grid's contract excludes
+    // deterministic points over the whole globe, poles included
     val pts = (0 until 200).map { i =>
       (i.toLong, (i * 37 % 1800) / 10.0 - 90.0, (i * 73 % 3600) / 10.0 - 180.0)
     }
     val l = pts.toDF("lid", "llat", "llon")
     val r = pts.map { case (i, la, lo) => (i + 1000, la, lo) }
       .toDF("rid", "rlat", "rlon")
-    val banded = GeoJoin.radiusJoinBanded(l, "llat", "llon", r, "rlat", "rlon",
-        radiusKm = 100.0, cellLat = 1.0)
+    val banded = GeoJoin.radiusJoin(l, "llat", "llon", r, "rlat", "rlon",
+        radiusKm = 100.0)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     val brute = l.crossJoin(r)
       .withColumn("d", expr(Geo.haversineSql("llat", "llon", "rlat", "rlon")))
@@ -148,18 +158,18 @@ class GeoSpec extends SparkTestBase {
     val l = pts.toDF("lid", "llat", "llon")
     val r = pts.map { case (i, la, lo) => (i + 5000, la, lo) }
       .toDF("rid", "rlat", "rlon")
-    val cfgs = Seq(
-      (111.1949, 1.0),  // a hair under the exact latitude-step bound
-      (55.0, 0.5), (200.0, 2.0), (500.0, 5.0))
-    cfgs.foreach { case (rad, cell) =>
-      val banded = GeoJoin.radiusJoinBanded(l, "llat", "llon", r, "rlat", "rlon",
-          radiusKm = rad, cellLat = cell)
+    // each radius sizes its own band height: 111.1949 km sits a hair
+    // under the 1° band's latitude-step bound; 55, 200 and 500 km pick
+    // 0.5°, 2° and 5° bands
+    Seq(111.1949, 55.0, 200.0, 500.0).foreach { rad =>
+      val banded = GeoJoin.radiusJoin(l, "llat", "llon", r, "rlat", "rlon",
+          radiusKm = rad)
         .select("lid", "rid").as[(Long, Long)].collect().toSet
       val brute = l.crossJoin(r)
         .withColumn("d", expr(Geo.haversineSql("llat", "llon", "rlat", "rlon")))
         .filter(col("d") <= rad)
         .select("lid", "rid").as[(Long, Long)].collect().toSet
-      assert(banded == brute, s"config (r=$rad, cell=$cell)")
+      assert(banded == brute, s"radius $rad km")
     }
   }
 
@@ -168,8 +178,8 @@ class GeoSpec extends SparkTestBase {
     // pole — lon cells are meaningless there; the cap cell catches it
     val l = Seq((1L, 89.5, 0.0)).toDF("lid", "llat", "llon")
     val r = Seq((10L, 89.5, 180.0), (20L, 89.5, -90.0)).toDF("rid", "rlat", "rlon")
-    val pairs = GeoJoin.radiusJoinBanded(l, "llat", "llon", r, "rlat", "rlon",
-        radiusKm = 120.0, cellLat = 2.0)
+    val pairs = GeoJoin.radiusJoin(l, "llat", "llon", r, "rlat", "rlon",
+        radiusKm = 120.0)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 10L), (1L, 20L)))
   }
@@ -177,33 +187,15 @@ class GeoSpec extends SparkTestBase {
   test("banded radiusJoin never duplicates a pair (9 keys distinct)") {
     val l = Seq((1L, 0.01, 0.01)).toDF("lid", "llat", "llon")
     val r = Seq((10L, 0.02, 0.02)).toDF("rid", "rlat", "rlon")
-    val rows = GeoJoin.radiusJoinBanded(l, "llat", "llon", r, "rlat", "rlon",
-      radiusKm = 60.0, cellLat = 1.0).collect()
+    val rows = GeoJoin.radiusJoin(l, "llat", "llon", r, "rlat", "rlon",
+      radiusKm = 60.0).collect()
     assert(rows.length == 1)
     // and in a polar cap band, where the 3 lon keys collapse to one
     val lp = Seq((2L, 89.1, 10.0)).toDF("lid", "llat", "llon")
     val rp = Seq((30L, 89.15, 11.0)).toDF("rid", "rlat", "rlon")
-    val rows2 = GeoJoin.radiusJoinBanded(lp, "llat", "llon", rp, "rlat", "rlon",
-      radiusKm = 60.0, cellLat = 1.0).collect()
+    val rows2 = GeoJoin.radiusJoin(lp, "llat", "llon", rp, "rlat", "rlon",
+      radiusKm = 60.0).collect()
     assert(rows2.length == 1)
-  }
-
-  test("banded grid matches the fixed grid away from the poles") {
-    val cust = ViewingDataHelper.table(spark, Sf, "customer")
-      .select(col("c_custkey"),
-        expr(Geo.synthLatSql("c_custkey", 37)).as("clat"),
-        expr(Geo.synthLonSql("c_custkey", 73)).as("clon"))
-    val supp = ViewingDataHelper.table(spark, Sf, "supplier")
-      .select(col("s_suppkey"),
-        expr(Geo.synthLatSql("s_suppkey", 91)).as("slat"),
-        expr(Geo.synthLonSql("s_suppkey", 57)).as("slon"))
-    val fixed = GeoJoin.radiusJoin(cust, "clat", "clon", supp, "slat", "slon",
-        radiusKm = 60.0, cellDeg = 1.0, maxAbsLat = 10.0)
-      .select("c_custkey", "s_suppkey").as[(Long, Long)].collect().toSet
-    val banded = GeoJoin.radiusJoinBanded(cust, "clat", "clon",
-        supp, "slat", "slon", radiusKm = 60.0, cellLat = 1.0)
-      .select("c_custkey", "s_suppkey").as[(Long, Long)].collect().toSet
-    assert(banded == fixed)
   }
 
   test("expanding-ring knn equals brute-force global KNN (k=1 and k=3)") {
@@ -295,17 +287,6 @@ class GeoSpec extends SparkTestBase {
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("BroadcastNestedLoopJoin"))
-  }
-
-  test("nLonCells accepts FP-inexact divisors and rounds the modulus") {
-    // 360/0.1 is 3599.9999... in binary — an exact == check would
-    // reject a perfectly valid 0.1° grid.
-    assert(graft.operators.GeoJoin.nLonCells(0.1) == 3600L)
-    assert(graft.operators.GeoJoin.nLonCells(1.0) == 360L)
-    assert(graft.operators.GeoJoin.nLonCells(2.5) == 144L)
-    intercept[IllegalArgumentException] {
-      graft.operators.GeoJoin.nLonCells(0.7) // 360/0.7 is not integral
-    }
   }
 }
 

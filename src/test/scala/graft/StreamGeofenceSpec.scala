@@ -38,7 +38,7 @@ class StreamGeofenceSpec extends SparkTestBase {
     withRocksDbState {
       val input = MemoryStream[Ping]
       val q = StreamGeofence.fenceEvents(
-          input.toDS(), fences, radiusKm = 10.0, cellDeg = 1.0, maxAbsLat = 10.0)
+          input.toDS(), fences, radiusKm = 10.0)
         .writeStream.format("memory").queryName("gf_out")
         .outputMode(OutputMode.Update()).start()
       try {
@@ -53,7 +53,7 @@ class StreamGeofenceSpec extends SparkTestBase {
     }
 
     val batch = StreamGeofence.fenceEventsBatch(
-        pings.toDF(), fences, radiusKm = 10.0, cellDeg = 1.0, maxAbsLat = 10.0)
+        pings.toDF(), fences, radiusKm = 10.0)
       .as[(Long, Long, Long, String)].collect().toSet
     assert(batch == expected)
   }
@@ -62,14 +62,48 @@ class StreamGeofenceSpec extends SparkTestBase {
     // inner-join shape would never emit the exit at t20
     val only = Seq(Ping(7L, 10L, 1L, 0.0, 0.0), Ping(7L, 20L, 2L, 5.0, 5.0))
     val batch = StreamGeofence.fenceEventsBatch(
-        only.toDF(), fences, radiusKm = 10.0, cellDeg = 1.0, maxAbsLat = 10.0)
+        only.toDF(), fences, radiusKm = 10.0)
       .as[(Long, Long, Long, String)].collect().toSet
     assert(batch == Set((7L, 10L, 1L, "enter"), (7L, 20L, 1L, "exit")))
   }
 
+  test("fenceEventsBatch with only a radius matches brute force on pings north of 60°") {
+    val farNorth = Seq(
+      (1L, 70.0, 20.0), (2L, 70.3, 21.0), (3L, 84.9, 179.8), (4L, 89.9, 0.0))
+      .toDF("fenceId", "flat", "flon")
+    // user 1 walks north through fences 1 and 2; user 2 circles the
+    // pole cap; user 3 crosses the antimeridian at 84.9°
+    val walks = (0 until 12).flatMap { i =>
+      Seq(
+        Ping(1L, i * 10L, i.toLong, 68.0 + i * 0.3, 19.5 + i * 0.15),
+        Ping(2L, i * 10L, 100L + i, 89.2 + (i % 3) * 0.3, i * 30.0 - 180.0),
+        Ping(3L, i * 10L, 200L + i, 84.9, 178.6 + i * 0.25 - (if (i > 5) 360.0 else 0.0)))
+    }
+    val got = StreamGeofence.fenceEventsBatch(walks.toDF(), farNorth, radiusKm = 60.0)
+      .as[(Long, Long, Long, String)].collect().toSet
+    // brute force: every (ping, fence) distance, then each user's
+    // fence set diffed ping to ping
+    val inside = walks.toDF().crossJoin(farNorth)
+      .filter(expr(graft.functions.Geo.haversineSql("lat", "lon", "flat", "flon")) <= 60.0)
+      .select("pingId", "fenceId").as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+    val brute = walks.groupBy(_.userId).toSeq.flatMap { case (u, ps) =>
+      ps.sortBy(p => (p.tsSec, p.pingId))
+        .foldLeft((Set.empty[Long], Seq.empty[(Long, Long, Long, String)])) {
+          case ((prev, out), p) =>
+            val now = inside.getOrElse(p.pingId, Set.empty[Long])
+            (now, out ++ (now -- prev).map(f => (u, p.tsSec, f, "enter")) ++
+              (prev -- now).map(f => (u, p.tsSec, f, "exit")))
+        }._2
+    }.toSet
+    assert(Set(1L, 2L, 3L).forall(u => brute.exists(_._1 == u)),
+      s"every walk should cross a fence: $brute")
+    assert(got == brute)
+  }
+
   test("plan: the per-batch join side is broadcast, never a cartesian") {
     val plan = StreamGeofence.fenceEventsBatch(
-        pings.toDF(), fences, radiusKm = 10.0, cellDeg = 1.0, maxAbsLat = 10.0)
+        pings.toDF(), fences, radiusKm = 10.0)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(1500))
     assert(!plan.contains("BroadcastNestedLoopJoin"))
